@@ -12,7 +12,9 @@ import org.apache.spark.sql.SparkSession
   *
   * Usage:
   *   runMain graft.BenchExtra time <reps> <q1,q2,...>   # min-of-reps secs
+  *   runMain graft.BenchExtra jobs <q1,q2,...>          # jobs/stages/tasks per query
   *   runMain graft.BenchExtra explain <suffix> <q1,...> # plans/r08/<q>_<suffix>.txt
+  *   runMain graft.BenchExtra mksf1 <srcDir> <dstDir>   # synthetic sf1 from sf0.1
   * Data dir from SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
   * cores from SPARK_GRAFT_CPUS (default 32) — the Bench session shape.
   */
@@ -97,29 +99,6 @@ object BenchExtra {
         }.reduce(_ unionByName _)
           .write.mode("overwrite").parquet(s"$dst/events.parquet")
         println(s"synthetic sf1 written to $dst")
-      case "ab" :: reps :: qs :: Nil =>
-        // same-window A/B of the graft.widen flag: this box's steal
-        // varies ±30% on a ~minute scale, so only back-to-back arms in
-        // one session are comparable (the CLAUDE.md min-of-3 rule,
-        // tightened to paired arms)
-        val names = qs.split(',').toSeq
-        try force(names.head) catch { case _: Throwable => }
-        val on = scala.collection.mutable.Map[String, List[Double]]().withDefaultValue(Nil)
-        val off = scala.collection.mutable.Map[String, List[Double]]().withDefaultValue(Nil)
-        for (_ <- 0 until reps.toInt; n <- names) {
-          System.setProperty("graft.widen", "true")
-          val a = try force(n) catch { case _: Throwable => Double.NaN }
-          System.setProperty("graft.widen", "false")
-          val b = try force(n) catch { case _: Throwable => Double.NaN }
-          on(n) = a :: on(n); off(n) = b :: off(n)
-        }
-        System.clearProperty("graft.widen")
-        for (n <- names) {
-          val a = on(n).filterNot(_.isNaN); val b = off(n).filterNot(_.isNaN)
-          println(f"$n%-28s widen=${a.min}%.3f base=${b.min}%.3f " +
-            f"ratio=${a.min / b.min}%.2f  (on=${on(n).reverse.map(t => f"$t%.2f").mkString(",")} " +
-            f"off=${off(n).reverse.map(t => f"$t%.2f").mkString(",")})")
-        }
       case "jobs" :: qs :: Nil =>
         // per-query job/stage/task counts — finds driver-loop overhead
         // (checkpoints, collects, convergence probes) that explains
@@ -161,7 +140,7 @@ object BenchExtra {
             System.err.println(s"[extra] $n explain: ${e.getMessage}") }
         }
       case other =>
-        System.err.println(s"usage: time <reps> <q,..> | explain <suffix> <q,..>; got $other")
+        System.err.println(s"usage: time <reps> <q,..> | jobs <q,..> | explain <suffix> <q,..> | mksf1 <src> <dst>; got $other")
         sys.exit(2)
     }
     spark.stop()

@@ -1291,7 +1291,7 @@ object HtmlUdfs {
               // yields zero spans, never a task failure (Changes:33)
               val extracted =
                 try Extractor.extractHtml(text.toString)
-                catch { case _: Throwable => Seq.empty[graft.html.Span] }
+                catch { case scala.util.control.NonFatal(_) => Seq.empty[graft.html.Span] }
               extracted.foreach { sp =>
                 out += InternalRow(UTF8String.fromString(sp.kind),
                   UTF8String.fromString(sp.text),

@@ -10,8 +10,9 @@ import org.apache.spark.sql.SparkSession
   *     gen <outPath> <numDocs> [parallelism]
   *
   * `extract` is checkpoint-resumable: completed batches (those with a
-  * _SUCCESS marker) are skipped on restart — rerunning after a kill
-  * resumes at the last committed batch (north_rule).
+  * _SUCCESS marker, written after the batch's lineage file) are skipped
+  * on restart — rerunning after a kill resumes at the last committed
+  * batch, and a batch killed before its marker runs again (north_rule).
   */
 object Main {
   def main(args: Array[String]): Unit = {

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.CollectionAccumulator
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 
 /** Extraction pipeline over the interleaved-document table.
   *
@@ -19,10 +20,13 @@ import java.nio.file.{Files, Paths}
   *    a 100 MB document never straggles a partition of small docs;
   *  - per-doc size cap: oversized docs are failed into lineage, not OOM;
   *  - per-partition lineage rows + live counters via accumulators;
-  *  - batch loop with atomic per-batch commits (_SUCCESS marker — the
-  *    parquet stand-in for Iceberg snapshot commits; on Iceberg swap the
-  *    writer, the resume logic reads committed batch ids the same way);
-  *  - resume: completed batches are skipped on restart.
+  *  - batch loop with atomic per-batch commits: the batch's data, then
+  *    its lineage file, then its _SUCCESS marker (the parquet stand-in
+  *    for an Iceberg snapshot commit that carries the lineage in its
+  *    summary; on Iceberg swap the writer, the resume logic reads
+  *    committed batch ids the same way);
+  *  - resume: completed batches are skipped on restart; a batch without
+  *    a marker runs again and replaces its data and its lineage file.
   */
 object Pipeline {
 
@@ -82,60 +86,68 @@ object Pipeline {
 
   /** The distributed kernel: Dataset[DocRow] → Dataset[DocRow] with
     * per-partition metrics pushed into `acc` (one MetricsRow per
-    * partition — north_rule lineage). Never throws per-doc: failures
-    * emit an empty-span row and count into docs_failed (robustness,
-    * Changes:33). */
+    * partition — north_rule lineage). Never throws per-doc on a non-fatal
+    * error: the doc emits an empty-span row and counts into docs_failed
+    * (robustness, Changes:33); a fatal error (OOM, StackOverflow,
+    * interrupt) fails the task. */
   def extractDataset(ds: Dataset[DocRow], cfg: Config, batchId: Int,
                      acc: CollectionAccumulator[MetricsRow]): Dataset[DocRow] = {
     import ds.sparkSession.implicits._
     val extractCfg = cfg.extract
     val maxBytes = cfg.maxDocBytes
     ds.mapPartitions { it =>
-      new Iterator[DocRow] {
-        private val pid = org.apache.spark.TaskContext.getPartitionId()
-        private val t0 = System.nanoTime()
-        private var docsIn = 0L
-        private var docsOk = 0L
-        private var docsFailed = 0L
-        private var spansOut = 0L
-        private var bytesIn = 0L
-        private var firstId: String = null
-        private var lastId: String = null
-        private var finalized = false
+      new KernelIterator(it, batchId, org.apache.spark.TaskContext.getPartitionId(),
+        maxBytes, DocKernel.extractDoc(_, extractCfg), acc.add)
+    }
+  }
 
-        def hasNext: Boolean = {
-          val h = it.hasNext
-          if (!h && !finalized) {
-            finalized = true
-            acc.add(MetricsRow(batchId, pid, docsIn, docsOk, docsFailed,
-              spansOut, bytesIn, (System.nanoTime() - t0) / 1000000L,
-              if (firstId == null) "" else firstId,
-              if (lastId == null) "" else lastId))
-          }
-          h
-        }
+  /** One partition of extractDataset: runs `kernel` per doc under the
+    * per-doc guard and emits the partition's MetricsRow once the input
+    * is exhausted. */
+  private[spark] final class KernelIterator(it: Iterator[DocRow], batchId: Int, pid: Int,
+      maxBytes: Long, kernel: DocRow => DocRow, emit: MetricsRow => Unit)
+      extends Iterator[DocRow] {
+    private val t0 = System.nanoTime()
+    private var docsIn = 0L
+    private var docsOk = 0L
+    private var docsFailed = 0L
+    private var spansOut = 0L
+    private var bytesIn = 0L
+    private var firstId: String = null
+    private var lastId: String = null
+    private var finalized = false
 
-        def next(): DocRow = {
-          val doc = it.next()
-          docsIn += 1
-          if (firstId == null) firstId = doc.doc_id
-          lastId = doc.doc_id
-          val sz = DocKernel.docBytes(doc)
-          bytesIn += sz
-          val out =
-            if (sz > maxBytes) { docsFailed += 1; DocRow(doc.doc_id, Seq.empty) }
-            else try {
-              val r = DocKernel.extractDoc(doc, extractCfg)
-              docsOk += 1
-              r
-            } catch { case _: Throwable =>
-              docsFailed += 1
-              DocRow(doc.doc_id, Seq.empty)
-            }
-          spansOut += out.spans.length
-          out
-        }
+    def hasNext: Boolean = {
+      val h = it.hasNext
+      if (!h && !finalized) {
+        finalized = true
+        emit(MetricsRow(batchId, pid, docsIn, docsOk, docsFailed,
+          spansOut, bytesIn, (System.nanoTime() - t0) / 1000000L,
+          if (firstId == null) "" else firstId,
+          if (lastId == null) "" else lastId))
       }
+      h
+    }
+
+    def next(): DocRow = {
+      val doc = it.next()
+      docsIn += 1
+      if (firstId == null) firstId = doc.doc_id
+      lastId = doc.doc_id
+      val sz = DocKernel.docBytes(doc)
+      bytesIn += sz
+      val out =
+        if (sz > maxBytes) { docsFailed += 1; DocRow(doc.doc_id, Seq.empty) }
+        else try {
+          val r = kernel(doc)
+          docsOk += 1
+          r
+        } catch { case NonFatal(_) =>
+          docsFailed += 1
+          DocRow(doc.doc_id, Seq.empty)
+        }
+      spansOut += out.spans.length
+      out
     }
   }
 
@@ -163,8 +175,9 @@ object Pipeline {
     (extractDataset(salted, cfg, batchId = 0, acc), acc)
   }
 
-  /** Where committed batches live. The parquet implementation commits a
-    * batch atomically via the _SUCCESS marker; an Iceberg implementation
+  /** Where committed batches live. A batch counts as committed once
+    * appendMetrics returns. The parquet implementation commits a batch
+    * via its _SUCCESS marker; an Iceberg implementation
     * maps writeBatch → a snapshot-producing append tagged with the batch
     * id in the snapshot summary, and isBatchCommitted → a summary lookup
     * — the resume loop is identical (SURVEY §4 checkpoint/resume row). */
@@ -174,15 +187,30 @@ object Pipeline {
     def appendMetrics(spark: SparkSession, rows: Seq[MetricsRow]): Unit
   }
 
+  /** Batch `b`'s data goes to `outDir/batch=b` with Spark's own _SUCCESS
+    * marker switched off. appendMetrics commits the batch writeBatch last
+    * wrote: it writes the batch's lineage file from the driver
+    * (Lineage.write, no Spark job), and only then the batch's _SUCCESS
+    * marker. A crash before the marker leaves the batch uncommitted, so a
+    * resume runs it again; its lineage file is replaced, not duplicated. */
   final class ParquetDirSink(outDir: String, metricsDir: String) extends BatchSink {
-    def isBatchCommitted(b: Int): Boolean =
-      Files.exists(Paths.get(s"$outDir/batch=$b/_SUCCESS"))
-    def writeBatch(b: Int, out: Dataset[DocRow]): Unit =
-      out.write.mode("overwrite").parquet(s"$outDir/batch=$b")
+    private var written = -1
+    private def marker(b: Int) = Paths.get(s"$outDir/batch=$b/_SUCCESS")
+    def isBatchCommitted(b: Int): Boolean = Files.exists(marker(b))
+    def writeBatch(b: Int, out: Dataset[DocRow]): Unit = {
+      written = -1
+      out.write.mode("overwrite")
+        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+        .parquet(s"$outDir/batch=$b")
+      written = b
+    }
     def appendMetrics(spark: SparkSession, rows: Seq[MetricsRow]): Unit = {
-      import spark.implicits._
-      if (rows.nonEmpty)
-        spark.createDataset(rows).write.mode("append").parquet(metricsDir)
+      val b = written
+      require(b >= 0, "appendMetrics commits the batch writeBatch wrote; none is pending")
+      require(rows.forall(_.batch_id == b), s"lineage rows of another batch than $b")
+      Lineage.write(spark, metricsDir, b, rows)
+      Files.write(marker(b), Array.emptyByteArray)
+      written = -1
     }
   }
 
@@ -208,9 +236,7 @@ object Pipeline {
         val salted = saltedRepartitionTyped(batchDf.as[DocRow](
           org.apache.spark.sql.Encoders.product[DocRow]), cfg)
         sink.writeBatch(b, extractDataset(salted, cfg, b, acc))
-        // commit metrics for this batch (append — lineage survives resume)
-        val rows = scala.jdk.CollectionConverters.ListHasAsScala(acc.value).asScala.toSeq
-        sink.appendMetrics(spark, rows)
+        sink.appendMetrics(spark, Lineage.rows(acc))
         acc.reset()
       }
     }

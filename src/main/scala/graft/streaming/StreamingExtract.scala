@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.spark.{DocRow, MetricsRow, Pipeline}
+import graft.spark.{DocRow, Lineage, MetricsRow, Pipeline}
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -93,18 +93,15 @@ object StreamingExtract {
     val writer = stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // same salted repartition + kernel as the batch pipeline;
-        // per-micro-batch metrics appended next to the output
+        // same salted repartition + kernel as the batch pipeline; the
+        // micro-batch's lineage file lands next to the output (a replayed
+        // micro-batch replaces its own file)
         val acc = new org.apache.spark.util.CollectionAccumulator[MetricsRow]
         batch.sparkSession.sparkContext.register(acc, s"graft.stream.$batchId")
         val salted = Pipeline.saltedRepartition(batch, cfg).as[DocRow]
         Pipeline.extractDataset(salted, cfg, batchId.toInt, acc)
           .write.mode("append").parquet(s"$outDir/data")
-        val rows = scala.jdk.CollectionConverters.ListHasAsScala(acc.value).asScala.toSeq
-        if (rows.nonEmpty)
-          batch.sparkSession.createDataset(rows)
-            .write.mode("append").parquet(s"$outDir/metrics")
-        ()
+        Lineage.write(batch.sparkSession, s"$outDir/metrics", batchId, Lineage.rows(acc))
       }
     (if (availableNowOnly) writer.trigger(Trigger.AvailableNow()) else writer)
       .start()

@@ -1,6 +1,6 @@
 package graft.spark
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -121,9 +121,66 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val resumed = Pipeline.readOutput(spark, outDir).as[DocRow].collect()
       .map(d => d.doc_id -> d.spans).toMap
     assert(resumed == full)
-    // metrics accumulated across both runs cover every batch at least once
+    // the resumed batches replaced their lineage files: every batch has
+    // one row set and the lineage counts every doc exactly once
     val m = spark.read.parquet(metricsDir)
     assert(m.select("batch_id").distinct().count() == 4)
+    assert(m.as[MetricsRow].collect().map(_.docs_in).sum == 200)
+  }
+
+  test("batched run: a batch with no docs still commits") {
+    import spark.implicits._
+    val base = "/tmp/graft-test/empty-batch"
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
+    val cfg = Pipeline.Config(partitions = 2, giantBuckets = 1, numBatches = 8)
+    val input = CorpusGen.inputDs(spark, 3, parallelism = 1).toDF()
+    Pipeline.runBatched(spark, input, s"$base/out", s"$base/metrics", cfg)
+    val sink = new Pipeline.ParquetDirSink(s"$base/out", s"$base/metrics")
+    assert((0 until 8).forall(sink.isBatchCommitted))
+    assert(spark.read.parquet(s"$base/metrics").as[MetricsRow].collect().map(_.docs_in).sum == 3)
+  }
+
+  test("batched run: a crash between a batch's lineage file and its marker re-runs the batch") {
+    import spark.implicits._
+    val base = "/tmp/graft-test/crash"
+    val outDir = s"$base/out"
+    val metricsDir = s"$base/metrics"
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
+    val cfg = Pipeline.Config(partitions = 4, giantBuckets = 1, numBatches = 4)
+    val input = CorpusGen.inputDs(spark, 200, parallelism = 4).toDF()
+    val written = scala.collection.mutable.ArrayBuffer.empty[Int]
+    var crashes = 1
+    // ParquetDirSink, except that batch 2's first commit dies after its
+    // lineage file is written and before its marker
+    val sink = new Pipeline.BatchSink {
+      private val inner = new Pipeline.ParquetDirSink(outDir, metricsDir)
+      private var batch = -1
+      def isBatchCommitted(b: Int): Boolean = inner.isBatchCommitted(b)
+      def writeBatch(b: Int, out: Dataset[DocRow]): Unit = {
+        batch = b
+        written += b
+        inner.writeBatch(b, out)
+      }
+      def appendMetrics(s: SparkSession, rows: Seq[MetricsRow]): Unit =
+        if (batch == 2 && crashes > 0) {
+          crashes -= 1
+          Lineage.write(s, metricsDir, batch, rows)
+          throw new IllegalStateException("planted crash before the commit marker")
+        } else inner.appendMetrics(s, rows)
+    }
+    intercept[IllegalStateException](Pipeline.runBatched(spark, input, sink, cfg))
+    assert(written == Seq(0, 1, 2))
+    assert(!sink.isBatchCommitted(2))
+    written.clear()
+    Pipeline.runBatched(spark, input, sink, cfg)
+    assert(written == Seq(2, 3), "the uncommitted batch must run again, not be skipped")
+    val ids = Pipeline.readOutput(spark, outDir).as[DocRow].collect().map(_.doc_id)
+    assert(ids.length == 200 && ids.distinct.length == 200)
+    // exactly one lineage row set per batch: one row per (batch, partition)
+    val m = spark.read.parquet(metricsDir).as[MetricsRow].collect()
+    assert(m.groupBy(_.batch_id).map { case (b, rs) => b -> rs.map(_.partition_id).sorted.toSeq } ==
+      (0 until 4).map(_ -> (0 until 5)).toMap)
+    assert(m.map(_.docs_in).sum == 200)
   }
 }
 
