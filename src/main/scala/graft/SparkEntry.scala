@@ -4156,12 +4156,10 @@ object SparkEntry {
     // argument). Query terms = the first canonical token of docs 0-2
     // (deterministically extractable on both sides).
     "q_bm25" -> ((s, dir) => {
-      import org.apache.spark.sql.graft.GraftSql
       val d = docs(s, dir)
       val q = d.filter(col("doc_id") < 3)
         .select(col("doc_id").as("qid"),
-          element_at(GraftSql.column(graft.spark.GraftNgrams(
-            GraftSql.expressionOf(col("text")), 1)), 1).as("term"))
+          element_at(call_function("graft_ngrams", col("text"), lit(1)), 1).as("term"))
         .filter(col("term").isNotNull)
       TextOps.bm25(d, "doc_id", "text", q, "qid", "term", k = 10)
     }),
@@ -4173,12 +4171,10 @@ object SparkEntry {
     // tokens of docs 0-2, row-DISTINCT (a repeated term would
     // double-count).
     "q_bm25_multi" -> ((s, dir) => {
-      import org.apache.spark.sql.graft.GraftSql
       val d = docs(s, dir)
       val q = d.filter(col("doc_id") < 3)
         .select(col("doc_id").as("qid"),
-          explode_outer(slice(GraftSql.column(graft.spark.GraftNgrams(
-            GraftSql.expressionOf(col("text")), 1)), 1, 3)).as("term"))
+          explode_outer(slice(call_function("graft_ngrams", col("text"), lit(1)), 1, 3)).as("term"))
         .filter(col("term").isNotNull)
         .distinct()
       TextOps.bm25Multi(d, "doc_id", "text", q, "qid", "term", k = 10)
@@ -4786,11 +4782,9 @@ object SparkEntry {
     // Expand); at 100 TB only the sketch side runs. One kernel explode
     // (outer + isNotNull + compact Snapshot) feeds both aggregates.
     "q_sketch_hll" -> ((s, dir) => {
-      import org.apache.spark.sql.graft.GraftSql
       val d = docs(s, dir)
       val toks = d.select(coalesce(col("source"), lit("")).as("src"),
-          explode_outer(GraftSql.column(graft.spark.GraftNgrams(
-            GraftSql.expressionOf(col("text")), 1))).as("tok"))
+          explode_outer(call_function("graft_ngrams", col("text"), lit(1))).as("tok"))
         .filter(col("tok").isNotNull)
       val keyed = graft.ops.Snapshot(
         toks.groupBy("src", "tok").agg(count(lit(1)).as("c")))
@@ -4808,10 +4802,8 @@ object SparkEntry {
     // compact per-token count Snapshot feeds counters AND the exact
     // join; the counter table is broadcast at probe time.
     "q_sketch_cms" -> ((s, dir) => {
-      import org.apache.spark.sql.graft.GraftSql
       val d = docs(s, dir)
-      def ngrams1(c: Column) = GraftSql.column(graft.spark.GraftNgrams(
-        GraftSql.expressionOf(c), 1))
+      def ngrams1(c: Column) = call_function("graft_ngrams", c, lit(1))
       val cnt = graft.ops.Snapshot(
         d.select(explode_outer(ngrams1(col("text"))).as("tok"))
           .filter(col("tok").isNotNull)

@@ -544,16 +544,15 @@ object Dedup {
                     oracleHash: Boolean = false,
                     broadcastContam: Boolean = true): DataFrame = {
     require(n >= 1, s"n-gram size must be >= 1: $n")
+    TextOps.registerAll(corpus.sparkSession)
     def key(c: Column): Column = if (oracleHash) md5(c) else xxhash64(c)
     // one-pass native n-gram kernel — the built-in
     // transform/sequence/slice formulation is semantically identical
     // (the oracle replays it) but re-evaluates the inlined token-array
     // subtree per lambda element under interpreted HOF eval, n× per row
     def ngramKeys(df: DataFrame, ngCols: Column*): DataFrame = {
-      import org.apache.spark.sql.graft.GraftSql
       val src = df.select((ngCols :+ col("__text")): _*)
-        .withColumn("ngs", GraftSql.column(
-          graft.spark.GraftNgrams(GraftSql.expressionOf(col("__text")), n)))
+        .withColumn("ngs", call_function("graft_ngrams", col("__text"), lit(n)))
       // explode_OUTER + post-filter, not explode: InferFiltersFromGenerate
       // adds size(child)>0 AND isnotnull(child) under a non-outer
       // generate, and predicate pushdown substitutes the kernel into
@@ -805,7 +804,7 @@ object Dedup {
   def duplicatedNgramSpans(df: DataFrame, idCol: String, textCol: String,
                            n: Int = 13,
                            oracleHash: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.graft.GraftSql
+    TextOps.registerAll(df.sparkSession)
     def key(c: Column): Column = if (oracleHash) md5(c) else xxhash64(c)
     val ids = df.select(col(idCol).as("id"))
     // compact (id, pos, k) snapshot: the counts aggregate and the flag
@@ -816,8 +815,7 @@ object Dedup {
     // substituted in — 3 evals/row
     val keyed = Snapshot(df
       .select(col(idCol).as("id"),
-        GraftSql.column(graft.spark.GraftNgrams(
-          GraftSql.expressionOf(col(textCol)), n)).as("ngs"))
+        call_function("graft_ngrams", col(textCol), lit(n)).as("ngs"))
       .select(col("id"), posexplode_outer(col("ngs")).as(Seq("pos", "ng")))
       .filter(col("ng").isNotNull)
       .select(col("id"), col("pos"), key(col("ng")).as("k")))
@@ -868,13 +866,12 @@ object Dedup {
   def removeDupSpans(df: DataFrame, idCol: String, textCol: String,
                      n: Int = 13,
                      oracleHash: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.graft.GraftSql
+    TextOps.registerAll(df.sparkSession)
     def key(c: Column): Column = if (oracleHash) md5(c) else xxhash64(c)
     val base = df.select(col(idCol).as("id"), col(textCol).as("text"))
     val keyed = Snapshot(base
       .select(col("id"),
-        GraftSql.column(graft.spark.GraftNgrams(
-          GraftSql.expressionOf(col("text")), n)).as("ngs"))
+        call_function("graft_ngrams", col("text"), lit(n)).as("ngs"))
       .select(col("id"), posexplode_outer(col("ngs")).as(Seq("pos", "ng")))
       .filter(col("ng").isNotNull)
       .select(col("id"), col("pos"), key(col("ng")).as("k")))

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Multimodal column handling: media payloads are opaque binary columns
   * with typed metadata; decode/feature-extract runs as a batched
@@ -84,7 +85,7 @@ object Multimodal {
       // per-partition decoder init would go here (native lib handle etc.)
       it.map { row =>
         try decodeStub(row, dim)
-        catch { case _: Throwable =>
+        catch { case NonFatal(_) =>
           MediaFeatures(row.media_id, row.media_type, Array.empty, 0, ok = false)
         }
       }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 object Similarity {
 
   /** Cosine similarity of two float-array columns (double math) — the
-    * native single-pass expression (graft.spark.GraftCosine); exact
+    * native single-pass kernel (graft_cosine → VecUdfs.cosine); exact
     * arithmetic twin of aggregate(zip_with(...)) / greatest(na*nb,1e-12).
     * Requires GraftFunctions.registerAll on the session. */
   def cosine(a: Column, b: Column): Column =
@@ -62,7 +62,7 @@ object Similarity {
   /** Deterministic random-hyperplane signature (seeded per plane):
     * sign-bit LSH packed into an int — the scale path's bucket key. */
   def hyperplaneSignature(vec: Column, planes: Int = 16, seed: Int = 42): Column =
-    // native single-pass expression (graft.spark.HyperplaneSig); same
+    // native single-pass kernel (graft_hyperplane_sig → VecUdfs.hyperplaneSig); same
     // weights as the pure-SQL composition pmod(hash(i,p,seed),2)*2-1 —
     // one static call inside whole-stage codegen instead of per-plane
     // transform+zip_with+aggregate array materializations per row.

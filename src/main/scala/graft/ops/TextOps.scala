@@ -502,13 +502,12 @@ object TextOps {
 
   def distinctiveTerms(df: DataFrame, idCol: String, textCol: String,
                        k: Int = 3): DataFrame = {
-    import org.apache.spark.sql.graft.GraftSql
     require(k >= 1, s"top-k must be >= 1: $k")
+    registerAll(df.sparkSession)
     // explode_OUTER + post-filter: non-outer generates get size/isnotnull
     // filters inferred with the kernel substituted in (2-3 evals/row)
     val toks = df.select(col(idCol).as("id"),
-        explode_outer(GraftSql.column(graft.spark.GraftNgrams(
-          GraftSql.expressionOf(col(textCol)), 1))).as("tok"))
+        explode_outer(call_function("graft_ngrams", col(textCol), lit(1))).as("tok"))
       .filter(col("tok").isNotNull)
     // compact (id, tok, tf) snapshot: df-aggregate and tf×df join prune
     // the shared subtree differently → no exchange reuse → the token
@@ -545,14 +544,13 @@ object TextOps {
     * not array-valued, so it joins/replays relationally. */
   def invertedIndex(df: DataFrame, idCol: String, textCol: String,
                     k: Int, minDf: Long, maxDf: Long): DataFrame = {
-    import org.apache.spark.sql.graft.GraftSql
     import org.apache.spark.sql.Encoders
     require(k >= 1, s"postings cap must be >= 1: $k")
     require(minDf >= 1 && maxDf >= minDf,
       s"need 1 <= minDf <= maxDf: minDf=$minDf maxDf=$maxDf")
+    registerAll(df.sparkSession)
     val toks = df.select(col(idCol).as("doc_id"),
-        explode_outer(array_distinct(GraftSql.column(graft.spark.GraftNgrams(
-          GraftSql.expressionOf(col(textCol)), 1)))).as("token"))
+        explode_outer(array_distinct(call_function("graft_ngrams", col(textCol), lit(1)))).as("token"))
       .filter(col("token").isNotNull)
     val topIds = udaf(new TopK.TopKAgg(k), Encoders.product[TopK.Scored])
     toks.groupBy("token")
@@ -603,10 +601,9 @@ object TextOps {
   private def bm25ScoredTerms(df0: DataFrame, idCol: String, textCol: String,
                               queries: DataFrame, qidCol: String,
                               termCol: String): DataFrame = {
-    import org.apache.spark.sql.graft.GraftSql
+    registerAll(df0.sparkSession)
     val toks = df0.select(col(idCol).as("doc_id"),
-        explode_outer(GraftSql.column(graft.spark.GraftNgrams(
-          GraftSql.expressionOf(col(textCol)), 1))).as("tok"))
+        explode_outer(call_function("graft_ngrams", col(textCol), lit(1))).as("tok"))
       .filter(col("tok").isNotNull)
     val keyed = Snapshot(toks.groupBy("doc_id", "tok").agg(count(lit(1)).as("tf")))
     val dls = keyed.groupBy("doc_id").agg(sum("tf").as("dl"))

@@ -10,6 +10,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.{SparkSessionExtensions, Column}
+import scala.util.control.NonFatal
 
 /** JVM-static kernels invoked from both interpreted eval and generated
   * code (whole-stage codegen emits a direct static call — no Scala
@@ -1272,7 +1273,10 @@ object HtmlUdfs {
   /** Full interleaved-document kernel over a spans ArrayData — the
     * columnar fast path: no Dataset object codec on either side
     * (DocKernel semantics; text/media spans pass through without even
-    * materializing a java.lang.String). */
+    * materializing a java.lang.String). As `extract_interleaved_spans`
+    * the scan's UnsafeArrayData flows straight in, no Dataset encoder
+    * round-trip (SURVEY §4: the custom-operator option (b) realized; the
+    * mapPartitions path remains for per-partition lineage). */
   def extractInterleaved(spans: ArrayData): ArrayData = {
     interleavedEvals.incrementAndGet()
     val n = spans.numElements()
@@ -1291,7 +1295,7 @@ object HtmlUdfs {
               // yields zero spans, never a task failure (Changes:33)
               val extracted =
                 try Extractor.extractHtml(text.toString)
-                catch { case scala.util.control.NonFatal(_) => Seq.empty[graft.html.Span] }
+                catch { case NonFatal(_) => Seq.empty[graft.html.Span] }
               extracted.foreach { sp =>
                 out += InternalRow(UTF8String.fromString(sp.kind),
                   UTF8String.fromString(sp.text),
@@ -1638,7 +1642,7 @@ object MediaUdfs {
       }
       true
     }
-    val structOk = try walk(0, b.length, 0) catch { case _: Throwable => false }
+    val structOk = try walk(0, b.length, 0) catch { case NonFatal(_) => false }
     if (brand.isEmpty) BAD
     else (brand, timescale, durationMs, structOk && timescale > 0)
   }
@@ -1849,6 +1853,9 @@ object MediaUdfs {
     (latS, lonS, true)
   }
 
+  /** struct(lat_udeg, lon_udeg, ok): integer micro-degrees from the
+    * EXIF GPS IFD (see decodeGps for the floor-div convention the oracle
+    * replays). Total. */
   def gpsHeader(b: Array[Byte]): InternalRow = {
     // catch-all backstop: graft_gps is documented TOTAL over untrusted
     // image bytes ('anything malformed -> (0,0,false), never a throw')
@@ -1929,444 +1936,6 @@ object MediaUdfs {
   }
 }
 
-/** Native expression: `graft_image_header(binary)` →
-  * struct<format,width,height,depth>. */
-case class GraftImageHeader(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = MediaUdfs.headerStructType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    MediaUdfs.imageHeader(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.MediaUdfs.imageHeader($c)")
-  override protected def withNewChildInternal(newChild: Expression): GraftImageHeader =
-    copy(child = newChild)
-  override def prettyName: String = "graft_image_header"
-}
-
-/** Native expression: `graft_audio_header(binary)` →
-  * struct<format,channels,sample_rate,bits>. */
-case class GraftAudioHeader(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = MediaUdfs.audioStructType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    MediaUdfs.audioHeader(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.MediaUdfs.audioHeader($c)")
-  override protected def withNewChildInternal(newChild: Expression): GraftAudioHeader =
-    copy(child = newChild)
-  override def prettyName: String = "graft_audio_header"
-}
-
-/** Native expression: `graft_mp3_header(binary)` →
-  * struct<version,bitrate_kbps,sample_rate,channels,ok>. */
-case class GraftMp3Header(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = MediaUdfs.mp3StructType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    MediaUdfs.mp3Header(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.MediaUdfs.mp3Header($c)")
-  override protected def withNewChildInternal(newChild: Expression): GraftMp3Header =
-    copy(child = newChild)
-  override def prettyName: String = "graft_mp3_header"
-}
-
-/** Native expression: `graft_video_header(binary)` →
-  * struct<brand,timescale,duration_ms,ok>. */
-case class GraftVideoHeader(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = MediaUdfs.videoStructType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    MediaUdfs.videoHeader(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.MediaUdfs.videoHeader($c)")
-  override protected def withNewChildInternal(newChild: Expression): GraftVideoHeader =
-    copy(child = newChild)
-  override def prettyName: String = "graft_video_header"
-}
-
-/** GPS coordinates: `graft_gps(bytes)` → struct(lat_udeg, lon_udeg,
-  * ok) — integer micro-degrees from the EXIF GPS IFD (see
-  * MediaUdfs.decodeGps for the floor-div convention the oracle
-  * replays). Total. */
-case class GraftGps(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = MediaUdfs.gpsStructType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    MediaUdfs.gpsHeader(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.MediaUdfs.gpsHeader($c)")
-  override protected def withNewChildInternal(newChild: Expression): GraftGps =
-    copy(child = newChild)
-  override def prettyName: String = "graft_gps"
-}
-
-/** Native expression: `graft_exif(binary)` →
-  * struct<byte_order,width,height,orientation,entries,ok>. */
-case class GraftExif(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = MediaUdfs.exifStructType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    MediaUdfs.exifHeader(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.MediaUdfs.exifHeader($c)")
-  override protected def withNewChildInternal(newChild: Expression): GraftExif =
-    copy(child = newChild)
-  override def prettyName: String = "graft_exif"
-}
-
-/** Native expression: `graft_blockhash(binary)` → 16-hex-char byte
-  * blockhash, or NULL for an empty payload (nullable=true is mandatory:
-  * codegen needs the isNull slot — CLAUDE.md round-1 rule). */
-case class GraftBlockhash(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-  override def nullable: Boolean = true // empty payload → null
-  override protected def nullSafeEval(input: Any): Any =
-    MediaUdfs.blockhash(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""
-      UTF8String ${ev.value}_bh = graft.spark.MediaUdfs.blockhash($c);
-      if (${ev.value}_bh == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = ${ev.value}_bh; }
-      """
-    })
-  override protected def withNewChildInternal(newChild: Expression): GraftBlockhash =
-    copy(child = newChild)
-  override def prettyName: String = "graft_blockhash"
-}
-
-/** Native expression: `graft_hamming_hex(a, b)` → nibble-popcount
-  * Hamming distance between equal-length hex strings; -1 on length
-  * mismatch or non-hex input (total, never a throw). */
-case class GraftHammingHex(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  override def dataType: DataType = IntegerType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    MediaUdfs.hammingHex(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.spark.MediaUdfs.hammingHex($a, $b)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): GraftHammingHex =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "graft_hamming_hex"
-}
-
-/** Native Catalyst expression: parse_html_spans(html). Codegen emits a
-  * single static call — stays inside whole-stage codegen (preferred over
-  * a Scala UDF per the build rules; SURVEY §7.3). */
-case class ParseHtmlSpans(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = HtmlUdfs.spanArrayType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    HtmlUdfs.parseSpans(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.HtmlUdfs.parseSpans($c)")
-  override protected def withNewChildInternal(newChild: Expression): ParseHtmlSpans =
-    copy(child = newChild)
-  override def prettyName: String = "parse_html_spans"
-}
-
-case class ParseHtmlText(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    HtmlUdfs.parseText(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.HtmlUdfs.parseText($c)")
-  override protected def withNewChildInternal(newChild: Expression): ParseHtmlText =
-    copy(child = newChild)
-  override def prettyName: String = "parse_html_text"
-}
-
-case class SerializeHtml(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    HtmlUdfs.roundtripHtml(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.HtmlUdfs.roundtripHtml($c)")
-  override protected def withNewChildInternal(newChild: Expression): SerializeHtml =
-    copy(child = newChild)
-  override def prettyName: String = "serialize_html"
-}
-
-case class PrescanCharset(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    HtmlUdfs.sniffCharset(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.HtmlUdfs.sniffCharset($c)")
-  override protected def withNewChildInternal(newChild: Expression): PrescanCharset =
-    copy(child = newChild)
-  override def prettyName: String = "prescan_charset"
-}
-
-case class HtmlQuirksMode(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    HtmlUdfs.quirksMode(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.HtmlUdfs.quirksMode($c)")
-  override protected def withNewChildInternal(newChild: Expression): HtmlQuirksMode =
-    copy(child = newChild)
-  override def prettyName: String = "html_quirks_mode"
-}
-
-case class ParseHtmlNodes(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = HtmlUdfs.nodeArrayType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    HtmlUdfs.domNodes(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.HtmlUdfs.domNodes($c)")
-  override protected def withNewChildInternal(newChild: Expression): ParseHtmlNodes =
-    copy(child = newChild)
-  override def prettyName: String = "parse_html_nodes"
-}
-
-/** Relational DOM node table: `graft_node_table(html)` → array<struct<
-  * node_id,parent_id,depth,tag,ns,ntype,text,attrs,offset>> — ONE parse
-  * per row (counter-pinned); explode with the outer+isNotNull
-  * discipline (plain explode triple-evals the kernel via
-  * InferFiltersFromGenerate). */
-case class GraftNodeTable(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = HtmlUdfs.nodeTableArrayType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    HtmlUdfs.nodeTable(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.HtmlUdfs.nodeTable($c)")
-  override protected def withNewChildInternal(newChild: Expression): GraftNodeTable =
-    copy(child = newChild)
-  override def prettyName: String = "graft_node_table"
-}
-
-/** Link extraction: `graft_link_table(html)` → array<struct<node_id,
-  * href,anchor>> — one parse per row; explode with outer+isNotNull. */
-case class GraftLinkTable(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = HtmlUdfs.linkArrayType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    HtmlUdfs.linkTable(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.HtmlUdfs.linkTable($c)")
-  override protected def withNewChildInternal(newChild: Expression): GraftLinkTable =
-    copy(child = newChild)
-  override def prettyName: String = "graft_link_table"
-}
-
-/** Page metadata: `graft_page_meta(html)` → struct(title, lang, base,
-  * canonical, description, robots, og_title, meta_count) — one parse
-  * per row (counter-pinned). Access fields by projection; to FILTER on
-  * a field, project it first (the struct-getField predicate collapse
-  * re-evals the kernel — the graft_repetition lesson). */
-case class GraftPageMeta(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = HtmlUdfs.pageMetaStructType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    HtmlUdfs.pageMeta(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.HtmlUdfs.pageMeta($c)")
-  override protected def withNewChildInternal(newChild: Expression): GraftPageMeta =
-    copy(child = newChild)
-  override def prettyName: String = "graft_page_meta"
-}
-
-/** Table extraction: `graft_table_cells(html)` → array<struct<table_id,
-  * row_id,col_id,is_header,text>> — one parse per row; explode with the
-  * outer+isNotNull discipline (plain explode triple-evals the kernel
-  * via InferFiltersFromGenerate). */
-case class GraftTableCells(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = HtmlUdfs.tableCellArrayType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    HtmlUdfs.tableCells(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.HtmlUdfs.tableCells($c)")
-  override protected def withNewChildInternal(newChild: Expression): GraftTableCells =
-    copy(child = newChild)
-  override def prettyName: String = "graft_table_cells"
-}
-
-/** Grid-fill table extraction: `graft_table_grid(html)` — the
-  * rowspan-occupancy variant of graft_table_cells (same struct); one
-  * parse per row; explode with the outer+isNotNull discipline. */
-case class GraftTableGrid(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = HtmlUdfs.tableCellArrayType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    HtmlUdfs.tableGrid(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.HtmlUdfs.tableGrid($c)")
-  override protected def withNewChildInternal(newChild: Expression): GraftTableGrid =
-    copy(child = newChild)
-  override def prettyName: String = "graft_table_grid"
-}
-
-/** Sitemap extraction: `graft_sitemap(html)` → array<struct<entry_id,
-  * kind,loc,lastmod,priority>> — one parse per row; explode with the
-  * outer+isNotNull discipline (plain explode triple-evals the kernel
-  * via InferFiltersFromGenerate). */
-case class GraftSitemap(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = HtmlUdfs.sitemapArrayType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    HtmlUdfs.sitemapTable(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.HtmlUdfs.sitemapTable($c)")
-  override protected def withNewChildInternal(newChild: Expression): GraftSitemap =
-    copy(child = newChild)
-  override def prettyName: String = "graft_sitemap"
-}
-
-/** Feed extraction: `graft_feed(html)` → array<struct<entry_id,kind,
-  * title,link,updated,uid>> — one parse per row; explode with the
-  * outer+isNotNull discipline. */
-case class GraftFeed(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = HtmlUdfs.feedArrayType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    HtmlUdfs.feedTable(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.HtmlUdfs.feedTable($c)")
-  override protected def withNewChildInternal(newChild: Expression): GraftFeed =
-    copy(child = newChild)
-  override def prettyName: String = "graft_feed"
-}
-
-/** hreflang alternates: `graft_hreflang(html)` → array<struct<alt_id,
-  * lang,href>> — one parse per row; explode with the outer+isNotNull
-  * discipline. */
-case class GraftHreflang(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = HtmlUdfs.hreflangArrayType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    HtmlUdfs.hreflangTable(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.HtmlUdfs.hreflangTable($c)")
-  override protected def withNewChildInternal(newChild: Expression): GraftHreflang =
-    copy(child = newChild)
-  override def prettyName: String = "graft_hreflang"
-}
-
-/** Per-block density report: `graft_density_blocks(html)` — one parse
-  * per row; explode with the outer+isNotNull discipline. */
-case class GraftDensityBlocks(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = HtmlUdfs.densityBlockArrayType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    HtmlUdfs.densityBlocks(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.HtmlUdfs.densityBlocks($c)")
-  override protected def withNewChildInternal(newChild: Expression): GraftDensityBlocks =
-    copy(child = newChild)
-  override def prettyName: String = "graft_density_blocks"
-}
-
-/** JSON-LD payloads: `graft_jsonld(html)` → array<struct<script_id,
-  * raw>> — one parse per row; explode with the outer+isNotNull
-  * discipline; compose with `from_json` for the parse stage. */
-case class GraftJsonld(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = HtmlUdfs.jsonldArrayType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    HtmlUdfs.jsonldTable(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.HtmlUdfs.jsonldTable($c)")
-  override protected def withNewChildInternal(newChild: Expression): GraftJsonld =
-    copy(child = newChild)
-  override def prettyName: String = "graft_jsonld"
-}
-
-/** Subtitle parsing: `graft_subtitles(text)` → array<struct<cue_id,
-  * start_ms,end_ms,text>> — WebVTT/SRT cues; explode with the
-  * outer+isNotNull discipline. */
-case class GraftSubtitles(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = HtmlUdfs.subtitleArrayType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    HtmlUdfs.subtitleTable(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.HtmlUdfs.subtitleTable($c)")
-  override protected def withNewChildInternal(newChild: Expression): GraftSubtitles =
-    copy(child = newChild)
-  override def prettyName: String = "graft_subtitles"
-}
-
-/** Publication-date signals: `graft_pub_date(html)` → struct(meta_time,
-  * time_attr) — one parse per row; access fields by projection. */
-case class GraftPubDate(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = HtmlUdfs.pubDateStructType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    HtmlUdfs.pubDate(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.HtmlUdfs.pubDate($c)")
-  override protected def withNewChildInternal(newChild: Expression): GraftPubDate =
-    copy(child = newChild)
-  override def prettyName: String = "graft_pub_date"
-}
-
-/** HTML → Markdown: `graft_markdown(html)` — see [[HtmlUdfs.markdown]]
-  * for the block/inline/whitespace conventions. */
-case class GraftMarkdown(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    HtmlUdfs.markdown(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.HtmlUdfs.markdown($c)")
-  override protected def withNewChildInternal(newChild: Expression): GraftMarkdown =
-    copy(child = newChild)
-  override def prettyName: String = "graft_markdown"
-}
-
-/** PSL registrable domain: `graft_registrable_domain(host)` — the
-  * public-suffix-rule resolution of [[graft.ops.Psl]] as a per-row
-  * codegen'd lookup (never a join; the rule table is a static JVM
-  * structure loaded once per executor). */
-case class GraftRegistrableDomain(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    graft.ops.Psl.registrableU8(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.ops.Psl.registrableU8($c)")
-  override protected def withNewChildInternal(newChild: Expression): GraftRegistrableDomain =
-    copy(child = newChild)
-  override def prettyName: String = "graft_registrable_domain"
-}
-
-/** The whole per-document kernel as one codegen-friendly expression:
-  * array<struct<kind,text,media_ref,offset>> -> same type, extracted.
-  * Columnar in/out — the scan's UnsafeArrayData flows straight in, no
-  * Dataset encoder round-trip (SURVEY §4: the custom-operator option (b)
-  * realized; the mapPartitions path remains for per-partition lineage). */
 /** Static kernel for the random-hyperplane LSH signature — one pass per
   * plane over the float vector, no intermediate arrays. Reproduces the
   * SQL composition `pmod(hash(i, p, seed), 2) * 2 - 1` weights
@@ -2382,8 +1951,10 @@ object VecUdfs {
   val hyperplaneEvals = new java.util.concurrent.atomic.AtomicLong
   val centroidEvals = new java.util.concurrent.atomic.AtomicLong
 
-  /** Exact arithmetic twin of the SQL cosine composition; null on
-    * length mismatch or null element (zip_with-pad semantics). */
+  /** Exact arithmetic twin of the SQL cosine composition, in one pass
+    * instead of the zip_with product-array materialization per pair:
+    * same ascending fold order, same greatest(na*nb, 1e-12) guard; null
+    * on length mismatch or null element (zip_with-pad semantics). */
   def cosine(a: ArrayData, b: ArrayData): java.lang.Double = {
     val n = a.numElements()
     if (b.numElements() != n) return null
@@ -2469,98 +2040,6 @@ object VecUdfs {
     }
     sig
   }
-}
-
-/** Native cosine-similarity expression: `graft_cosine(a, b)` — one
-  * arithmetic pass, replacing the zip_with product-array materialization
-  * per pair. Exact SQL parity: length mismatch or a null element yields
-  * NULL (zip_with pads with null -> null fold), same ascending fold
-  * order, same greatest(na*nb, 1e-12) guard. */
-case class GraftCosine(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  // can yield NULL even for non-null inputs (length mismatch / null
-  // element) — without this, codegen for non-nullable children has no
-  // usable isNull slot and the null branch silently degrades
-  override def nullable: Boolean = true
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VecUdfs.cosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      s"""
-      java.lang.Double ${ev.value}_r = graft.spark.VecUdfs.cosine($a, $b);
-      if (${ev.value}_r == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = ${ev.value}_r.doubleValue(); }
-      """
-    })
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): GraftCosine =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "graft_cosine"
-}
-
-/** Native expression: `graft_quantize_i8(vec)` → array<tinyint> —
-  * symmetric per-vector int8 quantization (scale cancels in cosine). */
-case class GraftQuantizeI8(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(ByteType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  // null ELEMENT in the input → null result (matches the cosine
-  // kernels); without this, codegen has no isNull slot (repo rule)
-  override def nullable: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    VecUdfs.quantizeI8(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""
-      org.apache.spark.sql.catalyst.util.ArrayData ${ev.value}_q =
-        graft.spark.VecUdfs.quantizeI8($c);
-      if (${ev.value}_q == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = ${ev.value}_q; }
-      """
-    })
-  override protected def withNewChildInternal(newChild: Expression): GraftQuantizeI8 =
-    copy(child = newChild)
-  override def prettyName: String = "graft_quantize_i8"
-}
-
-/** Native expression: `graft_cosine_i8(a, b)` over int8 vectors. */
-case class GraftCosineI8(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def nullable: Boolean = true // length mismatch / null element
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VecUdfs.cosineI8(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      s"""
-      java.lang.Double ${ev.value}_r8 = graft.spark.VecUdfs.cosineI8($a, $b);
-      if (${ev.value}_r8 == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = ${ev.value}_r8.doubleValue(); }
-      """
-    })
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): GraftCosineI8 =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "graft_cosine_i8"
-}
-
-/** Native hyperplane-signature expression: `graft_hyperplane_sig(vec,
-  * planes, seed)` — the LSH bucket key for the ANN / embedding-near-dup
-  * scale path (SURVEY "beyond-reference" ops). */
-case class HyperplaneSig(child: Expression, planes: Int, seed: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = IntegerType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    VecUdfs.hyperplaneSig(input.asInstanceOf[ArrayData], planes, seed)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.spark.VecUdfs.hyperplaneSig($c, $planes, $seed)")
-  override protected def withNewChildInternal(newChild: Expression): HyperplaneSig =
-    copy(child = newChild)
-  override def prettyName: String = "graft_hyperplane_sig"
 }
 
 /** Native nearest-centroid assignment for IVF ANN:
@@ -2680,80 +2159,6 @@ case class GraftPqLut(child: Expression, codebooks: Array[Array[Array[Float]]])
   override protected def withNewChildInternal(newChild: Expression): GraftPqLut =
     copy(child = newChild)
   override def prettyName: String = "graft_pq_lut"
-}
-
-case class ExtractInterleavedSpans(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = HtmlUdfs.spanArrayType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    HtmlUdfs.extractInterleaved(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.HtmlUdfs.extractInterleaved($c)")
-  override protected def withNewChildInternal(newChild: Expression): ExtractInterleavedSpans =
-    copy(child = newChild)
-  override def prettyName: String = "extract_interleaved_spans"
-}
-
-/** Native fragment-parse expression: `parse_fragment_text(html, ctx)` —
-  * the driver-visible surface for the fragment algorithm (reference
-  * myhtml_parse_fragment, myhtml.c:240-262; SURVEY §2 S2). */
-case class ParseFragmentText(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    HtmlUdfs.fragmentText(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.spark.HtmlUdfs.fragmentText($a, $b)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): ParseFragmentText =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "parse_fragment_text"
-}
-
-/** Native boilerplate-stripping extraction: `extract_main_text(html)` —
-  * the north star's DOM-heuristic main-content mode as a SQL function. */
-case class ExtractMainText(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    HtmlUdfs.mainText(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.HtmlUdfs.mainText($c)")
-  override protected def withNewChildInternal(newChild: Expression): ExtractMainText =
-    copy(child = newChild)
-  override def prettyName: String = "extract_main_text"
-}
-
-/** Native density-scored extraction: `extract_dense_text(html)` — the
-  * north star's full scoring battery (text-density chars-per-tag,
-  * link-density, tag-depth) over text-bearing blocks. */
-case class ExtractDenseText(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    HtmlUdfs.denseText(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.HtmlUdfs.denseText($c)")
-  override protected def withNewChildInternal(newChild: Expression): ExtractDenseText =
-    copy(child = newChild)
-  override def prettyName: String = "extract_dense_text"
-}
-
-case class TokenizeHtml(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = HtmlUdfs.tokenArrayType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    HtmlUdfs.tokenizeHtml(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.HtmlUdfs.tokenizeHtml($c)")
-  override protected def withNewChildInternal(newChild: Expression): TokenizeHtml =
-    copy(child = newChild)
-  override def prettyName: String = "tokenize_html"
 }
 
 /** Native expression: `graft_attr_match_counts(html, array(keys),

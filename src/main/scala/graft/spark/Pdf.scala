@@ -1,8 +1,7 @@
 package graft.spark
 
+import scala.util.control.NonFatal
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -303,9 +302,9 @@ object PdfUdfs {
     * not an executor OOM — same contract as the stuck-inflater path. */
   private val MaxInflatedBytes = 64 << 20
 
-  private def inflate(data: Array[Byte]): Array[Byte] =
+  private def inflate(data: Array[Byte]): Array[Byte] = {
+    val inf = new java.util.zip.Inflater()
     try {
-      val inf = new java.util.zip.Inflater()
       inf.setInput(data)
       val out = new java.io.ByteArrayOutputStream(data.length * 4)
       val buf = new Array[Byte](8192)
@@ -315,9 +314,10 @@ object PdfUdfs {
         out.write(buf, 0, n)
         if (out.size > MaxInflatedBytes) return null // deflate bomb
       }
-      inf.end()
       out.toByteArray
-    } catch { case _: Throwable => null }
+    } catch { case NonFatal(_) => null }
+    finally inf.end() // native zlib state, on every path
+  }
 
   /** Text of one content stream: BT…ET blocks, show-text operators.
     * Hex strings route through the merged ToUnicode CMap when one
@@ -439,37 +439,11 @@ object PdfUdfs {
     ((sb.toString, math.min(i + 1, n)))
   }
 
+  /** struct<version,pages,objects,ok> of [[info]]. */
   def infoRow(b: Array[Byte]): InternalRow = {
     val (v, p, o, ok) = info(b)
     InternalRow(UTF8String.fromString(v), p, o, ok)
   }
 
   def textUtf8(b: Array[Byte]): UTF8String = UTF8String.fromString(text(b))
-}
-
-/** Native expression: `graft_pdf_info(binary)` →
-  * struct<version,pages,objects,ok>. */
-case class GraftPdfInfo(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = PdfUdfs.infoStructType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    PdfUdfs.infoRow(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.PdfUdfs.infoRow($c)")
-  override protected def withNewChildInternal(newChild: Expression): GraftPdfInfo =
-    copy(child = newChild)
-  override def prettyName: String = "graft_pdf_info"
-}
-
-/** Native expression: `graft_pdf_text(binary)` → extracted text. */
-case class GraftPdfText(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    PdfUdfs.textUtf8(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.PdfUdfs.textUtf8($c)")
-  override protected def withNewChildInternal(newChild: Expression): GraftPdfText =
-    copy(child = newChild)
-  override def prettyName: String = "graft_pdf_text"
 }

@@ -1,28 +1,24 @@
 package graft.spark
 
 import graft.ops.TextOps
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expressions for the dedup signature kernels —
-  * graft_minhash / graft_simhash64 / graft_jaccard / graft_hamming64 /
-  * graft_fingerprint64 / graft_lang_id. Round-2 verdict item #2: these
+/** Static kernels behind the text SQL functions (graft_minhash /
+  * graft_simhash64 / graft_jaccard / graft_hamming64 / graft_ngrams /
+  * ...; rows in [[KernelRegistry]]). Round-2 verdict item #2: these
   * sat in the hot path of the biggest jobs in the suite as row-at-a-time
   * Scala UDFs (closure call + CatalystTypeConverters per row, a codegen
-  * boundary per use); the repo's own GraftCosine/HyperplaneSig pattern
-  * (spark/Functions.scala) is the proven better plan — whole-stage
-  * codegen emits one static call per row. The arithmetic lives in
-  * graft.ops.TextOps (JVM-static, shared by both eval paths) and is
-  * UNCHANGED: every signature is pinned by DuckDB oracles and
-  * ScaleGuardSpec brute-force truths, so outputs must not move a bit.
+  * boundary per use); as registry kernels whole-stage codegen emits one
+  * static call per row. The arithmetic lives in graft.ops.TextOps
+  * (JVM-static, shared by both eval paths) and is UNCHANGED: every
+  * signature is pinned by DuckDB oracles and ScaleGuardSpec brute-force
+  * truths, so outputs must not move a bit.
   *
   * All of these return non-null for non-null inputs (TextOps' null
-  * branches are unreachable behind nullIntolerant), so the default
-  * child-driven nullability is correct — no GraftCosine-style nullable
-  * override needed (CLAUDE.md native-expression rule).
+  * branches are unreachable behind nullIntolerant), so none of their
+  * registry rows sets `nullableResult`.
   */
 object TextKernels {
   /** Local-mode observability: how many times the expensive signature
@@ -33,10 +29,12 @@ object TextKernels {
   val minhashEvals = new java.util.concurrent.atomic.AtomicLong
   val simhashEvals = new java.util.concurrent.atomic.AtomicLong
 
+  /** 64-bit SimHash over 3-word shingles. */
   def simhash64(t: UTF8String): Long = {
     simhashEvals.incrementAndGet()
     TextOps.simhash64(t.toString)
   }
+  /** MinHash signature: k permutation minima (k is a plan-time literal). */
   def minhash(t: UTF8String, k: Int): ArrayData = {
     minhashEvals.incrementAndGet()
     val sig = TextOps.minhash(t.toString, k)
@@ -45,8 +43,13 @@ object TextKernels {
     while (i < sig.length) { boxed(i) = sig(i); i += 1 }
     new GenericArrayData(boxed)
   }
+  /** Exact token-set Jaccard — the verify kernel every candidate pair
+    * pays. */
   def jaccard(a: UTF8String, b: UTF8String): Double =
     TextOps.jaccardTokens(a.toString, b.toString)
+  /** MinHash over CHARACTER n-grams — the whitespace-free-script (CJK)
+    * dedup path; token shingling degenerates there (round-4). Same
+    * counter as minhash. */
   def minhashShingle(t: UTF8String, k: Int, n: Int): ArrayData = {
     minhashEvals.incrementAndGet()
     val sig = TextOps.minhashShingle(t.toString, k, n)
@@ -55,18 +58,39 @@ object TextKernels {
     while (i < sig.length) { boxed(i) = sig(i); i += 1 }
     new GenericArrayData(boxed)
   }
+  /** Exact char-n-gram-set Jaccard — the verify kernel for the shingle
+    * dedup path. */
   def jaccardShingle(a: UTF8String, b: UTF8String, n: Int): Double =
     TextOps.jaccardShingles(a.toString, b.toString, n)
+  /** deflate(text)/|text| in permille (the cheap repetition detector —
+    * template/stuffed pages compress far below natural prose). Pinned by
+    * unit tests rather than the DuckDB gate (SQL cannot deflate). */
   def compressRatio(t: UTF8String): Int =
     TextOps.compressRatioPermille(t.toString)
+  /** Hamming distance of two 64-bit signatures. */
+  def hamming64(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
+  /** 64-bit rolling document fingerprint. */
   def fingerprint64(t: UTF8String): Long = TextOps.fingerprint64(t.toString)
+  /** Marker-heuristic language id. */
   def langId(t: UTF8String): UTF8String =
     UTF8String.fromString(TextOps.langIdHeuristic(t.toString))
+  /** Mojibake repair: UTF-8-decoded-as-Latin-1 corruption fixed by the
+    * shared pure-byte-view / strict-UTF-8 rule (TextOps.demojibake;
+    * Pdf.text re-decodes through the SAME function). Total; ASCII, real
+    * Unicode, and genuine Latin-1 pass through. */
   def demojibake(t: UTF8String): UTF8String = {
     val s = t.toString
     val r = TextOps.demojibake(s)
     if (r eq s) t else UTF8String.fromString(r)
   }
+  /** Unicode NFC normalization — the canonical-form pass a text
+    * pipeline runs before dedup keys / tokenization so that "é" and
+    * "e"+U+0301 hash identically. JDK Normalizer (Unicode canonical
+    * composition — a SPEC-stable algorithm: the normalization stability
+    * policy freezes the result for every assigned codepoint, which is
+    * what lets a DuckDB utf8proc oracle replay it; codepoints unassigned
+    * in one engine's Unicode version are the documented caveat, so
+    * oracle constructions pin assigned-everywhere cases). */
   def nfc(t: UTF8String): UTF8String = {
     val s = t.toString
     // fast path: NFC-is-identity is the overwhelmingly common case and
@@ -90,6 +114,10 @@ object TextKernels {
 
   val lmScoreEvals = new java.util.concurrent.atomic.AtomicLong
 
+  /** CCNet-style LM familiarity: the in-domain char-trigram count model
+    * of graft.ops.LmModel in ONE stream pass per row; callers derive the
+    * drop rule (mean level) by integer cross-multiplication in the
+    * projection. */
   def lmScore(t: UTF8String): org.apache.spark.sql.catalyst.InternalRow = {
     lmScoreEvals.incrementAndGet()
     val s = graft.ops.LmModel.stream(t.toString)
@@ -106,6 +134,12 @@ object TextKernels {
 
   val c4RulesEvals = new java.util.concurrent.atomic.AtomicLong
 
+  /** C4/Gopher filter battery (terminal-punctuation / bullet / ellipsis
+    * line counts, alpha-word and stop-word token counts, lorem/brace page
+    * flags) in ONE text pass per row; callers derive the published drop
+    * rules by integer cross-multiplication in the PROJECTION (filtering
+    * on the struct's getFields would re-eval the kernel — the
+    * graft_repetition_ok lesson). Definitions: TextOps.c4Rules. */
   def c4Rules(t: UTF8String): org.apache.spark.sql.catalyst.InternalRow = {
     c4RulesEvals.incrementAndGet()
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
@@ -114,6 +148,10 @@ object TextKernels {
 
   val repetitionEvals = new java.util.concurrent.atomic.AtomicLong
 
+  /** Gopher-family repetition signals (duplicate line/paragraph counts
+    * + chars, top 2/3/4-gram char mass) in ONE text pass per row; the
+    * caller derives the drop fractions. Definitions + oracle notes:
+    * TextOps.repetition. */
   def repetition(t: UTF8String): org.apache.spark.sql.catalyst.InternalRow = {
     repetitionEvals.incrementAndGet()
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
@@ -121,19 +159,30 @@ object TextKernels {
   }
 
   /** dup_lines·a <= lines·b && top2_chars·c <= token_chars in one
-    * kernel pass (indices 1/0/7/6 of TextOps.repetition). */
+    * kernel pass (indices 1/0/7/6 of TextOps.repetition). Filtering on
+    * getFields of the graft_repetition struct re-evaluates the kernel
+    * per field access once the filter predicates collapse (measured 6.6
+    * evals/row in the q_clean_pipeline shape; projection access stays at
+    * 1). Counter-pinned in PlanSpec via repetitionEvals. */
   def repetitionOk(t: UTF8String, a: Int, b: Int, c: Int): Boolean = {
     repetitionEvals.incrementAndGet()
     val r = TextOps.repetition(t.toString)
     r(1).toLong * a <= r(0).toLong * b && r(7).toLong * c <= r(6).toLong
   }
 
+  /** Real BPE token count: true iterative byte-pair encoding over the
+    * in-repo trained merge table (graft.ops.Bpe). */
   def bpeCount(t: UTF8String): Int = graft.ops.Bpe.count(t.toString)
+  /** The space-joined BPE token stream (same trained table as the
+    * count), the surface a training pipeline feeds to packing. */
   def bpeTokens(t: UTF8String): UTF8String =
     UTF8String.fromString(graft.ops.Bpe.encode(t.toString))
 
   /** Trained hashed-bigram quality model (graft.ops.QualityModel):
-    * struct(score BIGINT, n_bigrams INT) in ONE tokenization pass. */
+    * struct(score BIGINT, n_bigrams INT) in ONE tokenization pass — the
+    * 256-bucket integer perceptron trained at class load. Consume via
+    * PROJECTION only (the graft_repetition struct-filter lesson); gate
+    * with `score > 0` on the projected column. */
   val qualityModelStructType: StructType = StructType(Seq(
     StructField("score", LongType, nullable = false),
     StructField("n_bigrams", IntegerType, nullable = false)))
@@ -165,6 +214,11 @@ object TextKernels {
 
   val ngramsEvals = new java.util.concurrent.atomic.AtomicLong
   val cdcEvals = new java.util.concurrent.atomic.AtomicLong
+
+  /** array<struct<start:int, len:int>> of [[cdcChunks]]. */
+  val cdcChunkArrayType: ArrayType = ArrayType(StructType(Seq(
+    StructField("start", IntegerType, nullable = false),
+    StructField("len", IntegerType, nullable = false))), containsNull = false)
 
   /** Content-defined chunk spans (one pass per row): walk CODEPOINTS
     * (the canonical length alphabet) keeping a window of the last 4,
@@ -242,346 +296,4 @@ object TextKernels {
     }
     new GenericArrayData(out)
   }
-}
-
-/** One-pass whitespace-token n-grams: `graft_ngrams(text, n)` →
-  * array<string> (see TextKernels.ngrams for the exact built-in
-  * equivalence the oracles rely on). */
-case class GraftNgrams(child: Expression, n: Int) extends UnaryExpression {
-  require(n >= 1, s"n-gram size must be >= 1: $n")
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    TextKernels.ngrams(input.asInstanceOf[UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.TextKernels.ngrams($c, $n)")
-  override protected def withNewChildInternal(newChild: Expression): GraftNgrams =
-    copy(child = newChild)
-  override def prettyName: String = "graft_ngrams"
-}
-
-/** Content-defined chunk spans: `graft_cdc_chunks(text, modulus)` →
-  * array<struct<start:int, len:int>> (codepoint units, 1-based). See
-  * TextKernels.cdcChunks for the positional-replay contract the
-  * q_cdc_chunks oracle relies on. */
-case class GraftCdcChunks(child: Expression, modulus: Int) extends UnaryExpression {
-  require(modulus >= 2, s"cdc modulus must be >= 2: $modulus")
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("start", IntegerType, nullable = false),
-    StructField("len", IntegerType, nullable = false))), containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    TextKernels.cdcChunks(input.asInstanceOf[UTF8String], modulus)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.TextKernels.cdcChunks($c, $modulus)")
-  override protected def withNewChildInternal(newChild: Expression): GraftCdcChunks =
-    copy(child = newChild)
-  override def prettyName: String = "graft_cdc_chunks"
-}
-
-/** 64-bit SimHash over 3-word shingles: `graft_simhash64(text)`. */
-case class GraftSimhash64(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    TextKernels.simhash64(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.TextKernels.simhash64($c)")
-  override protected def withNewChildInternal(newChild: Expression): GraftSimhash64 =
-    copy(child = newChild)
-  override def prettyName: String = "graft_simhash64"
-}
-
-/** MinHash signature: `graft_minhash(text, k)` → array<bigint> of k
-  * permutation minima (k is plan-time constant, like HyperplaneSig). */
-case class GraftMinhash(child: Expression, k: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    TextKernels.minhash(input.asInstanceOf[UTF8String], k)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.TextKernels.minhash($c, $k)")
-  override protected def withNewChildInternal(newChild: Expression): GraftMinhash =
-    copy(child = newChild)
-  override def prettyName: String = "graft_minhash"
-}
-
-/** Exact token-set Jaccard: `graft_jaccard(a, b)` — the verify kernel
-  * every candidate pair pays. */
-case class GraftJaccard(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    TextKernels.jaccard(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.spark.TextKernels.jaccard($a, $b)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): GraftJaccard =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "graft_jaccard"
-}
-
-/** MinHash over CHARACTER n-grams: `graft_minhash_shingle(text, k, n)`
-  * — the whitespace-free-script (CJK) dedup path; token shingling
-  * degenerates there (round-4). Same counter as minhash. */
-case class GraftMinhashShingle(child: Expression, k: Int, n: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    TextKernels.minhashShingle(input.asInstanceOf[UTF8String], k, n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.TextKernels.minhashShingle($c, $k, $n)")
-  override protected def withNewChildInternal(newChild: Expression): GraftMinhashShingle =
-    copy(child = newChild)
-  override def prettyName: String = "graft_minhash_shingle"
-}
-
-/** Exact char-n-gram-set Jaccard: `graft_jaccard_shingle(a, b, n)` —
-  * the verify kernel for the shingle dedup path. */
-case class GraftJaccardShingle(left: Expression, right: Expression, n: Int)
-    extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    TextKernels.jaccardShingle(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.spark.TextKernels.jaccardShingle($a, $b, $n)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): GraftJaccardShingle =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "graft_jaccard_shingle"
-}
-
-/** Compression-ratio quality signal: `graft_compress_ratio(text)` →
-  * deflate(text)/|text| in permille (the cheap repetition detector —
-  * template/stuffed pages compress far below natural prose). Pinned by
-  * unit tests rather than the DuckDB gate (SQL cannot deflate). */
-case class GraftCompressRatio(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = IntegerType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    TextKernels.compressRatio(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.TextKernels.compressRatio($c)")
-  override protected def withNewChildInternal(newChild: Expression): GraftCompressRatio =
-    copy(child = newChild)
-  override def prettyName: String = "graft_compress_ratio"
-}
-
-/** Hamming distance of two 64-bit signatures: `graft_hamming64(a, b)` —
-  * pure Long.bitCount, inlined by codegen. */
-case class GraftHamming64(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = IntegerType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    java.lang.Long.bitCount(a.asInstanceOf[Long] ^ b.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"java.lang.Long.bitCount($a ^ $b)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): GraftHamming64 =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "graft_hamming64"
-}
-
-/** 64-bit rolling document fingerprint: `graft_fingerprint64(text)`. */
-case class GraftFingerprint64(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    TextKernels.fingerprint64(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.TextKernels.fingerprint64($c)")
-  override protected def withNewChildInternal(newChild: Expression): GraftFingerprint64 =
-    copy(child = newChild)
-  override def prettyName: String = "graft_fingerprint64"
-}
-
-/** Mojibake repair: `graft_demojibake(text)` — UTF-8-decoded-as-Latin-1
-  * corruption fixed by the shared pure-byte-view / strict-UTF-8 rule
-  * (TextOps.demojibake; Pdf.text re-decodes through the SAME function).
-  * Total; ASCII, real Unicode, and genuine Latin-1 pass through. */
-case class GraftDemojibake(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    TextKernels.demojibake(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.TextKernels.demojibake($c)")
-  override protected def withNewChildInternal(newChild: Expression): GraftDemojibake =
-    copy(child = newChild)
-  override def prettyName: String = "graft_demojibake"
-}
-
-/** Unicode NFC normalization: `graft_nfc(text)` — the canonical-form
-  * pass a text pipeline runs before dedup keys / tokenization so that
-  * "é" and "e"+U+0301 hash identically. JDK Normalizer (Unicode
-  * canonical composition — a SPEC-stable algorithm: the normalization
-  * stability policy freezes the result for every assigned codepoint,
-  * which is what lets a DuckDB utf8proc oracle replay it; codepoints
-  * unassigned in one engine's Unicode version are the documented
-  * caveat, so oracle constructions pin assigned-everywhere cases).
-  * isNormalized fast path: ASCII and already-NFC text (the common
-  * case at corpus scale) never allocates. */
-case class GraftNfc(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    TextKernels.nfc(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.TextKernels.nfc($c)")
-  override protected def withNewChildInternal(newChild: Expression): GraftNfc =
-    copy(child = newChild)
-  override def prettyName: String = "graft_nfc"
-}
-
-/** Gopher-family repetition signals: `graft_repetition(text)` →
-  * struct of 10 ints (duplicate line/paragraph counts + chars, top
-  * 2/3/4-gram char mass) — ONE text pass per row; the caller derives
-  * the drop fractions. Definitions + oracle notes: TextOps.repetition. */
-case class GraftRepetition(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = TextKernels.repetitionStructType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    TextKernels.repetition(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.TextKernels.repetition($c)")
-  override protected def withNewChildInternal(newChild: Expression): GraftRepetition =
-    copy(child = newChild)
-  override def prettyName: String = "graft_repetition"
-}
-
-/** Single-eval repetition gate:
-  * `graft_repetition_ok(text, a, b, c)` ⇔ `dup_lines·a <= lines·b AND
-  * top2_chars·c <= token_chars` — the integer cross-multiplied Gopher
-  * caps in ONE kernel invocation. Filtering on getFields of the
-  * graft_repetition struct re-evaluates the kernel per field access
-  * once the filter predicates collapse (measured 6.6 evals/row in the
-  * q_clean_pipeline shape; projection access stays at 1 — q_repetition
-  * is fine). Counter-pinned in PlanSpec via repetitionEvals. */
-case class GraftRepetitionOk(child: Expression, a: Int, b: Int, c: Int)
-    extends UnaryExpression {
-  require(a >= 1 && b >= 0 && c >= 1, s"bad repetition caps: $a $b $c")
-  override def dataType: DataType = BooleanType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    TextKernels.repetitionOk(input.asInstanceOf[UTF8String], a, b, c)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t =>
-      s"graft.spark.TextKernels.repetitionOk($t, $a, $b, $c)")
-  override protected def withNewChildInternal(newChild: Expression): GraftRepetitionOk =
-    copy(child = newChild)
-  override def prettyName: String = "graft_repetition_ok"
-}
-
-/** CCNet-style LM familiarity: `graft_lm_score(text)` →
-  * struct(lm_score BIGINT, n_trigrams INT) — the in-domain char-trigram
-  * count model of graft.ops.LmModel in ONE stream pass per row; callers
-  * derive the drop rule (mean level) by integer cross-multiplication
-  * in the projection. */
-case class GraftLmScore(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = TextKernels.lmScoreStructType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    TextKernels.lmScore(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.TextKernels.lmScore($c)")
-  override protected def withNewChildInternal(newChild: Expression): GraftLmScore =
-    copy(child = newChild)
-  override def prettyName: String = "graft_lm_score"
-}
-
-/** C4/Gopher filter battery: `graft_c4_rules(text)` → struct of 9
-  * ints (terminal-punctuation / bullet / ellipsis line counts,
-  * alpha-word and stop-word token counts, lorem/brace page flags) —
-  * ONE text pass per row; callers derive the published drop rules by
-  * integer cross-multiplication in the PROJECTION (filtering on the
-  * struct's getFields would re-eval the kernel — the
-  * graft_repetition_ok lesson). Definitions: TextOps.c4Rules. */
-case class GraftC4Rules(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = TextKernels.c4RulesStructType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    TextKernels.c4Rules(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.TextKernels.c4Rules($c)")
-  override protected def withNewChildInternal(newChild: Expression): GraftC4Rules =
-    copy(child = newChild)
-  override def prettyName: String = "graft_c4_rules"
-}
-
-/** Real BPE token count: `graft_bpe_count(text)` — true iterative
-  * byte-pair encoding over the in-repo trained merge table
-  * (graft.ops.Bpe), one count per row inside codegen. */
-case class GraftBpeCount(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = IntegerType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    TextKernels.bpeCount(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.TextKernels.bpeCount($c)")
-  override protected def withNewChildInternal(newChild: Expression): GraftBpeCount =
-    copy(child = newChild)
-  override def prettyName: String = "graft_bpe_count"
-}
-
-/** Scalar trained-model score: `graft_quality_score(text)` → BIGINT —
-  * the FILTER-side twin of graft_quality_model (single predicate eval;
-  * never filter on the struct's getFields). */
-case class GraftQualityScore(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    TextKernels.qualityScore(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.TextKernels.qualityScore($c)")
-  override protected def withNewChildInternal(newChild: Expression): GraftQualityScore =
-    copy(child = newChild)
-  override def prettyName: String = "graft_quality_score"
-}
-
-/** BPE token sequence: `graft_bpe_tokens(text)` — the space-joined
-  * token stream (true iterative BPE, same trained table as the count),
-  * the surface a training pipeline feeds to packing. */
-case class GraftBpeTokens(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    TextKernels.bpeTokens(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.TextKernels.bpeTokens($c)")
-  override protected def withNewChildInternal(newChild: Expression): GraftBpeTokens =
-    copy(child = newChild)
-  override def prettyName: String = "graft_bpe_tokens"
-}
-
-/** Trained quality classifier: `graft_quality_model(text)` → struct
-  * (score BIGINT, n_bigrams INT) — the 256-bucket hashed-bigram integer
-  * perceptron trained at class load (graft.ops.QualityModel), one
-  * tokenization pass per row inside codegen. Consume via PROJECTION
-  * only (the graft_repetition struct-filter lesson); gate with
-  * `score > 0` on the projected column. */
-case class GraftQualityModel(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = TextKernels.qualityModelStructType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    TextKernels.qualityModel(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.TextKernels.qualityModel($c)")
-  override protected def withNewChildInternal(newChild: Expression): GraftQualityModel =
-    copy(child = newChild)
-  override def prettyName: String = "graft_quality_model"
-}
-
-/** Marker-heuristic language id: `graft_lang_id(text)`. */
-case class GraftLangId(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    TextKernels.langId(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.TextKernels.langId($c)")
-  override protected def withNewChildInternal(newChild: Expression): GraftLangId =
-    copy(child = newChild)
-  override def prettyName: String = "graft_lang_id"
 }

@@ -1,8 +1,6 @@
 package graft.spark
 
-import org.apache.spark.sql.catalyst.expressions.UnaryExpression
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import scala.util.control.NonFatal
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
@@ -51,10 +49,10 @@ object WarcUdfs {
   /** Multi-member gzip inflate with a bomb cap; null on corrupt/capped.
     * (java.util.zip.GZIPInputStream consumes concatenated members — the
     * per-record-gzipped layout real WARC writers emit.) */
-  private def gunzip(b: Array[Byte]): Array[Byte] =
+  private def gunzip(b: Array[Byte]): Array[Byte] = {
+    var in: java.util.zip.GZIPInputStream = null
     try {
-      val in = new java.util.zip.GZIPInputStream(
-        new java.io.ByteArrayInputStream(b))
+      in = new java.util.zip.GZIPInputStream(new java.io.ByteArrayInputStream(b))
       val out = new java.io.ByteArrayOutputStream(math.min(b.length * 4, 1 << 20))
       val buf = new Array[Byte](8192)
       var n = in.read(buf)
@@ -64,7 +62,9 @@ object WarcUdfs {
         n = in.read(buf)
       }
       out.toByteArray
-    } catch { case _: Throwable => null }
+    } catch { case NonFatal(_) => null }
+    finally if (in != null) in.close() // releases the native Inflater
+  }
 
   private def indexOfWarc(b: Array[Byte], from: Int): Int = {
     var i = math.max(from, 0)
@@ -286,7 +286,7 @@ object WarcUdfs {
       }
       new GenericArrayData(out.toArray)
     } catch {
-      case _: Throwable => new GenericArrayData(Array.empty[Any])
+      case NonFatal(_) => new GenericArrayData(Array.empty[Any])
     }
 
   def splitRecords(blob0: Array[Byte]): ArrayData =
@@ -338,7 +338,7 @@ object WarcUdfs {
       }
       new GenericArrayData(out.toArray)
     } catch {
-      case _: Throwable => new GenericArrayData(Array.empty[Any])
+      case NonFatal(_) => new GenericArrayData(Array.empty[Any])
     }
 
   private def md5HexStr(s: String): String = {
@@ -452,29 +452,8 @@ object WarcUdfs {
   }
 }
 
-/** `graft_robots_allows(robots_txt, agent, path)` → may the agent
-  * fetch the path? RFC 9309 longest-match evaluation — see
-  * [[graft.ops.Robots.allows]] for group selection, wildcard/anchor
-  * semantics, and tie-breaks. */
-case class GraftRobotsAllows(first: Expression, second: Expression,
-                             third: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.TernaryExpression {
-  override def dataType: DataType = BooleanType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(r: Any, a: Any, p: Any): Any =
-    graft.ops.Robots.allows(r.asInstanceOf[UTF8String].toString,
-      a.asInstanceOf[UTF8String].toString, p.asInstanceOf[UTF8String].toString)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (r, a, p) =>
-      s"graft.ops.Robots.allows($r.toString(), $a.toString(), $p.toString())")
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression,
-      newThird: Expression): GraftRobotsAllows =
-    copy(first = newFirst, second = newSecond, third = newThird)
-  override def prettyName: String = "graft_robots_allows"
-}
-
-/** Static shape for [[GraftRobotsMeta]] (codegen calls it directly). */
+/** UTF8String adapters for the robots.txt kernels (graft_robots_allows,
+  * graft_robots_meta); codegen calls them directly. */
 object RobotsMetaUdf {
   val structType: StructType = StructType(Seq(
     StructField("sitemaps", ArrayType(StringType, containsNull = false),
@@ -482,6 +461,16 @@ object RobotsMetaUdf {
     StructField("crawl_delay", StringType, nullable = true)
   ))
 
+  /** May the agent fetch the path? RFC 9309 longest-match evaluation —
+    * see [[graft.ops.Robots.allows]] for group selection, wildcard/anchor
+    * semantics, and tie-breaks. */
+  def allows(robots: UTF8String, agent: UTF8String, path: UTF8String): Boolean =
+    graft.ops.Robots.allows(robots.toString, agent.toString, path.toString)
+
+  /** struct(sitemaps array<string>, crawl_delay string): the non-rule
+    * directives a frontier consumes (see [[graft.ops.Robots.meta]]:
+    * Sitemap values in file order, group-scoped Crawl-delay, null when
+    * absent). */
   def meta(robots: UTF8String, agent: UTF8String): InternalRow = {
     val (sitemaps, delay) =
       graft.ops.Robots.meta(robots.toString, agent.toString)
@@ -489,93 +478,4 @@ object RobotsMetaUdf {
       new GenericArrayData(sitemaps.map(UTF8String.fromString).toArray[Any]),
       if (delay == null) null else UTF8String.fromString(delay))
   }
-}
-
-/** `graft_robots_meta(robots_txt, agent)` → struct(sitemaps
-  * array<string>, crawl_delay string) — the non-rule directives a
-  * frontier consumes (see [[graft.ops.Robots.meta]]: Sitemap values in
-  * file order, group-scoped Crawl-delay, null when absent). */
-case class GraftRobotsMeta(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  override def dataType: DataType = RobotsMetaUdf.structType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(r: Any, a: Any): Any =
-    RobotsMetaUdf.meta(r.asInstanceOf[UTF8String], a.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (r, a) => s"graft.spark.RobotsMetaUdf.meta($r, $a)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): GraftRobotsMeta =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "graft_robots_meta"
-}
-
-/** `graft_warc_records(blob)` → array of parsed WARC records (see
-  * [[WarcUdfs.splitRecords]] for the framing + totality contract). */
-case class GraftWarcRecords(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = WarcUdfs.recordArrayType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    WarcUdfs.splitRecords(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.WarcUdfs.splitRecords($c)")
-  override protected def withNewChildInternal(newChild: Expression): GraftWarcRecords =
-    copy(child = newChild)
-  override def prettyName: String = "graft_warc_records"
-}
-
-/** CDX-style archive index: `graft_warc_index(blob)` → array of
-  * (idx, rec_offset, rec_len, warc_type, payload_digest, ok) over the
-  * decompressed blob — the seek/dedup/integrity index step for WARC
-  * corpora at scale (see WarcUdfs.indexRecords). */
-case class GraftWarcIndex(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = WarcUdfs.indexArrayType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    WarcUdfs.indexRecords(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.WarcUdfs.indexRecords($c)")
-  override protected def withNewChildInternal(newChild: Expression): GraftWarcIndex =
-    copy(child = newChild)
-  override def prettyName: String = "graft_warc_index"
-}
-
-/** `graft_warc_compose(uri, date, body)` → one WARC/1.0 response record
-  * as a string — see [[WarcUdfs.compose]] for the framing/digest/
-  * deterministic-record-id contract. Round-trips through
-  * `graft_warc_records(encode(..., 'UTF-8'))`. */
-case class GraftWarcCompose(first: Expression, second: Expression,
-                            third: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.TernaryExpression {
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(u: Any, d: Any, b: Any): Any =
-    WarcUdfs.compose(u.asInstanceOf[UTF8String], d.asInstanceOf[UTF8String],
-      b.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (u, d, b) => s"graft.spark.WarcUdfs.compose($u, $d, $b)")
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression, newThird: Expression): GraftWarcCompose =
-    copy(first = newFirst, second = newSecond, third = newThird)
-  override def prettyName: String = "graft_warc_compose"
-}
-
-/** `graft_warc_compose_wet(uri, date, refers_to, text)` → one WET
-  * conversion record string (see [[WarcUdfs.composeWet]]). */
-case class GraftWarcComposeWet(first: Expression, second: Expression,
-                               third: Expression, fourth: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.QuaternaryExpression {
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(u: Any, d: Any, r: Any, t: Any): Any =
-    WarcUdfs.composeWet(u.asInstanceOf[UTF8String], d.asInstanceOf[UTF8String],
-      r.asInstanceOf[UTF8String], t.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (u, d, r, t) =>
-      s"graft.spark.WarcUdfs.composeWet($u, $d, $r, $t)")
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression, newThird: Expression,
-      newFourth: Expression): GraftWarcComposeWet =
-    copy(first = newFirst, second = newSecond, third = newThird,
-      fourth = newFourth)
-  override def prettyName: String = "graft_warc_compose_wet"
 }
