@@ -4238,9 +4238,7 @@ object SparkEntry {
       val hashed0 = survivors
         .withColumn("h", coalesce(md5(TextNorm.lowerCol(
           TextNorm.trimCol(col("redacted")))), lit("")))
-      val hashed =
-        if (s.sparkContext.getCheckpointDir.isDefined) hashed0.checkpoint(true)
-        else hashed0.localCheckpoint(true)
+      val hashed = graft.ops.Snapshot(hashed0)
       val groups = hashed.groupBy("h").agg(
         min(col("doc_id")).as("keep_id"),
         count(lit(1)).cast("long").as("dup_count"))

@@ -45,6 +45,7 @@ object QuirksMode {
 final class TreeBuilder(scripting: Boolean = false,
                         arena: NodeArena = null) extends TokenSink {
   import Mode._
+  import TreeBuilder._
 
   // node allocation goes through the optional arena (parse→extract→
   // discard lifecycles recycle nodes wholesale — NodeArena doc); a null
@@ -125,15 +126,6 @@ final class TreeBuilder(scripting: Boolean = false,
   private var pendingTableRaw = -1
   private var pendingHasNonWs = false
 
-
-  // static guard sets — hoisted so token dispatch never allocates
-  private val inHeadNoscriptPass = Set("basefont", "bgsound", "link", "meta", "noframes", "style")
-  private val tableTextTags = Set("table", "tbody", "tfoot", "thead", "tr")
-  private val captionInterrupt = Set("caption", "col", "colgroup", "tbody", "td", "tfoot", "th", "thead", "tr")
-  private val captionIgnoreEnd = Set("body", "col", "colgroup", "html", "tbody", "td", "tfoot", "th", "thead", "tr")
-  private val cellIgnoreEnd = Set("body", "caption", "col", "colgroup", "html")
-  private val cellCloseEnd = Set("table", "tbody", "tfoot", "thead", "tr")
-  private val selectTableTags = Set("caption", "table", "tbody", "tfoot", "thead", "tr", "td", "th")
 
   private def currentNode: Node = if (stack.isEmpty) null else stack.last
 
@@ -727,49 +719,6 @@ final class TreeBuilder(scripting: Boolean = false,
   }
 
   // quirks-mode determination (reference rules.c:85-139; spec tables)
-  private val quirksPublicPrefixes: Array[String] = Array(
-    "+//silmaril//dtd html pro v0r11 19970101//",
-    "-//as//dtd html 3.0 aswedit + extensions//",
-    "-//advasoft ltd//dtd html 3.0 aswedit + extensions//",
-    "-//ietf//dtd html 2.0 level 1//", "-//ietf//dtd html 2.0 level 2//",
-    "-//ietf//dtd html 2.0 strict level 1//",
-    "-//ietf//dtd html 2.0 strict level 2//", "-//ietf//dtd html 2.0 strict//",
-    "-//ietf//dtd html 2.0//", "-//ietf//dtd html 2.1e//",
-    "-//ietf//dtd html 3.0//", "-//ietf//dtd html 3.2 final//",
-    "-//ietf//dtd html 3.2//", "-//ietf//dtd html 3//",
-    "-//ietf//dtd html level 0//", "-//ietf//dtd html level 1//",
-    "-//ietf//dtd html level 2//", "-//ietf//dtd html level 3//",
-    "-//ietf//dtd html strict level 0//", "-//ietf//dtd html strict level 1//",
-    "-//ietf//dtd html strict level 2//", "-//ietf//dtd html strict level 3//",
-    "-//ietf//dtd html strict//", "-//ietf//dtd html//",
-    "-//metrius//dtd metrius presentational//",
-    "-//microsoft//dtd internet explorer 2.0 html strict//",
-    "-//microsoft//dtd internet explorer 2.0 html//",
-    "-//microsoft//dtd internet explorer 2.0 tables//",
-    "-//microsoft//dtd internet explorer 3.0 html strict//",
-    "-//microsoft//dtd internet explorer 3.0 html//",
-    "-//microsoft//dtd internet explorer 3.0 tables//",
-    "-//netscape comm. corp.//dtd html//",
-    "-//netscape comm. corp.//dtd strict html//",
-    "-//o'reilly and associates//dtd html 2.0//",
-    "-//o'reilly and associates//dtd html extended 1.0//",
-    "-//o'reilly and associates//dtd html extended relaxed 1.0//",
-    "-//sq//dtd html 2.0 hotmetal + extensions//",
-    "-//softquad software//dtd hotmetal pro 6.0::19990601::extensions to html 4.0//",
-    "-//softquad//dtd hotmetal pro 4.0::19971010::extensions to html 4.0//",
-    "-//spyglass//dtd html 2.0 extended//",
-    "-//sun microsystems corp.//dtd hotjava html//",
-    "-//sun microsystems corp.//dtd hotjava strict html//",
-    "-//w3c//dtd html 3 1995-03-24//", "-//w3c//dtd html 3.2 draft//",
-    "-//w3c//dtd html 3.2 final//", "-//w3c//dtd html 3.2//",
-    "-//w3c//dtd html 3.2s draft//", "-//w3c//dtd html 4.0 frameset//",
-    "-//w3c//dtd html 4.0 transitional//",
-    "-//w3c//dtd html experimental 19960712//",
-    "-//w3c//dtd html experimental 970421//", "-//w3c//dtd w3 html//",
-    "-//w3o//dtd w3 html 3.0//", "-//webtechs//dtd mozilla html 2.0//",
-    "-//webtechs//dtd mozilla html//"
-  )
-
   private def determineQuirks(d: DoctypeTok): Int = {
     val name = if (d.name == null) "" else d.name
     val pub = if (d.publicId == null) "" else d.publicId.toLowerCase
@@ -1826,14 +1775,6 @@ final class TreeBuilder(scripting: Boolean = false,
 
   // ---------------------------------------------------- foreign content
 
-  private val breakoutTags: Set[String] = Set(
-    "b", "big", "blockquote", "body", "br", "center", "code", "dd", "div",
-    "dl", "dt", "em", "embed", "h1", "h2", "h3", "h4", "h5", "h6", "head",
-    "hr", "i", "img", "li", "listing", "menu", "meta", "nobr", "ol", "p",
-    "pre", "ruby", "s", "small", "span", "strong", "strike", "sub", "sup",
-    "table", "tt", "u", "ul", "var"
-  )
-
   /** Pop to an HTML node / integration point, then reprocess
     * (reference rules.c:3652 breakout handling). */
   private def foreignBreakout(tok: Token): Unit = {
@@ -1939,6 +1880,72 @@ final class TreeBuilder(scripting: Boolean = false,
       }
     case EofTok => processMode(mode, tok)
   }
+}
+
+/** The builder's constant tables, built once per JVM: per-document
+  * instances would rebuild them for every row. */
+private object TreeBuilder {
+  // guard sets of the insertion modes
+  private val inHeadNoscriptPass = Set("basefont", "bgsound", "link", "meta", "noframes", "style")
+  private val tableTextTags = Set("table", "tbody", "tfoot", "thead", "tr")
+  private val captionInterrupt = Set("caption", "col", "colgroup", "tbody", "td", "tfoot", "th", "thead", "tr")
+  private val captionIgnoreEnd = Set("body", "col", "colgroup", "html", "tbody", "td", "tfoot", "th", "thead", "tr")
+  private val cellIgnoreEnd = Set("body", "caption", "col", "colgroup", "html")
+  private val cellCloseEnd = Set("table", "tbody", "tfoot", "thead", "tr")
+  private val selectTableTags = Set("caption", "table", "tbody", "tfoot", "thead", "tr", "td", "th")
+
+  // quirks-mode public-id prefixes (reference rules.c:85-139; spec tables)
+  private val quirksPublicPrefixes: Array[String] = Array(
+    "+//silmaril//dtd html pro v0r11 19970101//",
+    "-//as//dtd html 3.0 aswedit + extensions//",
+    "-//advasoft ltd//dtd html 3.0 aswedit + extensions//",
+    "-//ietf//dtd html 2.0 level 1//", "-//ietf//dtd html 2.0 level 2//",
+    "-//ietf//dtd html 2.0 strict level 1//",
+    "-//ietf//dtd html 2.0 strict level 2//", "-//ietf//dtd html 2.0 strict//",
+    "-//ietf//dtd html 2.0//", "-//ietf//dtd html 2.1e//",
+    "-//ietf//dtd html 3.0//", "-//ietf//dtd html 3.2 final//",
+    "-//ietf//dtd html 3.2//", "-//ietf//dtd html 3//",
+    "-//ietf//dtd html level 0//", "-//ietf//dtd html level 1//",
+    "-//ietf//dtd html level 2//", "-//ietf//dtd html level 3//",
+    "-//ietf//dtd html strict level 0//", "-//ietf//dtd html strict level 1//",
+    "-//ietf//dtd html strict level 2//", "-//ietf//dtd html strict level 3//",
+    "-//ietf//dtd html strict//", "-//ietf//dtd html//",
+    "-//metrius//dtd metrius presentational//",
+    "-//microsoft//dtd internet explorer 2.0 html strict//",
+    "-//microsoft//dtd internet explorer 2.0 html//",
+    "-//microsoft//dtd internet explorer 2.0 tables//",
+    "-//microsoft//dtd internet explorer 3.0 html strict//",
+    "-//microsoft//dtd internet explorer 3.0 html//",
+    "-//microsoft//dtd internet explorer 3.0 tables//",
+    "-//netscape comm. corp.//dtd html//",
+    "-//netscape comm. corp.//dtd strict html//",
+    "-//o'reilly and associates//dtd html 2.0//",
+    "-//o'reilly and associates//dtd html extended 1.0//",
+    "-//o'reilly and associates//dtd html extended relaxed 1.0//",
+    "-//sq//dtd html 2.0 hotmetal + extensions//",
+    "-//softquad software//dtd hotmetal pro 6.0::19990601::extensions to html 4.0//",
+    "-//softquad//dtd hotmetal pro 4.0::19971010::extensions to html 4.0//",
+    "-//spyglass//dtd html 2.0 extended//",
+    "-//sun microsystems corp.//dtd hotjava html//",
+    "-//sun microsystems corp.//dtd hotjava strict html//",
+    "-//w3c//dtd html 3 1995-03-24//", "-//w3c//dtd html 3.2 draft//",
+    "-//w3c//dtd html 3.2 final//", "-//w3c//dtd html 3.2//",
+    "-//w3c//dtd html 3.2s draft//", "-//w3c//dtd html 4.0 frameset//",
+    "-//w3c//dtd html 4.0 transitional//",
+    "-//w3c//dtd html experimental 19960712//",
+    "-//w3c//dtd html experimental 970421//", "-//w3c//dtd w3 html//",
+    "-//w3o//dtd w3 html 3.0//", "-//webtechs//dtd mozilla html 2.0//",
+    "-//webtechs//dtd mozilla html//"
+  )
+
+  // foreign-content breakout start tags
+  private val breakoutTags: Set[String] = Set(
+    "b", "big", "blockquote", "body", "br", "center", "code", "dd", "div",
+    "dl", "dt", "em", "embed", "h1", "h2", "h3", "h4", "h5", "h6", "head",
+    "hr", "i", "img", "li", "listing", "menu", "meta", "nobr", "ol", "p",
+    "pre", "ruby", "s", "small", "span", "strong", "strike", "sub", "sup",
+    "table", "tt", "u", "ul", "var"
+  )
 }
 
 /** Parser facade (reference entry: myhtml_parse, source/myhtml/myhtml.c:225-238;

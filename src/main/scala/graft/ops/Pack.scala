@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Concat-and-chunk sequence packing — the GPT-style training-example
@@ -18,9 +18,8 @@ import org.apache.spark.sql.functions._
   * then (a) per-partition token sums — `numPartitions` rows to the
   * driver, (b) prefix offsets broadcast back, (c) a narrow
   * per-partition running sum. The sorted snapshot is checkpointed so
-  * both passes read one materialization of the shuffle (reliable
-  * checkpoint when a dir is configured, localCheckpoint otherwise —
-  * the Dedup convention). The DuckDB oracle replays the naive window
+  * both passes read one materialization of the shuffle
+  * ([[Snapshot]]). The DuckDB oracle replays the naive window
   * formulation; ScaleGuardSpec pins partition-count invariance.
   *
   * Contract: ids must be unique and non-null (the global order is
@@ -82,9 +81,7 @@ object Pack {
       .sortWithinPartitions("id")
       .withColumn("pid", spark_partition_id())
       .as[(Long, Long, Int)]
-    val sorted: Dataset[(Long, Long, Int)] =
-      if (spark.sparkContext.getCheckpointDir.isDefined) sorted0.checkpoint(true)
-      else sorted0.localCheckpoint(true)
+    val sorted = Snapshot(sorted0)
     // pass 1: per-partition sums — at most `p` rows reach the driver
     val partSums: Map[Int, Long] = sorted
       .mapPartitions { it =>

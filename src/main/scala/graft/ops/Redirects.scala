@@ -23,8 +23,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape for 100 TB: each round is ONE equi-join of the map with
   * itself on the reached node (AQE-splittable, 3 narrow columns), plus
-  * a lineage-truncating checkpoint (the [[Dedup.clusters]] discipline —
-  * without it round k re-executes rounds 1..k-1). The final
+  * a lineage-truncating [[Snapshot]] (without it round k re-executes
+  * rounds 1..k-1). The final
   * cyclic test is one left semi-style join against the distinct source
   * set. Nothing collects to the driver; output is one row per edge.
   *
@@ -34,18 +34,13 @@ import org.apache.spark.sql.functions._
   * target never enters the walk. */
 object Redirects {
 
-  private def checkpointed(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-      df.checkpoint(true)
-    else df.localCheckpoint(true)
-
   /** (srcCol, dstCol) edges → (src, final, hops, cyclic); `final` and
     * `hops` are NULL on cyclic rows (a loop has no terminal). Chains
     * longer than `maxHops` are reported cyclic. */
   def resolve(edges: DataFrame, srcCol: String, dstCol: String,
               maxHops: Int = 64): DataFrame = {
     require(maxHops >= 1, s"maxHops must be >= 1; got $maxHops")
-    val e = checkpointed(
+    val e = Snapshot(
       edges.select(col(srcCol).cast("string").as("id"),
           col(dstCol).cast("string").as("tgt"))
         .filter(col("id").isNotNull && col("tgt").isNotNull))
@@ -59,7 +54,7 @@ object Redirects {
       // resolved walks (tgt has no entry in the map) ride through the
       // left join unchanged; live walks jump 2^r more hops and add the
       // jumped segment's exact step count
-      val ck = checkpointed(m.join(jump, m("tgt") === jump("jid"), "left")
+      val ck = Snapshot(m.join(jump, m("tgt") === jump("jid"), "left")
         .select(col("id"),
           coalesce(col("jtgt"), col("tgt")).as("tgt"),
           (col("steps") + coalesce(col("jsteps"), lit(0L))).as("steps"),
@@ -72,8 +67,7 @@ object Redirects {
       // CYCLE keeps moving every round (its reached node always has an
       // out-edge), so cyclic corpora still walk the full capped reach —
       // the cap semantics the oracle's bounded recursion replays are
-      // unchanged. The probe scans only the just-checkpointed frame
-      // (the Dedup.clusters convergence discipline).
+      // unchanged. The probe scans only the just-checkpointed frame.
       m = ck.select("id", "tgt", "steps")
       reach *= 2
       // GEOMETRIC probe schedule (reach 4, 16, 64, ...): round 1 almost

@@ -4,7 +4,7 @@ import graft.html._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
@@ -45,9 +45,9 @@ object HtmlUdfs {
     val rows = new Array[Any](spans.length)
     var i = 0
     spans.foreach { s =>
-      rows(i) = InternalRow(
+      rows(i) = new GenericInternalRow(Array[Any](
         UTF8String.fromString(s.kind), UTF8String.fromString(s.text),
-        UTF8String.fromString(s.media_ref), s.offset)
+        UTF8String.fromString(s.media_ref), s.offset))
       i += 1
     }
     new GenericArrayData(rows)
@@ -1297,21 +1297,21 @@ object HtmlUdfs {
                 try Extractor.extractHtml(text.toString)
                 catch { case NonFatal(_) => Seq.empty[graft.html.Span] }
               extracted.foreach { sp =>
-                out += InternalRow(UTF8String.fromString(sp.kind),
+                out += new GenericInternalRow(Array[Any](UTF8String.fromString(sp.kind),
                   UTF8String.fromString(sp.text),
-                  UTF8String.fromString(sp.media_ref), base + sp.offset)
+                  UTF8String.fromString(sp.media_ref), base + sp.offset))
               }
             }
           case "text" =>
             val text = row.getUTF8String(1)
             if (text != null && !graft.html.TextPrep.isWhitespaceOnly(text.toString))
-              out += InternalRow(UTF8String.fromString("text"), text.clone(),
-                UTF8String.EMPTY_UTF8, row.getInt(3))
+              out += new GenericInternalRow(Array[Any](UTF8String.fromString("text"),
+                text.clone(), UTF8String.EMPTY_UTF8, row.getInt(3)))
           case "media" =>
             val ref = row.getUTF8String(2)
             if (ref != null && ref.numBytes() > 0)
-              out += InternalRow(UTF8String.fromString("media"),
-                UTF8String.EMPTY_UTF8, ref.clone(), row.getInt(3))
+              out += new GenericInternalRow(Array[Any](UTF8String.fromString("media"),
+                UTF8String.EMPTY_UTF8, ref.clone(), row.getInt(3)))
           case _ =>
         }
       }

@@ -1,7 +1,5 @@
 package graft.spark
 
-import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.util.CollectionAccumulator
 import org.scalatest.funsuite.AnyFunSuite
 import scala.collection.mutable.ArrayBuffer
@@ -25,32 +23,6 @@ class LineageSpec extends AnyFunSuite {
     import spark.implicits._
     spark.read.parquet(dir).as[MetricsRow].collect().toSeq
       .sortBy(r => (r.batch_id, r.partition_id))
-  }
-
-  /** Spark jobs started by `f` on this thread, counted by a listener; a
-    * sentinel job after `f` flushes the asynchronous listener bus. */
-  private def jobsDuring(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val seen = new LinkedBlockingQueue[String]
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        seen.put(Option(j.properties).map(_.getProperty("spark.job.description", "")).getOrElse(""))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobDescription("lineage-under-test")
-      try f finally sc.setJobDescription("lineage-sentinel")
-      sc.parallelize(Seq(1), 1).count()
-      sc.setJobDescription(null)
-      var jobs = 0
-      var d = ""
-      while (d != "lineage-sentinel") {
-        d = seen.poll(60, TimeUnit.SECONDS)
-        assert(d != null, "the sentinel job never reached the listener")
-        if (d == "lineage-under-test") jobs += 1
-      }
-      jobs
-    } finally sc.removeSparkListener(listener)
   }
 
   test("Lineage.rows keeps one row per (batch_id, partition_id), the last one") {
@@ -90,7 +62,7 @@ class LineageSpec extends AnyFunSuite {
     sink.writeBatch(5, Pipeline.extractDataset(salted, cfg, 5, acc))
     assert(!sink.isBatchCommitted(5), "the data write alone must not commit the batch")
     val rows = Lineage.rows(acc)
-    assert(jobsDuring(sink.appendMetrics(spark, rows)) == 0)
+    assert(SparkTestSession.jobsDuring(sink.appendMetrics(spark, rows)) == 0)
     assert(sink.isBatchCommitted(5))
     assert(read(s"$base/metrics") == rows)
     assert(rows.map(_.docs_in).sum == 40)

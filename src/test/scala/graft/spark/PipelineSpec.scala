@@ -1,5 +1,7 @@
 package graft.spark
 
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -17,6 +19,32 @@ object SparkTestSession {
     s.sparkContext.setLogLevel("WARN")
     GraftFunctions.registerAll(s)
     s
+  }
+
+  /** Spark jobs started by `f` on this thread, counted by a listener; a
+    * sentinel job after `f` flushes the asynchronous listener bus. */
+  def jobsDuring(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val seen = new LinkedBlockingQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        seen.put(Option(j.properties).map(_.getProperty("spark.job.description", "")).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobDescription("jobs-under-test")
+      try f finally sc.setJobDescription("jobs-sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      sc.setJobDescription(null)
+      var jobs = 0
+      var d = ""
+      while (d != "jobs-sentinel") {
+        d = seen.poll(60, TimeUnit.SECONDS)
+        if (d == null) throw new AssertionError("the sentinel job never reached the listener")
+        if (d == "jobs-under-test") jobs += 1
+      }
+      jobs
+    } finally sc.removeSparkListener(listener)
   }
 }
 
