@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.spark.{CorpusGen, DocRow, Pipeline}
+import scala.util.control.NonFatal
 
 /** Benchmark main (driver contract): ONE JSON line with per-query
   * timings at local[cpus] plus the north_rule scaling evidence — the
@@ -54,7 +55,7 @@ object Bench {
     def stealJiffies(): Long =
       try scala.io.Source.fromFile("/proc/stat").getLines()
         .find(_.startsWith("cpu ")).map(_.trim.split("\\s+")(8).toLong).getOrElse(0L)
-      catch { case _: Throwable => 0L }
+      catch { case NonFatal(_) => 0L }
 
     // --- self-defending telemetry (VERDICT r3 #2): BENCH_r03 recorded a
     // contaminated window that took a judge re-run to exonerate. The
@@ -65,17 +66,17 @@ object Bench {
     // from the best-of-2 policy below.
     def loadavg1(): Double =
       try scala.io.Source.fromFile("/proc/loadavg").mkString.split("\\s+")(0).toDouble
-      catch { case _: Throwable => -1.0 }
+      catch { case NonFatal(_) => -1.0 }
     def selfJiffies(): Long =
       try {
         val f = scala.io.Source.fromFile("/proc/self/stat").mkString.split(" ")
         f(13).toLong + f(14).toLong // utime + stime
-      } catch { case _: Throwable => 0L }
+      } catch { case NonFatal(_) => 0L }
     def totalJiffies(): Long =
       try scala.io.Source.fromFile("/proc/stat").getLines()
         .find(_.startsWith("cpu ")).map(_.trim.split("\\s+").drop(1).map(_.toLong).sum)
         .getOrElse(0L)
-      catch { case _: Throwable => 0L }
+      catch { case NonFatal(_) => 0L }
     final class CpuPhase {
       private var s0 = 0L; private var t0 = 0L
       def start(): Unit = { s0 = selfJiffies(); t0 = totalJiffies() }
@@ -164,7 +165,7 @@ object Bench {
     val spark = session(cpus)
     // JVM warm-up (codegen + JIT), not timed
     try force(SparkEntry.queries("q_html_extract")(spark, sfDir))
-    catch { case _: Throwable => }
+    catch { case NonFatal(_) => }
     val pipeCfg = Pipeline.Config(partitions = cpus * 2, giantBuckets = math.max(cpus / 4, 1))
     def pipelineRun(): Double = {
       val out = Pipeline.extractColumnar(spark.read.parquet(corpusPath), pipeCfg)
@@ -228,7 +229,7 @@ object Bench {
       def once(): Double = {
         val t0 = System.nanoTime()
         try run()
-        catch { case e: Throwable => System.err.println(s"[bench] $name: ${e.getMessage}") }
+        catch { case NonFatal(e) => System.err.println(s"[bench] $name: ${e.getMessage}") }
         (System.nanoTime() - t0) / 1e9
       }
       val first = once()

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Round-8 optimization-round measurement harness (guide §1.4): times
   * individual declared queries in isolation with the noop sink (so the
@@ -45,13 +46,13 @@ object BenchExtra {
       case "time" :: reps :: qs :: Nil =>
         val names = qs.split(',').toSeq
         // JVM/codegen warm-up on the first query, untimed
-        try force(names.head) catch { case _: Throwable => }
+        try force(names.head) catch { case NonFatal(_) => }
         // interleave rounds so every query sees the same weather
         val r = reps.toInt
         val times = scala.collection.mutable.Map[String, List[Double]]()
           .withDefaultValue(Nil)
         for (_ <- 0 until r; n <- names) {
-          val t = try force(n) catch { case e: Throwable =>
+          val t = try force(n) catch { case NonFatal(e) =>
             System.err.println(s"[extra] $n: ${e.getMessage}"); Double.NaN }
           times(n) = t :: times(n)
         }
@@ -116,10 +117,10 @@ object BenchExtra {
             }
           })
         val names = qs.split(',').toSeq
-        try force(names.head) catch { case _: Throwable => }
+        try force(names.head) catch { case NonFatal(_) => }
         for (n <- names) {
           jobs.set(0); stages.set(0); tasks.set(0)
-          val t = try force(n) catch { case e: Throwable =>
+          val t = try force(n) catch { case NonFatal(e) =>
             System.err.println(s"[extra] $n: ${e.getMessage}"); Double.NaN }
           // listener is async; give the queue a moment to drain
           Thread.sleep(300)
@@ -136,7 +137,7 @@ object BenchExtra {
             val f = new java.io.PrintWriter(new java.io.File(outDir, s"${n}_$suffix.txt"))
             try f.write(txt) finally f.close()
             println(s"wrote plans/r08/${n}_$suffix.txt (${txt.length} chars)")
-          } catch { case e: Throwable =>
+          } catch { case NonFatal(e) =>
             System.err.println(s"[extra] $n explain: ${e.getMessage}") }
         }
       case other =>

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** One-off scale probe (round 7, VERDICT r6 #7): run a query suite at
   * two scale factors in the SAME session and report the wall-clock
@@ -17,63 +18,8 @@ import org.apache.spark.sql.SparkSession
   */
 object ScaleProbe {
 
-  val suite: Seq[String] = Seq(
-    // full-corpus dedup/pack/text — should track the row factor
-    "q_dedup_exact", "q_dedup_flags", "q_dedup_clusters", "q_dedup_keep_best",
-    "q_line_dedup", "q_decontam", "q_pack", "q_pack_examples",
-    "q_quality_model", "q_token_count", "q_repetition", "q_html_node_table",
-    "q_mixture", "q_pack_interleaved", "q_html_markdown",
-    "q_c4_gopher", "q_lm_score", "q_lm_buckets",
-    "q_link_graph", "q_dedup_incremental",
-    "q_html_density", "q_substr_remove", "q_ccnet_pipeline", "q_warc_wet",
-    "q_training_shard", "q_crawl_policy",
-    "q_sessions", "q_stream_sessions", "q_events_funnel", "q_domain_report",
-    "q_para_dedup", "q_domain_cap", "q_chunks", "q_stream_warc_segments",
-    "q_snapshot_diff", "q_inverted_index", "q_domain_boilerplate",
-    "q_redirects", "q_anchor_text", "q_sitemap", "q_crawl_frontier",
-    "q_image_webp", "q_feed", "q_caption_pairs", "q_jsonl", "q_robots_meta",
-    "q_pub_date", "q_editdist_verify", "q_audio_mp3", "q_subtitles",
-    "q_recrawl_priority", "q_shard_manifest", "q_sections", "q_table_csv",
-    "q_page_history", "q_canonical_dedup", "q_stream_cdc", "q_hreflang", "q_discovery_chain",
-    "q_image_exif", "q_image_blockhash", "q_og_caption", "q_wet_sections",
-    "q_parallel_pairs", "q_asr_pairs", "q_bm25", "q_split", "q_host_rank",
-    "q_fetch_schedule", "q_stream_semdedup", "q_sitemap_index",
-    "q_bm25_multi", "q_domain_quality", "q_segment_manifest",
-    "q_html_outline", "q_cdc_chunks", "q_dom_stats", "q_wat_manifest",
-    "q_lang_mix", "q_stream_fetch_schedule", "q_stream_semdedup_ttl",
-    "q_noindex", "q_jsonld", "q_shuffle_shards", "q_nfc", "q_recrawl_rank",
-    "q_image_dedup", "q_diversity", "q_oov_rate", "q_demojibake",
-    "q_quality_calib", "q_embed_decontam",
-    "q_span_audit", "q_index_delta", "q_warc_dedup", "q_table_types",
-    "q_url_bitext", "q_badwords", "q_readability", "q_datasheet", "q_dom_diff", "q_hits", "q_image_pii", "q_table_grid", "q_gps", "q_density_blocks", "q_dedup_nfc",
-    // planted-corpus dedup (fixed 100-doc md5 corpus) — expected ~flat
-    "q_minhash_dedup", "q_cjk_dedup", "q_simhash_dedup", "q_ngram_jaccard",
-    "q_substr_dedup", "q_fuzzy_dedup", "q_fuzzy_dedup_v2", "q_semdedup",
-    "q_dedup_eval",
-    // ANN over embeddings
-    "q_ann_self", "q_ann_topk", "q_ann_i8", "q_ann_lsh", "q_ann_ivf",
-    "q_ann_pq", "q_ann_pqr", "q_embed_neardup", "q_embed_norm", "q_ann_hnsw",
-    "q_ann_ivf_hnsw", "q_ann_hnsw_i8",
-    // round-8 completion (VERDICT r7 #1): the remaining never-probed
-    // queries — per-row HTML/WARC/PDF/URL kernel families (expected
-    // near-linear), small planted/graded corpora (expected flat), and
-    // the bounded streaming drains (fixed constructions at every SF —
-    // expected flat; kept in-suite so the census is the full 186)
-    "q_ann_graded", "q_ann_opq", "q_audio_headers", "q_budget_select",
-    "q_charset_sniff", "q_clean_pipeline", "q_clean_pipeline_v2",
-    "q_corpus_report", "q_embed_graded", "q_fingerprint", "q_html_attrs",
-    "q_html_boiler", "q_html_entities", "q_html_extract", "q_html_foster",
-    "q_html_fragment", "q_html_links", "q_html_media", "q_html_meta",
-    "q_html_misnest", "q_html_nodes", "q_html_pre", "q_html_quirks",
-    "q_html_rcdata", "q_html_script_skip", "q_html_serialize",
-    "q_html_tables", "q_html_tokens", "q_lang_id", "q_len_hist",
-    "q_multimodal_real", "q_multimodal_stub", "q_pdf_cmap", "q_pdf_extract",
-    "q_pii", "q_pipeline_e2e", "q_quality", "q_robots", "q_sample",
-    "q_sentences", "q_sketch_cms", "q_sketch_hll", "q_stream_dedup",
-    "q_stream_dedup_ttl", "q_stream_warc", "q_stream_window", "q_terms",
-    "q_text_stats", "q_token_ids", "q_url_filter", "q_url_normalize",
-    "q_url_psl", "q_video_headers", "q_warc", "q_warc_charset",
-    "q_warc_compose", "q_warc_extract", "q_warc_index")
+  /** Every query, so a new one cannot miss the probe. */
+  val suite: Seq[String] = SparkEntry.queries.keys.toSeq.sorted
 
   def main(args: Array[String]): Unit = {
     val dirA = args(0)
@@ -97,7 +43,7 @@ object ScaleProbe {
       val t0 = System.nanoTime()
       try SparkEntry.queries(name)(spark, dir)
         .write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[probe] $name@$dir: ${e.getMessage}") }
       (System.nanoTime() - t0) / 1e9
     }

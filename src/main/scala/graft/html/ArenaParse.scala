@@ -6,43 +6,30 @@ package graft.html
   * is recycled when `f` returns — it MUST NOT escape. Nested calls on
   * one thread are safe: each scope releases only to its own entry mark
   * (mark/restore), so an inner parse inside `f` cannot recycle the outer
-  * document's nodes. Kill switch for A/B and for embedding callers with
-  * exotic lifecycles: -Dgraft.extract.arena=false falls back to plain
-  * heap allocation. Measured: +15-19% extraction throughput at 32
+  * document's nodes. A caller that keeps the tree uses the heap parse,
+  * [[HtmlParser.parse]]. Measured: +15-19% extraction throughput at 32
   * threads; Node gone from the allocation profile (BASELINE.md
   * §node-arena). */
 object ArenaParse {
-  private val enabled =
-    java.lang.Boolean.parseBoolean(System.getProperty("graft.extract.arena", "true"))
   private val arenas: ThreadLocal[NodeArena] =
     ThreadLocal.withInitial(() => new NodeArena())
 
+  /** Runs `f` on this thread's arena, then releases it to the entry mark. */
+  private def scoped[T](f: NodeArena => T): T = {
+    val arena = arenas.get()
+    val m = arena.mark
+    try f(arena)
+    finally arena.releaseTo(m)
+  }
+
   def withDoc[T](html: String, scripting: Boolean = false)(f: Node => T): T =
-    if (!enabled) f(HtmlParser.parse(html, scripting))
-    else {
-      val arena = arenas.get()
-      val m = arena.mark
-      try f(HtmlParser.parse(html, scripting, arena))
-      finally arena.releaseTo(m)
-    }
+    scoped(a => f(HtmlParser.parse(html, scripting, a)))
 
   /** Like withDoc but also hands `f` the quirks verdict. */
   def withDocQuirks[T](html: String)(f: (Node, Int) => T): T =
-    if (!enabled) { val (d, q) = HtmlParser.parseWithQuirks(html); f(d, q) }
-    else {
-      val arena = arenas.get()
-      val m = arena.mark
-      try { val (d, q) = HtmlParser.parseWithQuirks(html, arena = arena); f(d, q) }
-      finally arena.releaseTo(m)
-    }
+    scoped { a => val (d, q) = HtmlParser.parseWithQuirks(html, arena = a); f(d, q) }
 
   def withFragment[T](html: String, contextTag: String,
                       contextNs: Int = Ns.HTML)(f: Node => T): T =
-    if (!enabled) f(HtmlParser.parseFragment(html, contextTag, contextNs))
-    else {
-      val arena = arenas.get()
-      val m = arena.mark
-      try f(HtmlParser.parseFragment(html, contextTag, contextNs, arena = arena))
-      finally arena.releaseTo(m)
-    }
+    scoped(a => f(HtmlParser.parseFragment(html, contextTag, contextNs, arena = a)))
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.spark.{DocRow, Lineage, MetricsRow, Pipeline}
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
 
 /** Structured-Streaming front end for the extraction pipeline.
   *
@@ -18,63 +18,151 @@ object StreamingExtract {
 
   val docSchema = Encoders.product[DocRow].schema
 
-  /** Poll a draining query to `expected` sink rows WITHOUT running a
-    * Spark job per poll (round 8): the old `spark.table(qname).count()`
-    * loop submitted a count job every 50 ms — tens of jobs of pure
-    * scheduler overhead per drain (measured: the poll jobs were the
-    * single largest cost of the TTL/append drains at gate scale, and
-    * at production scale they steal scheduler slots from the stream
-    * itself). Streaming progress events already carry the per-trigger
-    * sink row count (`progress.sink.numOutputRows`), so the poll reads
-    * DRIVER-LOCAL metadata; the caller re-verifies the final count with
-    * one real job after stop() (the authoritative check is unchanged).
-    * recentProgress is bounded (default 100 entries) and idle triggers
-    * only report every noDataProgressEventInterval, so the sum is safe
-    * for bounded drains; a sink that ever reported -1 would undercount
-    * and simply fall through to the deadline + final require. */
-  private def pollToCount(q: StreamingQuery, expected: Long,
-                          deadlineNanos: Long): Unit = {
-    def delivered(): Long =
-      q.recentProgress.iterator.map(p => math.max(p.sink.numOutputRows, 0L)).sum
-    while (delivered() < expected && System.nanoTime() < deadlineNanos)
-      Thread.sleep(50)
+  /** How a bounded memory-sink drain knows it is done. */
+  private sealed trait Stop
+  /** The query ends by itself (`Trigger.AvailableNow`). */
+  private case object AvailableNow extends Stop
+  /** Polled: one output row per written input row (the TTL drains). */
+  private case object OnePerInput extends Stop
+  /** Polled: the caller's count of output rows (append-mode windows,
+    * which flush on a no-data micro-batch AvailableNow cannot wait on). */
+  private final case class Rows(n: Long) extends Stop
+
+  /** Where a bounded drain's output goes. */
+  private sealed trait Sink
+  /** The memory sink, in `outputMode`, stopped by `stop`. */
+  private final case class Memory(outputMode: String, stop: Stop) extends Sink
+  /** foreachBatch: each micro-batch's output, tagged with its
+    * `batch_id`, appended to parquet; ends on AvailableNow. */
+  private case object PerBatchParquet extends Sink
+
+  /** ProcessingTimeTimeout makes shouldRunAnotherBatch always true, so a
+    * TTL drain never terminates under AvailableNow (and
+    * processAllAvailable never returns): it polls to one verdict per
+    * input row instead — update mode emits exactly one per row. */
+  private def ttlStop(stateTtlMs: Long): Stop =
+    if (stateTtlMs > 0) OnePerInput else AvailableNow
+
+  /** The one bounded-drain harness behind every `*Drain` below: it runs
+    * `transform` over `batches` as a real micro-batch stream and hands
+    * the result back as a plain, materialized DataFrame.
+    *
+    *  - Files: each frame becomes ONE parquet file whose mtime is
+    *    sequenced by its index, read with `maxFilesPerTrigger = 1`, so
+    *    every frame is its own micro-batch, in order. `ordered` drains
+    *    (the doc-order verdicts of dedup/semdedup/fetch, which read
+    *    within-batch arrival order) write one coalesce(1) job per frame;
+    *    order-free drains write every frame in one union +
+    *    partitionBy job, whose writer does not keep row order.
+    *  - Schema: the stream is read with `batches.head.schema`.
+    *  - Width: `spark.sql.shuffle.partitions` is 8 while the stream runs
+    *    (after the files are written) and restored afterwards. The
+    *    state-store instance count is pinned by the first run's width,
+    *    and a small drain at the session's full width is task overhead;
+    *    every transform here is width-invariant (set-semantics joins,
+    *    keyed state, Pack.concatChunk's pinned invariance).
+    *  - Stop: AvailableNow; or a ProcessingTime trigger polled until a
+    *    StreamingQueryListener on this query's name has seen the
+    *    expected sink rows (driver-side progress events, no Spark job
+    *    per poll and no bound on how many triggers are counted), then
+    *    one count job checks the table.
+    *  - Teardown: the result is localCheckpoint-ed; then the query and
+    *    listener stop, the width is restored, the memory table dropped
+    *    and the temp dir removed, on every path. */
+  private def boundedDrain(batches: Seq[DataFrame], ordered: Boolean, sink: Sink)
+                          (transform: DataFrame => DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.lit
+    val spark = batches.head.sparkSession
+    val width = "spark.sql.shuffle.partitions"
+    val prevWidth = spark.conf.get(width)
+    val base = java.nio.file.Files.createTempDirectory("graft-drain").toFile
+    val qname = "graft_drain_" + java.util.UUID.randomUUID.toString.replace("-", "")
+    val ck = new java.io.File(base, "ck").toString
+    var q: StreamingQuery = null
+    var listener: StreamingQueryListener = null
+    try {
+      val inDir = writeBatchFiles(batches, base, ordered)
+      spark.conf.set(width, "8")
+      val stream = spark.readStream.schema(batches.head.schema)
+        .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
+      sink match {
+        case PerBatchParquet =>
+          val outDir = new java.io.File(base, "out").toString
+          q = stream.writeStream.option("checkpointLocation", ck)
+            .trigger(Trigger.AvailableNow())
+            .foreachBatch { (b: DataFrame, batchId: Long) =>
+              transform(b).withColumn("batch_id", lit(batchId.toInt))
+                .write.mode("append").parquet(outDir)
+            }.start()
+          q.awaitTermination()
+          spark.read.parquet(outDir).localCheckpoint()
+        case Memory(outputMode, stop) =>
+          val writer = transform(stream).writeStream.format("memory")
+            .queryName(qname).outputMode(outputMode)
+            .option("checkpointLocation", ck)
+          if (stop == AvailableNow) {
+            q = writer.trigger(Trigger.AvailableNow()).start()
+            q.awaitTermination()
+          } else {
+            // the written files' footers give the input row count; the
+            // frames' own count would re-run their construction
+            val expected = stop match {
+              case Rows(n) => n
+              case _ => spark.read.parquet(inDir.toString).count()
+            }
+            val delivered = new java.util.concurrent.atomic.AtomicLong
+            listener = new StreamingQueryListener {
+              def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+              def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+              def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+                if (e.progress.name == qname)
+                  delivered.addAndGet(math.max(e.progress.sink.numOutputRows, 0L))
+            }
+            spark.streams.addListener(listener)
+            q = writer.trigger(Trigger.ProcessingTime("50 milliseconds")).start()
+            val deadline = System.nanoTime() + 120L * 1000000000L
+            while (delivered.get < expected && System.nanoTime() < deadline)
+              Thread.sleep(50)
+            q.stop()
+            val got = spark.table(qname).count()
+            require(got == expected, s"drain incomplete: $got of $expected rows")
+          }
+          spark.table(qname).localCheckpoint()
+      }
+    } finally {
+      if (q != null) q.stop()
+      if (listener != null) spark.streams.removeListener(listener)
+      spark.conf.set(width, prevWidth)
+      scala.util.Try(spark.catalog.dropTempView(qname))
+      org.apache.commons.io.FileUtils.deleteQuietly(base)
+    }
   }
 
-  /** Write the drain's mtime-sequenced batch files in ONE Spark job
-    * (round 8): the per-batch `coalesce(1).write` loop paid one job
-    * per batch; a single union + partitionBy("__b") write produces the
-    * same one-file-per-batch layout (partition columns are directory-
-    * encoded, so file schemas are unchanged). ORDER-FREE DRAINS ONLY —
-    * the dynamic-partition writer sorts by the partition column with
-    * no within-batch order guarantee, so the doc-order stateful drains
-    * (dedup/semdedup/fetch, whose verdicts read within-batch arrival
-    * order) keep their per-batch loop. An empty batch writes no
-    * partition directory and falls back to a direct write (batch
-    * indices must not shift). */
-  private def writeBatchFilesUnordered(batches: Seq[DataFrame],
-                                       base: java.io.File): java.io.File = {
-    import org.apache.spark.sql.functions._
+  /** Writes frame i to `base/in/b<i>.parquet` with mtime sequenced by i
+    * (the file source orders by modification time). The order-free
+    * union write leaves no partition directory for an empty frame,
+    * which then gets its own write, so batch indices never shift. */
+  private def writeBatchFiles(batches: Seq[DataFrame], base: java.io.File,
+                              ordered: Boolean): java.io.File = {
+    import org.apache.spark.sql.functions.lit
     val inDir = new java.io.File(base, "in")
     inDir.mkdirs()
     val stage = new java.io.File(base, "stage")
-    batches.zipWithIndex.map { case (b, i) => b.withColumn("__b", lit(i)) }
-      .reduce(_ unionByName _)
-      .coalesce(1).write.partitionBy("__b").mode("overwrite")
-      .parquet(stage.toString)
+    if (!ordered)
+      batches.zipWithIndex.map { case (b, i) => b.withColumn("__b", lit(i)) }
+        .reduce(_ unionByName _)
+        .coalesce(1).write.partitionBy("__b").mode("overwrite")
+        .parquet(stage.toString)
+    def parquetIn(dir: java.io.File): Option[java.io.File] =
+      Option(dir.listFiles()).flatMap(_.find(_.getName.endsWith(".parquet")))
     batches.zipWithIndex.foreach { case (b, i) =>
-      val pdir = new java.io.File(stage, s"__b=$i")
-      val src = Option(pdir.listFiles())
-        .flatMap(_.find(_.getName.endsWith(".parquet")))
-      val dst = new java.io.File(inDir, f"b$i%03d.parquet")
-      src match {
-        case Some(f) => java.nio.file.Files.move(f.toPath, dst.toPath)
-        case None => // empty batch: write it directly (rare path)
-          val part = new java.io.File(base, s"part$i")
-          b.coalesce(1).write.mode("overwrite").parquet(part.toString)
-          val pf = part.listFiles().find(_.getName.endsWith(".parquet"))
-            .getOrElse(sys.error(s"no parquet file written for batch $i"))
-          java.nio.file.Files.move(pf.toPath, dst.toPath)
+      val src = parquetIn(new java.io.File(stage, s"__b=$i")).getOrElse {
+        val part = new java.io.File(base, s"part$i")
+        b.coalesce(1).write.mode("overwrite").parquet(part.toString)
+        parquetIn(part).getOrElse(sys.error(s"no parquet file written for batch $i"))
       }
+      val dst = new java.io.File(inDir, f"b$i%03d.parquet")
+      java.nio.file.Files.move(src.toPath, dst.toPath)
       dst.setLastModified(1600000000000L + i * 600000L)
     }
     inDir
@@ -117,94 +205,24 @@ object StreamingExtract {
 
   /** Bounded micro-batch drain of `dedupVerdicts` for the DuckDB oracle
     * gate (VERDICT r3 #7 — the one shipped operator with no
-    * driver-visible oracle): each input frame becomes ONE ordered file
-    * (mtime-sequenced, maxFilesPerTrigger=1, AvailableNow), so the
-    * stateful dedup crosses a real micro-batch boundary, and the final
-    * memory-sink table comes back as a plain DataFrame the driver can
-    * hash against SQL. The verdict values are batch-split-INVARIANT by
-    * construction (copies_so_far/is_first depend only on global arrival
-    * order, which the caller makes equal to doc_id order), so the oracle
-    * replay is a plain window over the batch input. */
+    * driver-visible oracle): each input frame is one ordered micro-batch
+    * ([[boundedDrain]]), so the stateful dedup crosses a real
+    * micro-batch boundary, and the final memory-sink table comes back
+    * as a plain DataFrame the driver can hash against SQL. The verdict
+    * values are batch-split-INVARIANT by construction
+    * (copies_so_far/is_first depend only on global arrival order, which
+    * the caller makes equal to doc_id order), so the oracle replay is a
+    * plain window over the batch input. */
   def dedupVerdictsDrain(batches: Seq[DataFrame],
-                         statePartitions: Int = 8,
-                         stateTtlMs: Long = 0L): DataFrame = {
-    val spark = batches.head.sparkSession
-    import org.apache.spark.sql.types.{StructType, StructField, StringType}
-    val base = java.nio.file.Files.createTempDirectory("graft-stream-dedup")
-    val inDir = new java.io.File(base.toFile, "in")
-    inDir.mkdirs()
-    batches.zipWithIndex.foreach { case (b, i) =>
-      val part = new java.io.File(base.toFile, s"part$i")
-      b.coalesce(1).write.mode("overwrite").parquet(part.toString)
-      val src = part.listFiles().find(_.getName.endsWith(".parquet"))
-        .getOrElse(sys.error(s"no parquet file written for batch $i"))
-      val dst = new java.io.File(inDir, f"b$i%03d.parquet")
-      java.nio.file.Files.move(src.toPath, dst.toPath)
-      // file-source ordering is by modification time: sequence explicitly
-      dst.setLastModified(1600000000000L + i * 600000L)
+                         stateTtlMs: Long = 0L): DataFrame =
+    boundedDrain(batches, ordered = true, Memory("update", ttlStop(stateTtlMs))) { s =>
+      import s.sparkSession.implicits._
+      dedupVerdicts(s.as[(String, String)], stateTtlMs).toDF()
     }
-    import spark.implicits._
-    val schema = StructType(Seq(
-      StructField("doc_id", StringType), StructField("text", StringType)))
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
-    val verdicts = dedupVerdicts(stream.as[(String, String)], stateTtlMs)
-    val qname = "graft_stream_dedup_" +
-      java.util.UUID.randomUUID.toString.replace("-", "")
-    // state-store instance count is pinned by the FIRST run's shuffle
-    // partitions (checkpoint schema): size it to the drain, not the
-    // session — a bounded gate drain paying 32 state tasks × batches of
-    // pure overhead was ~40% of this operator's bench cost. Production
-    // callers size it to their key cardinality instead (statePartitions
-    // <= 0 inherits the session setting).
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      if (statePartitions > 0)
-        spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-      val writer = verdicts.writeStream.format("memory").queryName(qname)
-        .outputMode("update")
-        .option("checkpointLocation", new java.io.File(base.toFile, "ck").toString)
-      if (stateTtlMs <= 0) {
-        val q = writer.trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      } else {
-        // ProcessingTimeTimeout makes shouldRunAnotherBatch always true:
-        // an AvailableNow drain NEVER terminates (measured — it keeps
-        // constructing timeout-check batches), and processAllAvailable
-        // never returns either. Bounded-drain protocol for TTL queries:
-        // every input row emits exactly ONE verdict in update mode, so
-        // poll the sink to the known row count, then stop. The count
-        // comes from the ALREADY-WRITTEN input files (footer-cheap) —
-        // counting the batch DataFrames re-executed their whole
-        // upstream construction (round 8); the poll reads progress
-        // metadata, not a count job per tick (pollToCount).
-        val expected = spark.read.parquet(inDir.toString).count()
-        val q = writer.trigger(Trigger.ProcessingTime("50 milliseconds")).start()
-        pollToCount(q, expected, System.nanoTime() + 120L * 1000000000L)
-        q.stop()
-        require(spark.table(qname).count() == expected,
-          s"TTL drain incomplete: ${spark.table(qname).count()} of $expected verdicts")
-      }
-      // localCheckpoint materializes the result so the memory-sink table
-      // and the temp dir can be torn down (repeated Verify/Bench/test
-      // invocations must not accumulate driver memory + disk)
-      spark.table(qname).localCheckpoint()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      scala.util.Try(spark.catalog.dropTempView(qname))
-      def rm(f: java.io.File): Unit = {
-        val kids = f.listFiles(); if (kids != null) kids.foreach(rm)
-        f.delete()
-      }
-      rm(base.toFile)
-    }
-  }
 
   /** Event-time windowed counts under a WATERMARK — the Structured
-    * Streaming aggregation surface (windows + late-data policy) behind
-    * the same bounded-drain protocol as the TTL dedup path. Input
-    * batches are (lang, ts) frames sequenced as mtime-ordered files
-    * (maxFilesPerTrigger=1), aggregated as
+    * Streaming aggregation surface (windows + late-data policy). Input
+    * batches are (lang, ts) frames, one micro-batch each, aggregated as
     * `withWatermark(ts, watermarkSec) groupBy(window(ts, windowSec),
     * lang) count` in APPEND mode: a window row emits exactly once, when
     * the watermark passes its end. Late-data semantics (measured on
@@ -213,97 +231,47 @@ object StreamingExtract {
     * row arriving while its window is still in state MERGES into the
     * final count — so callers sequence batches to make the verdict
     * deterministic (plant the late row one batch AFTER the
-    * watermark-advancing batch). The
-    * caller supplies `expectedRows` (the distinct (window, key) count
-    * it constructed) and the drain polls the append sink to that count
-    * — the final windows flush on Spark's no-data micro-batch, which
-    * has no termination signal AvailableNow could wait on. */
+    * watermark-advancing batch). The caller supplies `expectedRows`
+    * (the distinct (window, key) count it constructed) and the drain
+    * stops at that count. */
   def windowCountsDrain(batches: Seq[DataFrame], windowSec: Int,
-                        watermarkSec: Int, expectedRows: Long,
-                        statePartitions: Int = 8): DataFrame = {
+                        watermarkSec: Int, expectedRows: Long): DataFrame = {
     import org.apache.spark.sql.functions._
-    appendDrain(batches, expectedRows, statePartitions, "graft_stream_window",
-      stream => stream.withWatermark("ts", s"$watermarkSec seconds")
+    boundedDrain(batches, ordered = false, Memory("append", Rows(expectedRows))) {
+      _.withWatermark("ts", s"$watermarkSec seconds")
         .groupBy(window(col("ts"), s"$windowSec seconds"), col("lang"))
         .agg(count(lit(1)).as("n"))
         .select(col("window.start").cast("long").as("w_start"),
-          col("lang"), col("n")))
-  }
-
-  /** Shared bounded-drain harness for APPEND-mode event-time
-    * aggregations: sequence the (lang, ts) batches as mtime-ordered
-    * files, run `aggOf(stream)` under a ProcessingTime trigger, poll
-    * the memory sink to `expectedRows`, stop. Append-mode results only
-    * materialize when the watermark closes them — there is no
-    * AvailableNow termination signal to wait on, so the known-count
-    * poll is the protocol (the q_stream_dedup_ttl lesson). */
-  private def appendDrain(batches: Seq[DataFrame], expectedRows: Long,
-                          statePartitions: Int, tag: String,
-                          aggOf: DataFrame => DataFrame): DataFrame = {
-    val spark = batches.head.sparkSession
-    val tsType = batches.head.schema("ts").dataType
-    import org.apache.spark.sql.types.{StructType, StructField, StringType}
-    val base = java.nio.file.Files.createTempDirectory(tag)
-    // event-time aggregation: within-batch row order is irrelevant, so
-    // the one-job union write applies
-    val inDir = writeBatchFilesUnordered(batches, base.toFile)
-    val schema = StructType(Seq(
-      StructField("lang", StringType), StructField("ts", tsType)))
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
-    val agg = aggOf(stream)
-    val qname = tag + "_" +
-      java.util.UUID.randomUUID.toString.replace("-", "")
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      if (statePartitions > 0)
-        spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-      val q = agg.writeStream.format("memory").queryName(qname)
-        .outputMode("append")
-        .option("checkpointLocation", new java.io.File(base.toFile, "ck").toString)
-        .trigger(Trigger.ProcessingTime("50 milliseconds")).start()
-      // progress-metadata poll, not a count job per tick (pollToCount)
-      pollToCount(q, expectedRows, System.nanoTime() + 120L * 1000000000L)
-      q.stop()
-      require(spark.table(qname).count() == expectedRows,
-        s"$tag drain incomplete: ${spark.table(qname).count()} of $expectedRows rows")
-      spark.table(qname).localCheckpoint()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      scala.util.Try(spark.catalog.dropTempView(qname))
-      def rm(f: java.io.File): Unit = {
-        val kids = f.listFiles(); if (kids != null) kids.foreach(rm)
-        f.delete()
-      }
-      rm(base.toFile)
+          col("lang"), col("n"))
     }
   }
 
   /** Streaming SESSIONIZATION: `session_window(ts, gap)` per key under
-    * a watermark, drained with the same known-count poll protocol.
-    * Batches MUST be time-split (every event of batch N+1 later than
-    * batch N's watermark) so no event is late — sessions split across
-    * batches then MERGE in state and the result equals the batch
-    * gaps-and-islands rollup ([[graft.ops.Sessions.sessionize]] shares
-    * the rule: join iff diff < gap). Emitted end_us subtracts the gap
-    * session_window pads onto the last event. */
+    * a watermark, stopped at the caller's `expectedRows` like
+    * [[windowCountsDrain]]. Batches MUST be time-split (every event of
+    * batch N+1 later than batch N's watermark) so no event is late —
+    * sessions split across batches then MERGE in state and the result
+    * equals the batch gaps-and-islands rollup
+    * ([[graft.ops.Sessions.sessionize]] shares the rule: join iff diff <
+    * gap). Emitted end_us subtracts the gap session_window pads onto the
+    * last event. */
   def sessionCountsDrain(batches: Seq[DataFrame], gapSec: Int,
-                         watermarkSec: Int, expectedRows: Long,
-                         statePartitions: Int = 8): DataFrame = {
+                         watermarkSec: Int, expectedRows: Long): DataFrame = {
     import org.apache.spark.sql.functions._
     // event-time streaming requires TIMESTAMP (instants); callers with
     // NTZ sources convert timezone-free via
     // timestamp_micros(timestamp_diff(MICROSECOND, ntz_epoch, ts)) so
     // unix_micros here replays DuckDB's epoch_us(ntz) on any zone
-    appendDrain(batches, expectedRows, statePartitions, "graft_stream_session",
-      stream => stream.withWatermark("ts", s"$watermarkSec seconds")
+    boundedDrain(batches, ordered = false, Memory("append", Rows(expectedRows))) {
+      _.withWatermark("ts", s"$watermarkSec seconds")
         .groupBy(session_window(col("ts"), s"$gapSec seconds"), col("lang"))
         .agg(count(lit(1)).as("n_events"))
         .select(col("lang"),
           unix_micros(col("session_window.start")).as("start_us"),
           (unix_micros(col("session_window.end")) - gapSec * 1000000L)
             .as("end_us"),
-          col("n_events")))
+          col("n_events"))
+    }
   }
 
   /** Streaming WARC ingestion: blobs landing as files → record split →
@@ -326,40 +294,13 @@ object StreamingExtract {
         graft.spark.GraftFunctions.parse_html_text(col("r.body")).as("body_text"))
   }
 
-  /** Bounded micro-batch drain of `warcExtract` for the oracle gate —
-    * same harness as `dedupVerdictsDrain` (mtime-sequenced files,
-    * maxFilesPerTrigger=1, AvailableNow, memory sink, full teardown).
+  /** Bounded micro-batch drain of `warcExtract` for the oracle gate.
     * Append mode: the stage is stateless, every row emits exactly
     * once. */
-  def warcExtractDrain(batches: Seq[DataFrame]): DataFrame = {
-    val spark = batches.head.sparkSession
-    import org.apache.spark.sql.types.{StructType, StructField, StringType, BinaryType}
-    val base = java.nio.file.Files.createTempDirectory("graft-stream-warc")
-    // stateless per-row extraction: order-free, one-job union write
-    val inDir = writeBatchFilesUnordered(batches, base.toFile)
-    val schema = StructType(Seq(
-      StructField("doc_id", StringType), StructField("blob", BinaryType)))
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
-    val out = warcExtract(stream, "doc_id", "blob")
-    val qname = "graft_stream_warc_" +
-      java.util.UUID.randomUUID.toString.replace("-", "")
-    try {
-      val q = out.writeStream.format("memory").queryName(qname)
-        .outputMode("append")
-        .option("checkpointLocation", new java.io.File(base.toFile, "ck").toString)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      spark.table(qname).localCheckpoint()
-    } finally {
-      scala.util.Try(spark.catalog.dropTempView(qname))
-      def rm(f: java.io.File): Unit = {
-        val kids = f.listFiles(); if (kids != null) kids.foreach(rm)
-        f.delete()
-      }
-      rm(base.toFile)
+  def warcExtractDrain(batches: Seq[DataFrame]): DataFrame =
+    boundedDrain(batches, ordered = false, Memory("append", AvailableNow)) {
+      warcExtract(_, "doc_id", "blob")
     }
-  }
 
   /** WARC ARCHIVE SEGMENTER (batch stage): compose one deterministic
     * WARC/1.0 response record per row ([[graft.spark.WarcUdfs.compose]]
@@ -415,54 +356,13 @@ object StreamingExtract {
     * exactly what the oracle replays (per-batch window cumsum). Uses
     * foreachBatch + append (the file-rotation sink pattern); the
     * checkpointed file source makes re-delivery exactly-once per input
-    * file. Drain harness: mtime-sequenced files, maxFilesPerTrigger=1,
-    * AvailableNow, parquet sink, full teardown. */
-  def composeSegmentsDrain(batches: Seq[DataFrame],
-                           budget: Long,
-                           shufflePartitions: Int = 8): DataFrame = {
-    val spark = batches.head.sparkSession
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types.{StructType, StructField, LongType, StringType}
-    val base = java.nio.file.Files.createTempDirectory("graft-stream-seg")
-    // composeSegments keys its prefix sum by ascending id — input row
-    // order is irrelevant, so the one-job union write applies
-    val inDir = writeBatchFilesUnordered(batches, base.toFile)
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("uri", StringType),
-      StructField("date", StringType), StructField("body", StringType)))
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
-    val outDir = new java.io.File(base.toFile, "out")
-    // shuffle partitions sized to the drain (the statePartitions
-    // convention, round 8): each micro-batch is one small file, and the
-    // per-batch pack/joins at the session's full width were pure task
-    // overhead. Pinned result: concatChunk is partition-count INVARIANT
-    // (ScaleGuardSpec 2/7/32) and the joins are set-semantics, so the
-    // output is identical. Production callers size to their batch
-    // volume (<= 0 inherits the session setting).
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      if (shufflePartitions > 0)
-        spark.conf.set("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      val q = stream.writeStream
-        .option("checkpointLocation", new java.io.File(base.toFile, "ck").toString)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, batchId: Long) =>
-          composeSegments(b, "doc_id", "uri", "date", "body", budget)
-            .withColumn("batch_id", lit(batchId.toInt))
-            .write.mode("append").parquet(outDir.toString)
-        }.start()
-      q.awaitTermination()
-      spark.read.parquet(outDir.toString).localCheckpoint()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      def rm(f: java.io.File): Unit = {
-        val kids = f.listFiles(); if (kids != null) kids.foreach(rm)
-        f.delete()
-      }
-      rm(base.toFile)
+    * file. */
+  def composeSegmentsDrain(batches: Seq[DataFrame], budget: Long): DataFrame =
+    // composeSegments keys its prefix sum by ascending id: row order is
+    // irrelevant
+    boundedDrain(batches, ordered = false, PerBatchParquet) {
+      composeSegments(_, "doc_id", "uri", "date", "body", budget)
     }
-  }
 
   /** Streaming incremental CDC: each arriving file-batch of
     * (re)crawled rows compares against a STATIC baseline snapshot —
@@ -474,44 +374,11 @@ object StreamingExtract {
     * order under maxFilesPerTrigger=1 + AvailableNow (the segments
     * identity convention). */
   def cdcDrain(baseline: DataFrame, batches: Seq[DataFrame],
-               idCol: String, contentCols: Seq[String],
-               shufflePartitions: Int = 8): DataFrame = {
-    val spark = batches.head.sparkSession
-    import org.apache.spark.sql.functions._
-    val base = java.nio.file.Files.createTempDirectory("graft-stream-cdc")
-    // the per-batch diff is a set-semantics join — order-free, one-job
-    // union write
-    val inDir = writeBatchFilesUnordered(batches, base.toFile)
-    val stream = spark.readStream.schema(batches.head.schema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
-    val outDir = new java.io.File(base.toFile, "out")
-    // drain-sized shuffle partitions (the statePartitions convention,
-    // round 8): per-batch diff joins over one small file at full
-    // session width were pure task overhead; incremental() is a
-    // set-semantics join, so the output is identical
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      if (shufflePartitions > 0)
-        spark.conf.set("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      val q = stream.writeStream
-        .option("checkpointLocation", new java.io.File(base.toFile, "ck").toString)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, batchId: Long) =>
-          graft.ops.SnapshotDiff.incremental(b, baseline, idCol, contentCols)
-            .withColumn("batch_id", lit(batchId.toInt))
-            .write.mode("append").parquet(outDir.toString)
-        }.start()
-      q.awaitTermination()
-      spark.read.parquet(outDir.toString).localCheckpoint()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      def rm(f: java.io.File): Unit = {
-        val kids = f.listFiles(); if (kids != null) kids.foreach(rm)
-        f.delete()
-      }
-      rm(base.toFile)
+               idCol: String, contentCols: Seq[String]): DataFrame =
+    // the per-batch diff is a set-semantics join: order-free
+    boundedDrain(batches, ordered = false, PerBatchParquet) {
+      graft.ops.SnapshotDiff.incremental(_, baseline, idCol, contentCols)
     }
-  }
 
   /** Per-hash dedup state: how many copies seen, which doc won. */
   final case class DedupState(first_doc_id: String, copies: Long)
@@ -724,74 +591,18 @@ object StreamingExtract {
         })
   }
 
-  /** Bounded drain for [[semDedupVerdicts]] — the dedupVerdictsDrain
-    * protocol (ordered parquet batch files, maxFilesPerTrigger=1,
-    * AvailableNow, memory sink, state partitions sized to the drain). */
+  /** Bounded drain for [[semDedupVerdicts]]: ordered micro-batches,
+    * memory sink, update mode (the [[dedupVerdictsDrain]] protocol). */
   def semDedupDrain(batches: Seq[DataFrame],
                     centroids: Array[Array[Float]],
                     threshold: Double = 0.9,
                     capPerCell: Int = 256,
-                    statePartitions: Int = 8,
-                    stateTtlMs: Long = 0L): DataFrame = {
-    val spark = batches.head.sparkSession
-    import org.apache.spark.sql.types.{StructType, StructField, StringType,
-      ArrayType, FloatType}
-    val base = java.nio.file.Files.createTempDirectory("graft-stream-semdedup")
-    val inDir = new java.io.File(base.toFile, "in")
-    inDir.mkdirs()
-    batches.zipWithIndex.foreach { case (b, i) =>
-      val part = new java.io.File(base.toFile, s"part$i")
-      b.coalesce(1).write.mode("overwrite").parquet(part.toString)
-      val src = part.listFiles().find(_.getName.endsWith(".parquet"))
-        .getOrElse(sys.error(s"no parquet file written for batch $i"))
-      val dst = new java.io.File(inDir, f"b$i%03d.parquet")
-      java.nio.file.Files.move(src.toPath, dst.toPath)
-      dst.setLastModified(1600000000000L + i * 600000L)
+                    stateTtlMs: Long = 0L): DataFrame =
+    boundedDrain(batches, ordered = true, Memory("update", ttlStop(stateTtlMs))) { s =>
+      import s.sparkSession.implicits._
+      semDedupVerdicts(s.as[(String, Seq[Float])], centroids, threshold,
+        capPerCell, stateTtlMs).toDF()
     }
-    import spark.implicits._
-    val schema = StructType(Seq(
-      StructField("doc_id", StringType),
-      StructField("embedding", ArrayType(FloatType))))
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
-    val verdicts = semDedupVerdicts(stream.as[(String, Seq[Float])],
-      centroids, threshold, capPerCell, stateTtlMs)
-    val qname = "graft_stream_semdedup_" +
-      java.util.UUID.randomUUID.toString.replace("-", "")
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      if (statePartitions > 0)
-        spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-      val writer = verdicts.writeStream.format("memory").queryName(qname)
-        .outputMode("update")
-        .option("checkpointLocation", new java.io.File(base.toFile, "ck").toString)
-      if (stateTtlMs <= 0) {
-        val q = writer.trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      } else {
-        // ProcessingTimeTimeout never terminates an AvailableNow drain
-        // (the dedupVerdictsDrain lesson): poll the sink to the known
-        // row count — update mode emits exactly one verdict per input.
-        // Count the written input files (footer-cheap), poll progress
-        // metadata (pollToCount) — no per-tick count jobs (round 8).
-        val expected = spark.read.parquet(inDir.toString).count()
-        val q = writer.trigger(Trigger.ProcessingTime("50 milliseconds")).start()
-        pollToCount(q, expected, System.nanoTime() + 120L * 1000000000L)
-        q.stop()
-        require(spark.table(qname).count() == expected,
-          s"TTL drain incomplete: ${spark.table(qname).count()} of $expected verdicts")
-      }
-      spark.table(qname).localCheckpoint()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      scala.util.Try(spark.catalog.dropTempView(qname))
-      def rm(f: java.io.File): Unit = {
-        val kids = f.listFiles(); if (kids != null) kids.foreach(rm)
-        f.delete()
-      }
-      rm(base.toFile)
-    }
-  }
 
   // ------------------------------------------------ politeness slots
 
@@ -850,67 +661,13 @@ object StreamingExtract {
         })
   }
 
-  /** Bounded drain for [[fetchScheduleVerdicts]] — the dedupVerdictsDrain
-    * protocol (ordered parquet batch files, maxFilesPerTrigger=1,
-    * AvailableNow, memory sink; TTL > 0 switches to the poll-to-count
-    * drain because ProcessingTimeTimeout never terminates AvailableNow). */
+  /** Bounded drain for [[fetchScheduleVerdicts]]: ordered
+    * micro-batches, memory sink, update mode (the [[dedupVerdictsDrain]]
+    * protocol). */
   def fetchScheduleDrain(batches: Seq[DataFrame],
-                         statePartitions: Int = 8,
-                         stateTtlMs: Long = 0L): DataFrame = {
-    val spark = batches.head.sparkSession
-    import org.apache.spark.sql.types.{StructType, StructField, StringType, LongType}
-    val base = java.nio.file.Files.createTempDirectory("graft-stream-fetch")
-    val inDir = new java.io.File(base.toFile, "in")
-    inDir.mkdirs()
-    batches.zipWithIndex.foreach { case (b, i) =>
-      val part = new java.io.File(base.toFile, s"part$i")
-      b.coalesce(1).write.mode("overwrite").parquet(part.toString)
-      val src = part.listFiles().find(_.getName.endsWith(".parquet"))
-        .getOrElse(sys.error(s"no parquet file written for batch $i"))
-      val dst = new java.io.File(inDir, f"b$i%03d.parquet")
-      java.nio.file.Files.move(src.toPath, dst.toPath)
-      dst.setLastModified(1600000000000L + i * 600000L)
+                         stateTtlMs: Long = 0L): DataFrame =
+    boundedDrain(batches, ordered = true, Memory("update", ttlStop(stateTtlMs))) { s =>
+      import s.sparkSession.implicits._
+      fetchScheduleVerdicts(s.as[(String, String, Long)], stateTtlMs).toDF()
     }
-    import spark.implicits._
-    val schema = StructType(Seq(
-      StructField("doc_id", StringType), StructField("host", StringType),
-      StructField("delay_ms", LongType)))
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
-    val verdicts = fetchScheduleVerdicts(
-      stream.as[(String, String, Long)], stateTtlMs)
-    val qname = "graft_stream_fetch_" +
-      java.util.UUID.randomUUID.toString.replace("-", "")
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      if (statePartitions > 0)
-        spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-      val writer = verdicts.writeStream.format("memory").queryName(qname)
-        .outputMode("update")
-        .option("checkpointLocation", new java.io.File(base.toFile, "ck").toString)
-      if (stateTtlMs <= 0) {
-        val q = writer.trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      } else {
-        // written-file count + progress-metadata poll (round 8 — see
-        // dedupVerdictsDrain): no construction re-execution, no
-        // per-tick count jobs
-        val expected = spark.read.parquet(inDir.toString).count()
-        val q = writer.trigger(Trigger.ProcessingTime("50 milliseconds")).start()
-        pollToCount(q, expected, System.nanoTime() + 120L * 1000000000L)
-        q.stop()
-        require(spark.table(qname).count() == expected,
-          s"TTL drain incomplete: ${spark.table(qname).count()} of $expected verdicts")
-      }
-      spark.table(qname).localCheckpoint()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      scala.util.Try(spark.catalog.dropTempView(qname))
-      def rm(f: java.io.File): Unit = {
-        val kids = f.listFiles(); if (kids != null) kids.foreach(rm)
-        f.delete()
-      }
-      rm(base.toFile)
-    }
-  }
 }

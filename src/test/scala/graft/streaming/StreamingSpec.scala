@@ -459,4 +459,41 @@ class StreamingSpec extends AnyFunSuite {
           s"only-stream=${streamed -- batch}\nonly-batch=${batch -- streamed}")
     }
   }
+
+  test("TTL drain liveness counts every trigger, however few progress updates are kept") {
+    // recentProgress keeps only numRecentProgressUpdates entries: a drain
+    // that summed it saw 1 of 3 data batches here and slept to its 120 s
+    // deadline
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.streaming.numRecentProgressUpdates", "1")
+    import s2.implicits._
+    val batches = (0 until 3).map { b =>
+      (0 until 100).map(i => (f"${b * 100 + i}%06d", s"text ${i % 40}")).toDF("doc_id", "text")
+    }
+    val t0 = System.nanoTime()
+    val n = StreamingExtract.dedupVerdictsDrain(batches, stateTtlMs = 10 * 60 * 1000L).count()
+    val sec = (System.nanoTime() - t0) / 1e9
+    assert(n == 300)
+    assert(sec < 60, f"drain took $sec%.1f s")
+  }
+
+  test("a failing drain restores the shuffle width and removes its temp dir") {
+    import spark.implicits._
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def graftDirs(): Set[String] =
+      tmp.listFiles().map(_.getName).filter(_.startsWith("graft-")).toSet
+    val before = graftDirs()
+    val width = spark.conf.get("spark.sql.shuffle.partitions")
+    import org.apache.spark.sql.functions.{col, lit, raise_error}
+    // an array column cannot be read as the drain's (String, String)
+    // input; a row that throws fails the write of its batch file
+    val badColumns = Seq(("d1", Seq(1, 2))).toDF("doc_id", "text")
+    val badRows = Seq("d1").toDF("doc_id")
+      .select(col("doc_id"), raise_error(lit("planted")).cast("string").as("text"))
+    Seq(badColumns, badRows).foreach { bad =>
+      intercept[Exception](StreamingExtract.dedupVerdictsDrain(Seq(bad)))
+      assert(spark.conf.get("spark.sql.shuffle.partitions") == width)
+      assert(graftDirs() -- before == Set.empty[String])
+    }
+  }
 }
