@@ -32,7 +32,6 @@ object BenchExtra {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.spark.GraftFunctions.registerAll(spark)
 
     def force(name: String): Double = {
       spark.sparkContext.setJobDescription(name)

@@ -37,7 +37,6 @@ object ScaleProbe {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.spark.GraftFunctions.registerAll(spark)
 
     def time(name: String, dir: String): Double = {
       val t0 = System.nanoTime()

@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.spark.{GraftFunctions, CorpusGen, DocRow, Pipeline}
+import graft.spark.{CorpusGen, DocRow, GraftAttrMatchCounts, Pipeline}
+import graft.spark.KernelRegistry.kernel
+import org.apache.spark.sql.graft.GraftSql
 import graft.ops.{Dedup, Rank, Redirects, Similarity, Sketch, SnapshotDiff, TextNorm, TextOps, Multimodal, TopK, Pack, QualityModel, Sample, UrlOps}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -28,8 +30,6 @@ import graft.ops.{Dedup, Rank, Redirects, Similarity, Sketch, SnapshotDiff, Text
 object SparkEntry {
 
   private def docs(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.registerAll(s)
-    TextOps.registerAll(s)
     s.read.parquet(s"$dir/documents.parquet")
   }
 
@@ -66,7 +66,6 @@ object SparkEntry {
     * survivors) — one implementation, one oracle replay to keep in
     * lockstep. */
   private def cleanPipelineV2(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.registerAll(s)
     val d = docs(s, dir)
     val junk = "@#$% " * 200
     val tx = when(pmod(col("doc_id"), lit(10)) === 6,
@@ -85,8 +84,8 @@ object SparkEntry {
       .filter(col("lang").isin("en", "de", "fr"))
       .withColumn("quality", TextOps.qualityScore(col("t")))
       .filter(col("quality") >= 48)
-      .filter(expr("graft_quality_score(t) >= 0"))
-      .filter(expr("graft_repetition_ok(t, 10, 3, 5)"))
+      .filter(kernel("graft_quality_score", col("t")) >= 0)
+      .filter(kernel("graft_repetition_ok", col("t"), lit(10), lit(3), lit(5)))
       .withColumn("redacted", graft.ops.Pii.redact(col("t")))
     val hashed = graft.ops.Snapshot(survivors
       .withColumn("h", coalesce(md5(TextNorm.lowerCol(
@@ -194,7 +193,7 @@ object SparkEntry {
       escTxt(substring(coalesce(col("source"), lit("")), 1, 8)),
       lit("</h2><p>B3</p><h3>E</h3>"))
     val spans = d.select(col("doc_id"),
-        posexplode_outer(GraftFunctions.parse_html_spans(html))
+        posexplode_outer(kernel("parse_html_spans", html))
           .as(Seq("pos", "s")))
       .filter(col("s").isNotNull)
     val w = Window.partitionBy("doc_id").orderBy("pos")
@@ -406,7 +405,7 @@ object SparkEntry {
         lit("</title></head><body><h1>"), escTxt(coalesce(col("lang"), lit(""))),
         lit("</h1><p>"), escTxt(coalesce(col("text"), lit(""))), lit("</p></body></html>"))
       d.select(col("doc_id"),
-          explode(GraftFunctions.parse_html_spans(html)).as("s"))
+          explode(kernel("parse_html_spans", html)).as("s"))
         .select(col("doc_id"), col("s.kind").as("kind"),
           col("s.text").as("span_text"), col("s.offset").as("offset"))
     }),
@@ -434,7 +433,7 @@ object SparkEntry {
         lit("/c\"><figcaption>F1"), escTxt(coalesce(col("source"), lit(""))),
         lit("</figcaption></figure><img src=\"/i/"), idStr, lit("/z\">"))
       val spans = d.select(col("doc_id"),
-          posexplode_outer(GraftFunctions.parse_html_spans(html))
+          posexplode_outer(kernel("parse_html_spans", html))
             .as(Seq("pos", "s")))
         .filter(col("s").isNotNull)
       val w = Window.partitionBy("doc_id").orderBy(col("pos").desc)
@@ -471,11 +470,11 @@ object SparkEntry {
         lit("</head><body><img src=\"/i/"), idStr,
         lit("/a\"><p>C1"), escTxt(coalesce(col("lang"), lit(""))),
         lit("</p><img src=\"/i/"), idStr, lit("/z\"></body></html>"))
-      val m = call_function("graft_page_meta", html)
+      val m = kernel("graft_page_meta", html)
       val spans = d.select(col("doc_id"),
           m.getField("og_title").as("og_title"),
           m.getField("og_image").as("og_image"),
-          posexplode_outer(GraftFunctions.parse_html_spans(html))
+          posexplode_outer(kernel("parse_html_spans", html))
             .as(Seq("pos", "s")))
         .filter(col("s").isNotNull)
       val w = Window.partitionBy("doc_id").orderBy(col("pos").desc)
@@ -525,7 +524,7 @@ object SparkEntry {
           .otherwise(lit("")),
         lit("<p>tail</p></body>"))
       val nodes = d.select(col("doc_id"),
-          explode_outer(GraftFunctions.graft_node_table(html)).as("n"))
+          explode_outer(kernel("graft_node_table", html)).as("n"))
         .filter(col("n").isNotNull)
         .select(col("doc_id"), col("n.node_id").as("node_id"),
           col("n.parent_id").as("parent_id"), col("n.tag").as("tag"),
@@ -567,7 +566,6 @@ object SparkEntry {
     // (compose conventions stay in ONE kernel — the query never
     // restates the header layout), joined back on doc_id.
     "q_wet_sections" -> ((s, dir) => {
-      GraftFunctions.registerAll(s)
       val d = docs(s, dir)
       val secs = sectionsFrame(s, dir)
       val html = concat(lit("<html><body><p>"),
@@ -575,9 +573,9 @@ object SparkEntry {
         lit("</p></body></html>"))
       val uri = concat(lit("https://w.ex/"), col("doc_id").cast("string"))
       val date = lit("2026-02-02T00:00:00Z")
-      val rec = call_function("graft_warc_compose", uri, date, html)
+      val rec = kernel("graft_warc_compose", uri, date, html)
       val refs = d.select(col("doc_id"),
-        element_at(call_function("graft_warc_records", encode(rec, "UTF-8")), 1)
+        element_at(kernel("graft_warc_records", encode(rec, "UTF-8")), 1)
           .getField("record_id").as("refers"))
       val j = secs.join(refs, "doc_id")
       val uriS = concat(lit("https://w.ex/"), col("doc_id").cast("string"),
@@ -585,10 +583,9 @@ object SparkEntry {
       val payload = when(col("heading").isNull, col("body"))
         .when(col("body") === "", col("heading"))
         .otherwise(concat(col("heading"), lit("\n\n"), col("body")))
-      val wet = call_function("graft_warc_compose_wet",
-        uriS, date, col("refers"), payload)
+      val wet = kernel("graft_warc_compose_wet", uriS, date, col("refers"), payload)
       val w0 = element_at(
-        call_function("graft_warc_records", encode(wet, "UTF-8")), 1)
+        kernel("graft_warc_records", encode(wet, "UTF-8")), 1)
       j.select(col("doc_id"), col("section_id"), wet.as("wet_record"),
         w0.getField("uri").as("rt_uri"),
         w0.getField("body").as("rt_text"),
@@ -601,8 +598,8 @@ object SparkEntry {
         regexp_replace(escTxt(coalesce(col("text"), lit(""))), lit(" "), lit("&#32;")),
         lit("</p>"))
       d.select(col("doc_id"),
-        GraftFunctions.parse_html_text(html).as("decoded"),
-        GraftFunctions.parse_html_text(
+        kernel("parse_html_text", html).as("decoded"),
+        kernel("parse_html_text",
           lit("<p>A &amp;&lt; B &copy; &#x41;</p>")).as("decoded2"))
     }),
 
@@ -613,14 +610,14 @@ object SparkEntry {
         lit("<i>"), escTxt(substring(col("text"), 17, 8)),
         lit("</b>"), escTxt(substring(col("text"), 25, 8)),
         lit("</i>"), escTxt(substring(col("text"), 33, 8)), lit("</p>"))
-      d.select(col("doc_id"), GraftFunctions.parse_html_text(html).as("extracted"))
+      d.select(col("doc_id"), kernel("parse_html_text", html).as("extracted"))
     }),
 
     "q_html_foster" -> ((s, dir) => {
       val d = docs(s, dir).filter(length(col("text")) >= 12)
       val html = concat(lit("<table>"), escTxt(substring(col("text"), 1, 12)),
         lit("<tr><td>CELL</td></tr></table>"))
-      val spans = GraftFunctions.parse_html_spans(html)
+      val spans = kernel("parse_html_spans", html)
       d.select(col("doc_id"),
         element_at(spans, 1).getField("text").as("leak"),
         element_at(spans, 2).getField("text").as("cell"))
@@ -637,7 +634,7 @@ object SparkEntry {
         lit(" --><textarea>"),
         regexp_replace(coalesce(col("lang"), lit("")), "</", "(/"),
         lit("</textarea>"))
-      d.select(col("doc_id"), GraftFunctions.parse_html_text(html).as("extracted"))
+      d.select(col("doc_id"), kernel("parse_html_text", html).as("extracted"))
     }),
 
     "q_html_media" -> ((s, dir) => {
@@ -647,7 +644,7 @@ object SparkEntry {
         lit("/a.png\"><video src=\"m://"), col("doc_id").cast("string"),
         lit("/b.mp4\"></video></p>"))
       d.select(col("doc_id"),
-          posexplode(GraftFunctions.parse_html_spans(html)).as(Seq("pos", "s")))
+          posexplode(kernel("parse_html_spans", html)).as(Seq("pos", "s")))
         .select(col("doc_id"), col("pos"), col("s.kind").as("kind"),
           col("s.media_ref").as("media_ref"))
     }),
@@ -656,14 +653,14 @@ object SparkEntry {
       val d = docs(s, dir)
       val html = concat(lit("<title>"), escTxt(coalesce(col("source"), lit(""))),
         lit("<b>x</title>"))
-      d.select(col("doc_id"), GraftFunctions.parse_html_text(html).as("extracted"))
+      d.select(col("doc_id"), kernel("parse_html_text", html).as("extracted"))
     }),
 
     "q_html_pre" -> ((s, dir) => {
       val d = docs(s, dir).filter(length(col("text")) >= 10)
       val html = concat(lit("<pre>\n"), escTxt(substring(col("text"), 1, 10)),
         lit("</pre>"))
-      val spans = GraftFunctions.parse_html_spans(html)
+      val spans = kernel("parse_html_spans", html)
       d.select(col("doc_id"),
         element_at(spans, 1).getField("kind").as("kind1"),
         element_at(spans, 1).getField("text").as("text1"))
@@ -678,9 +675,9 @@ object SparkEntry {
       // graft_attr_match_counts; the r4 ScalaUDF parsed 3× per row) —
       // the three element_at consumers share the array via codegen
       // subexpression elimination, pinned by PlanSpec's attrEvals counter
-      val counts = GraftFunctions.graft_attr_match_counts(html,
+      val counts = GraftSql.column(GraftAttrMatchCounts(GraftSql.expressionOf(html),
         Seq("class", "class", "id"), Seq("c1", "c2", "src"),
-        Seq("eq", "eq", "begin"))
+        Seq("eq", "eq", "begin")))
       d.select(col("doc_id"),
         element_at(counts, 1).as("c1"),
         element_at(counts, 2).as("c2"),
@@ -691,7 +688,7 @@ object SparkEntry {
       val d = docs(s, dir).filter(length(col("text")) >= 20)
       val html = concat(lit("<p>"), escTxt(substring(col("text"), 1, 20)),
         lit("</p>"))
-      d.select(col("doc_id"), GraftFunctions.serialize_html(html).as("normalized"))
+      d.select(col("doc_id"), kernel("serialize_html", html).as("normalized"))
     }),
 
     "q_html_quirks" -> ((s, dir) => {
@@ -701,7 +698,7 @@ object SparkEntry {
         .when(pmod(col("doc_id"), lit(3)) === 1, lit("<p>x</p>"))
         .otherwise(lit(
           "<!DOCTYPE html PUBLIC \"-//W3C//DTD HTML 4.01 Transitional//EN\"><p>x</p>"))
-      d.select(col("doc_id"), GraftFunctions.html_quirks_mode(html).as("quirks"))
+      d.select(col("doc_id"), kernel("html_quirks_mode", html).as("quirks"))
     }),
 
     "q_html_tokens" -> ((s, dir) => {
@@ -709,7 +706,7 @@ object SparkEntry {
       val html = concat(lit("<p id=\"1\">"), escTxt(substring(col("text"), 1, 10)),
         lit("</p><!--c-->"))
       d.select(col("doc_id"),
-          posexplode(GraftFunctions.tokenize_html(html)).as(Seq("pos", "t")))
+          posexplode(kernel("tokenize_html", html)).as(Seq("pos", "t")))
         .select(col("doc_id"), col("pos"), col("t.ttype").as("ttype"),
           col("t.name").as("name"), col("t.data").as("data"),
           col("t.offset").as("offset"))
@@ -720,7 +717,7 @@ object SparkEntry {
       val html = concat(lit("<div id=\"x\"><p>"), escTxt(substring(col("text"), 1, 5)),
         lit("</p><br></div>"))
       d.select(col("doc_id"),
-          posexplode(GraftFunctions.parse_html_nodes(html)).as(Seq("pos", "n")))
+          posexplode(kernel("parse_html_nodes", html)).as(Seq("pos", "n")))
         .select(col("doc_id"), col("pos"), col("n.tag").as("tag"),
           col("n.depth").as("depth"), col("n.ntype").as("ntype"),
           col("n.text").as("ntext"), col("n.nattrs").as("nattrs"))
@@ -744,7 +741,7 @@ object SparkEntry {
       val html = concat(lit("<p id=\"x\" class=\""), src, lit("\">"), txt,
         lit("</p><a href=\"/l\">z</a>"))
       d.select(col("doc_id"),
-          explode_outer(GraftFunctions.graft_node_table(html)).as("n"))
+          explode_outer(kernel("graft_node_table", html)).as("n"))
         .filter(col("n").isNotNull)
         .select(col("doc_id"), col("n.node_id").as("node_id"),
           col("n.parent_id").as("parent_id"), col("n.depth").as("depth"),
@@ -763,7 +760,6 @@ object SparkEntry {
     // doc_id%3+1 divs around doc_id%4+2 paragraphs, so every output is
     // family arithmetic the oracle replays directly.
     "q_dom_stats" -> ((s, dir) => {
-      GraftFunctions.registerAll(s)
       val d = docs(s, dir)
       val dD = (pmod(col("doc_id"), lit(3L)) + 1).cast("int")
       val pP = (pmod(col("doc_id"), lit(4L)) + 1).cast("int")
@@ -774,7 +770,7 @@ object SparkEntry {
         call_function("repeat", lit("<p>t</p>"), pP),
         call_function("repeat", lit("</div>"), dD), lit("</body>"))
       val nodes = d.select(col("doc_id"),
-          explode_outer(GraftFunctions.graft_node_table(html)).as("n"))
+          explode_outer(kernel("graft_node_table", html)).as("n"))
         .filter(col("n").isNotNull)
         .select(col("doc_id"), col("n.parent_id").as("parent_id"),
           col("n.depth").as("depth"), col("n.ntype").as("ntype"))
@@ -822,7 +818,7 @@ object SparkEntry {
       val urlY = regexp_extract(col("u"), "/(20[0-9]{2})/([0-9]{2})/", 1)
       val urlM = regexp_extract(col("u"), "/(20[0-9]{2})/([0-9]{2})/", 2)
       d.select(col("doc_id"),
-          call_function("graft_pub_date", html).as("p"), url.as("u"))
+          kernel("graft_pub_date", html).as("p"), url.as("u"))
         .select(col("doc_id"),
           coalesce(col("p.meta_time"), col("p.time_attr"),
             when(urlY =!= "", concat(urlY, lit("-"), urlM))).as("pub_date"),
@@ -853,7 +849,7 @@ object SparkEntry {
         lit("<link rel=\"stylesheet\" hreflang=\"zz\" href=\"/x\">"),
         lit("</head><body>x</body></html>"))
       d.select(col("doc_id"),
-          explode_outer(call_function("graft_hreflang", html)).as("a"))
+          explode_outer(kernel("graft_hreflang", html)).as("a"))
         .filter(col("a").isNotNull)
         .select(col("doc_id"), col("a.alt_id").as("alt_id"),
           col("a.lang").as("lang_tag"), col("a.href").as("href"))
@@ -943,7 +939,7 @@ object SparkEntry {
         lit("</head><body>x</body></html>"))
       val src = d.select(col("doc_id"), myLang.as("src_lang"),
           selfUrl.as("self_url"), payload.as("src_text"),
-          explode_outer(call_function("graft_hreflang", html)).as("a"))
+          explode_outer(kernel("graft_hreflang", html)).as("a"))
         .filter(col("a").isNotNull)
         .filter(col("a.href") =!= col("self_url"))
       val tgt = d.select(selfUrl.as("t_url"), col("doc_id").as("tgt_id"),
@@ -971,7 +967,7 @@ object SparkEntry {
         lit("</head><body><p>x</p></body></html>"))
       val keyed = d
         .select(col("doc_id"),
-          call_function("graft_page_meta", html).getField("canonical")
+          kernel("graft_page_meta", html).getField("canonical")
             .as("c0"))
         .select(col("doc_id"),
           when(col("c0") === "",
@@ -994,7 +990,7 @@ object SparkEntry {
       val html = concat(lit("<p>x</p><a href=\"/u/"), src, lit("\">L"), txt,
         lit("</a><a name=\"n\">skip</a>"))
       d.select(col("doc_id"),
-          explode_outer(call_function("graft_link_table", html)).as("l"))
+          explode_outer(kernel("graft_link_table", html)).as("l"))
         .filter(col("l").isNotNull)
         .select(col("doc_id"), col("l.node_id").as("node_id"),
           col("l.href").as("href"), col("l.anchor").as("anchor"))
@@ -1023,7 +1019,7 @@ object SparkEntry {
         lit("<a href=\"https://"), bkt, lit(".github.io/x\">z</a>"),
         lit("<a href=\"/rel\">r</a><a name=\"n\">skip</a>"))
       val links = d.select(col("doc_id"),
-          explode_outer(call_function("graft_link_table", html)).as("l"))
+          explode_outer(kernel("graft_link_table", html)).as("l"))
         .filter(col("l").isNotNull)
         .select(col("doc_id"), col("l.href").as("href"))
       val tgt = links.filter(UrlOps.scheme(col("href")) === "https")
@@ -1052,7 +1048,7 @@ object SparkEntry {
       val links = d.select(
           concat(lit("h"), pmod(col("doc_id"), lit(20L)).cast("string"),
             lit(".ex")).as("src"),
-          explode_outer(call_function("graft_link_table", html)).as("l"))
+          explode_outer(kernel("graft_link_table", html)).as("l"))
         .filter(col("l").isNotNull)
       val edges = links
         .select(col("src"), UrlOps.host(col("l.href")).as("dst"))
@@ -1067,7 +1063,6 @@ object SparkEntry {
     // q_host_rank; norm-free integer sums (Rank.hits) so the oracle
     // unrolls both alternating rounds exactly.
     "q_hits" -> ((s, dir) => {
-      GraftFunctions.registerAll(s)
       val d = docs(s, dir)
       val html = concat(
         lit("<a href=\"https://h"),
@@ -1078,7 +1073,7 @@ object SparkEntry {
       val links = d.select(
           concat(lit("h"), pmod(col("doc_id"), lit(20L)).cast("string"),
             lit(".ex")).as("src"),
-          explode_outer(call_function("graft_link_table", html)).as("l"))
+          explode_outer(kernel("graft_link_table", html)).as("l"))
         .filter(col("l").isNotNull)
       val edges = links
         .select(col("src"), UrlOps.host(col("l.href")).as("dst"))
@@ -1093,7 +1088,6 @@ object SparkEntry {
     // integer: authority_quality = sum_quality × pr stays far below
     // 2^63 (25 docs × q<=100 × pr~2e6).
     "q_domain_quality" -> ((s, dir) => {
-      GraftFunctions.registerAll(s)
       val d = docs(s, dir)
       val host = concat(lit("h"), pmod(col("doc_id"), lit(20L)).cast("string"),
         lit(".ex"))
@@ -1108,7 +1102,7 @@ object SparkEntry {
         pmod(col("doc_id"), lit(7L)).cast("string"),
         lit(".ex/q\">y</a>"))
       val links = d.select(host.as("src"),
-          explode_outer(call_function("graft_link_table", html)).as("l"))
+          explode_outer(kernel("graft_link_table", html)).as("l"))
         .filter(col("l").isNotNull)
       val edges = links
         .select(col("src"), UrlOps.host(col("l.href")).as("dst"))
@@ -1137,7 +1131,7 @@ object SparkEntry {
           lit("User-agent: *\nCrawl-delay: soon\n"))
         .otherwise(concat(lit("User-agent: *\nCrawl-delay: "),
           (pmod(dom, lit(5L)) + 1).cast("string"), lit("\n")))
-      val rawDelay = call_function("graft_robots_meta", robotsTxt,
+      val rawDelay = kernel("graft_robots_meta", robotsTxt,
         lit("graftbot")).getField("crawl_delay")
       val base = d.select(col("doc_id"),
         concat(lit("d"), dom.cast("string"), lit(".ex")).as("domain"),
@@ -1177,7 +1171,7 @@ object SparkEntry {
         lit("</a><a href=\"https://www.example"), hub, lit(".com/3\">V"), v,
         lit("</a><a href=\"/rel\">r</a><a name=\"n\">skip</a>"))
       val links = d.select(
-          explode_outer(call_function("graft_link_table", html)).as("l"))
+          explode_outer(kernel("graft_link_table", html)).as("l"))
         .filter(col("l").isNotNull)
         .select(col("l.href").as("href"), col("l.anchor").as("anchor"))
       val counted = links.filter(UrlOps.scheme(col("href")) === "https")
@@ -1218,7 +1212,7 @@ object SparkEntry {
       val body = when(fam === 0, vtt).when(fam === 1, srt)
         .otherwise(lit("no cues in this document at all"))
       d.select(col("doc_id"),
-          explode_outer(call_function("graft_subtitles", body)).as("c"))
+          explode_outer(kernel("graft_subtitles", body)).as("c"))
         .filter(col("c").isNotNull)
         .select(col("doc_id"), col("c.cue_id").as("cue_id"),
           col("c.start_ms").as("start_ms"), col("c.end_ms").as("end_ms"),
@@ -1263,13 +1257,13 @@ object SparkEntry {
         le32(rate * 2), le16(lit(2)), le16(lit(16)), lit("6461746100000000"))
       val hexStr = when(pmod(col("doc_id"), lit(13)) === 7,
         substring(wavHex, 1, 8)).otherwise(wavHex)
-      val sr = GraftFunctions.graft_audio_header(unhex(hexStr))
+      val sr = kernel("graft_audio_header", unhex(hexStr))
         .getField("sample_rate")
       val cues = d.select(col("doc_id"),
           concat(lit("a/"), col("doc_id").cast("string"), lit(".wav"))
             .as("audio_ref"),
           sr.as("sample_rate"),
-          explode_outer(call_function("graft_subtitles", vtt)).as("c"))
+          explode_outer(kernel("graft_subtitles", vtt)).as("c"))
         .filter(col("c").isNotNull)
       val dur = col("c.end_ms") - col("c.start_ms")
       cues
@@ -1311,7 +1305,7 @@ object SparkEntry {
         lit("</updated><id>i"), idStr, lit("</id></entry></feed>"))
       val xml = when(pmod(col("doc_id"), lit(2L)) === 0, rss).otherwise(atom)
       d.select(col("doc_id"),
-          explode_outer(call_function("graft_feed", xml)).as("e"))
+          explode_outer(kernel("graft_feed", xml)).as("e"))
         .filter(col("e").isNotNull)
         .select(col("doc_id"), col("e.entry_id").as("entry_id"),
           col("e.kind").as("kind"), col("e.title").as("title"),
@@ -1344,7 +1338,7 @@ object SparkEntry {
         lit(".com/sitemap-"), pr,
         lit(".xml</loc><lastmod>2025-01-02</lastmod></sitemap></urlset>"))
       d.select(col("doc_id"),
-          explode_outer(call_function("graft_sitemap", xml)).as("e"))
+          explode_outer(kernel("graft_sitemap", xml)).as("e"))
         .filter(col("e").isNotNull)
         .select(col("doc_id"), col("e.entry_id").as("entry_id"),
           col("e.kind").as("kind"), col("e.loc").as("loc"),
@@ -1369,7 +1363,7 @@ object SparkEntry {
         lit("/c1.xml</loc></sitemap><sitemap><lastmod>orphan</lastmod>" +
           "</sitemap></sitemapindex>"))
       val entries = d.select(col("doc_id"),
-          explode_outer(call_function("graft_sitemap", idx)).as("e"))
+          explode_outer(kernel("graft_sitemap", idx)).as("e"))
         .filter(col("e").isNotNull)
         .filter(col("e.kind") === "sitemap" && col("e.loc").isNotNull)
       val pr = pmod(col("doc_id"), lit(9L)).cast("string")
@@ -1386,7 +1380,7 @@ object SparkEntry {
           lit("/c</loc><lastmod>2025-12-3"), lm,
           lit("</lastmod></url></urlset>")))
       entries.select(col("doc_id"), col("e.loc").as("child_loc"),
-          explode_outer(call_function("graft_sitemap", child)).as("u"))
+          explode_outer(kernel("graft_sitemap", child)).as("u"))
         .filter(col("u").isNotNull)
         .filter(col("u.kind") === "url")
         .select(col("doc_id"), col("child_loc"),
@@ -1417,7 +1411,7 @@ object SparkEntry {
         lit("\"><meta name=\"robots\" content=\"noindex, follow\">"),
         lit("<base href=\"/b/\"><link rel=\"Canonical\" href=\"/c/"), src,
         lit("\"><title>second</title></head><body>x</body></html>"))
-      d.select(col("doc_id"), call_function("graft_page_meta", html).as("m"))
+      d.select(col("doc_id"), kernel("graft_page_meta", html).as("m"))
         .select(col("doc_id"),
           col("m.title").as("title"), col("m.lang").as("lang"),
           col("m.base").as("base"), col("m.canonical").as("canonical"),
@@ -1440,7 +1434,7 @@ object SparkEntry {
         lit("</td></tr></table><p>gap</p>"),
         lit("<table><tr><td>X<table><tr><td>Y</td></tr></table></td></tr></table>"))
       d.select(col("doc_id"),
-          explode_outer(call_function("graft_table_cells", html)).as("c"))
+          explode_outer(kernel("graft_table_cells", html)).as("c"))
         .filter(col("c").isNotNull)
         .select(col("doc_id"), col("c.table_id").as("table_id"),
           col("c.row_id").as("row_id"), col("c.col_id").as("col_id"),
@@ -1468,7 +1462,7 @@ object SparkEntry {
         concat(lit("\""), regexp_replace(f, "\"", "\"\""), lit("\"")))
         .otherwise(f)
       val cells = d.select(col("doc_id"),
-          explode_outer(call_function("graft_table_cells", html)).as("c"))
+          explode_outer(kernel("graft_table_cells", html)).as("c"))
         .filter(col("c").isNotNull)
       val rows = cells.groupBy(col("doc_id"), col("c.table_id").as("table_id"),
           col("c.row_id").as("row_id"))
@@ -1492,7 +1486,6 @@ object SparkEntry {
     // appear — only the innermost text-bearing one). One parse/row;
     // the oracle replays the family arithmetic.
     "q_density_blocks" -> ((s, dir) => {
-      GraftFunctions.registerAll(s)
       val d = docs(s, dir)
       val prose = concat(lit("P-"), md5(coalesce(col("text"), lit(""))))
       val deepTxt = "deeply nested prose block with enough chars to pass"
@@ -1503,7 +1496,7 @@ object SparkEntry {
           lit("<div>abcdefghijkl<em>mm</em><em>nn</em></div>"))
         .otherwise(lit("<div>" * 25 + deepTxt + "</div>" * 25))
       d.select(col("doc_id"),
-          explode_outer(call_function("graft_density_blocks", html)).as("b"))
+          explode_outer(kernel("graft_density_blocks", html)).as("b"))
         .filter(col("b").isNotNull)
         .select(col("doc_id"), col("b.block_id").as("block_id"),
           col("b.tag").as("tag"), col("b.depth").as("depth"),
@@ -1520,7 +1513,6 @@ object SparkEntry {
     // spans across three rows, and junk/zero rowspan values clamping
     // to 1. One parse per row; the oracle replays the layouts.
     "q_table_grid" -> ((s, dir) => {
-      GraftFunctions.registerAll(s)
       val d = docs(s, dir)
       val v = escTxt(substring(coalesce(col("text"), lit("")), 1, 4))
       val fam = pmod(col("doc_id"), lit(4L))
@@ -1535,7 +1527,7 @@ object SparkEntry {
         .otherwise(lit("<table><tr><th rowspan=\"x\">H1</th>" +
           "<th rowspan=\"0\">H2</th></tr><tr><td>K</td></tr></table>"))
       d.select(col("doc_id"),
-          explode_outer(call_function("graft_table_grid", html)).as("c"))
+          explode_outer(kernel("graft_table_grid", html)).as("c"))
         .filter(col("c").isNotNull)
         .select(col("doc_id"), col("c.table_id").as("table_id"),
           col("c.row_id").as("row_id"), col("c.col_id").as("col_id"),
@@ -1552,7 +1544,6 @@ object SparkEntry {
     // oracle replays the family matrix (the md5 string cell carries a
     // letter prefix so it can never match the numeric classes).
     "q_table_types" -> ((s, dir) => {
-      GraftFunctions.registerAll(s)
       val d = docs(s, dir)
       val w = concat(lit("w"), substring(md5(coalesce(col("text"),
         lit(""))), 1, 6))
@@ -1568,7 +1559,7 @@ object SparkEntry {
         lit("</td></tr><tr><td>"), r2c0, lit("</td><td>"), r2c1,
         lit("</td><td>"), r2c2, lit("</td><td>x</td></tr></table>"))
       val cells = d.select(col("doc_id"),
-          explode_outer(call_function("graft_table_cells", html)).as("c"))
+          explode_outer(kernel("graft_table_cells", html)).as("c"))
         .filter(col("c").isNotNull)
         .filter(col("c.is_header") === 0)
       val t = TextNorm.trimCol(col("c.text"))
@@ -1621,7 +1612,7 @@ object SparkEntry {
         toka, lit("</td></tr></table>"),
         lit("<script>skip()</script><div>tail "), toka, lit("</div>"))
       d.select(col("doc_id"),
-        call_function("graft_markdown", html).as("md"))
+        kernel("graft_markdown", html).as("md"))
     }),
 
     // fragment algorithm (reference myhtml_parse_fragment, myhtml.c:240-262):
@@ -1636,12 +1627,12 @@ object SparkEntry {
       val cellFrag = concat(lit("<b>"), src, lit("</b>rest"))
       val rawFrag = concat(lit("<b>"), src)
       d.select(col("doc_id"),
-        GraftFunctions.parse_fragment_text(rowFrag, lit("tr")).as("row_cells"),
-        GraftFunctions.parse_fragment_text(cellFrag, lit("td")).as("cell_text"),
-        GraftFunctions.parse_fragment_text(rawFrag, lit("textarea")).as("rcdata_text"),
+        kernel("parse_fragment_text", rowFrag, lit("tr")).as("row_cells"),
+        kernel("parse_fragment_text", cellFrag, lit("td")).as("cell_text"),
+        kernel("parse_fragment_text", rawFrag, lit("textarea")).as("rcdata_text"),
         // template context seeds the template-insertion-mode stack
         // (fragment init; binary-verified in parity corpus docs15)
-        GraftFunctions.parse_fragment_text(
+        kernel("parse_fragment_text",
           concat(lit("<td>"), src, lit("</td>")), lit("template"))
           .as("tmpl_cell"))
     }),
@@ -1655,8 +1646,8 @@ object SparkEntry {
         lit("</p></article><nav><a href=\"/a\">aa</a> <a href=\"/b\">bb</a></nav>" +
           "<footer><a href=\"/c\">x</a></footer>"))
       d.select(col("doc_id"),
-        GraftFunctions.extract_main_text(html).as("main_text"),
-        GraftFunctions.parse_html_text(html).as("full_text"))
+        kernel("extract_main_text", html).as("main_text"),
+        kernel("parse_html_text", html).as("full_text"))
     }),
 
     // full density scoring (north star: text-density + tag-depth + link-
@@ -1671,8 +1662,8 @@ object SparkEntry {
           ("<div>" * 28) + "deepdeepdeepdeep" + ("</div>" * 28) +
           "<p>keep me now</p>"))
       d.select(col("doc_id"),
-        GraftFunctions.extract_dense_text(html).as("dense_text"),
-        GraftFunctions.extract_main_text(html).as("main_text"))
+        kernel("extract_dense_text", html).as("dense_text"),
+        kernel("extract_main_text", html).as("main_text"))
     }),
 
     "q_charset_sniff" -> ((s, dir) => {
@@ -1684,7 +1675,7 @@ object SparkEntry {
           lit("<meta charset=\"shift_jis\"><p>x</p>"))
         .otherwise(lit("<meta charset=\"x-user-defined\"><p>x</p>"))
         .cast("binary")
-      d.select(col("doc_id"), GraftFunctions.prescan_charset(bytes).as("charset"))
+      d.select(col("doc_id"), kernel("prescan_charset", bytes).as("charset"))
     }),
 
     // ------------------------------------------- training-data pipeline
@@ -1961,7 +1952,6 @@ object SparkEntry {
     // sf1 probe showed an uncapped slice turning the broadcast join
     // quadratic (eval side must never scale with the corpus).
     "q_embed_decontam" -> ((s, dir) => {
-      GraftFunctions.registerAll(s)
       val e = embs(s, dir)
       val contam = e
         .filter(pmod(col("vec_id"), lit(17L)) === 3 && col("vec_id") < 1000)
@@ -1981,7 +1971,7 @@ object SparkEntry {
 
     "q_lang_id" -> ((s, dir) =>
       docs(s, dir).select(col("doc_id"),
-        expr("graft_lang_id(coalesce(text, ''))").as("lang_pred"))),
+        kernel("graft_lang_id", coalesce(col("text"), lit(""))).as("lang_pred"))),
 
     // Per-shard language mixture (round 7 cont.): the "is the data mix
     // right in every output shard" report — shard assignment via the
@@ -1991,14 +1981,13 @@ object SparkEntry {
     // round(f·2^24) thresholds × the marker-score CTEs) and the
     // canonical token count; sums CAST AS BIGINT per the HUGEINT rule.
     "q_lang_mix" -> ((s, dir) => {
-      GraftFunctions.registerAll(s)
       val d = docs(s, dir).select(col("doc_id"),
         col("doc_id").cast("string").as("k"), col("text"))
       val assigned = Sample.split(d, "k",
         Seq(("s0", 0.25), ("s1", 0.25), ("s2", 0.25), ("s3", 0.25)),
         oracleHash = true)
       assigned.select(col("split").as("shard"),
-          expr("graft_lang_id(coalesce(text, ''))").as("lang_pred"),
+          kernel("graft_lang_id", coalesce(col("text"), lit(""))).as("lang_pred"),
           coalesce(TextNorm.tokenCountCol(col("text")), lit(0L)).as("n"))
         .groupBy("shard", "lang_pred")
         .agg(count(lit(1)).as("n_docs"), sum(col("n")).as("total_tokens"))
@@ -2019,7 +2008,7 @@ object SparkEntry {
     "q_quality_model" -> ((s, dir) =>
       docs(s, dir)
         .select(col("doc_id"),
-          expr("graft_quality_model(coalesce(text, ''))").as("q"))
+          kernel("graft_quality_model", coalesce(col("text"), lit(""))).as("q"))
         .select(col("doc_id"), col("q.score").as("score"),
           col("q.n_bigrams").as("n_bigrams"),
           (col("q.score") > 0).cast("int").as("keep"))),
@@ -2040,7 +2029,7 @@ object SparkEntry {
     // cross-multiplication in the projection.
     "q_lm_score" -> ((s, dir) => {
       val d = docs(s, dir)
-      val r = call_function("graft_lm_score", coalesce(col("text"), lit("")))
+      val r = kernel("graft_lm_score", coalesce(col("text"), lit("")))
       d.select(col("doc_id"), r.as("r"))
         .select(col("doc_id"), col("r.lm_score").as("lm_score"),
           col("r.n_trigrams").as("n_trigrams"))
@@ -2062,13 +2051,12 @@ object SparkEntry {
     // map-side-combined 8-cell aggregate. Null text coalesces to ''
     // at first use on BOTH sides (the null-alphabet rule).
     "q_quality_calib" -> ((s, dir) => {
-      GraftFunctions.registerAll(s)
       val d = docs(s, dir)
       val t = coalesce(col("text"), lit(""))
-      val lr = call_function("graft_lm_score", t)
+      val lr = kernel("graft_lm_score", t)
       val stage = d.select(
         (TextOps.qualityScore(t) >= 50L).cast("int").as("hq"),
-        (call_function("graft_quality_score", t) >= 0L).cast("int").as("mq"),
+        (kernel("graft_quality_score", t) >= 0L).cast("int").as("mq"),
         lr.getField("lm_score").as("ls"), lr.getField("n_trigrams").as("nt"))
       stage.select(col("hq"), col("mq"),
           (col("ls") >= col("nt") * 2).cast("int").as("lq"))
@@ -2097,7 +2085,7 @@ object SparkEntry {
             maxDocFreq = 5, oracleHash = true)
           .select(col("id").as("doc_id"), col("clean_text")))
       val lang = cleaned.select(col("doc_id"),
-        expr("graft_lang_id(clean_text)").as("lang_pred"))
+        kernel("graft_lang_id", col("clean_text")).as("lang_pred"))
       graft.ops.LmModel.ccnetBuckets(cleaned, "clean_text")
         .join(lang, "doc_id")
         .select(col("doc_id"), col("lang_pred"), col("lm_q"), col("lm_bucket"),
@@ -2111,7 +2099,7 @@ object SparkEntry {
     // replays every counter through the canonical alphabet.
     "q_c4_gopher" -> ((s, dir) => {
       val d = docs(s, dir)
-      val r = call_function("graft_c4_rules", coalesce(col("text"), lit("")))
+      val r = kernel("graft_c4_rules", coalesce(col("text"), lit("")))
       d.select(col("doc_id"), r.as("r"))
         .select(col("doc_id"),
           col("r.lines").as("lines"), col("r.kept_lines").as("kept_lines"),
@@ -2140,7 +2128,7 @@ object SparkEntry {
           col("doc_id").cast("string")))),
         lit(""), promo, lit(""), promo)
       d.withColumn("t", t)
-        .select(col("doc_id"), expr("graft_repetition(t)").as("r"))
+        .select(col("doc_id"), kernel("graft_repetition", col("t")).as("r"))
         .select(col("doc_id"),
           col("r.lines").as("lines"), col("r.dup_lines").as("dup_lines"),
           col("r.line_chars").as("line_chars"),
@@ -2166,7 +2154,7 @@ object SparkEntry {
       val t = concat_ws(" ", pick(col("doc_id")),
         pick(col("doc_id") * 3 + 1), pick(col("doc_id") * 5 + 2))
       d.withColumn("t", t).select(col("doc_id"),
-        expr("graft_bpe_count(t)").as("n_tokens"),
+        kernel("graft_bpe_count", col("t")).as("n_tokens"),
         length(col("t")).as("n_chars"))
     }),
 
@@ -2179,8 +2167,8 @@ object SparkEntry {
       val t = concat_ws(" ", pick(col("doc_id")),
         pick(col("doc_id") * 3 + 1), pick(col("doc_id") * 5 + 2))
       d.withColumn("t", t).select(col("doc_id"),
-        expr("graft_bpe_tokens(t)").as("tokens"),
-        expr("graft_bpe_count(t)").as("n_tokens"))
+        kernel("graft_bpe_tokens", col("t")).as("tokens"),
+        kernel("graft_bpe_count", col("t")).as("n_tokens"))
     }),
 
     // Vocabulary-coverage / fertility report (round 7 cont.): tokens
@@ -2201,10 +2189,9 @@ object SparkEntry {
         pick(col("doc_id")).as("w1"), pick(col("doc_id") * 3 + 1).as("w2"),
         pick(col("doc_id") * 5 + 2).as("w3"),
         when(hasOov, lit("qzqzqzqz")).otherwise(lit(null)).as("w4"))
-      def cnt(c: Column) = call_function("graft_bpe_count", c)
+      def cnt(c: Column) = kernel("graft_bpe_count", c)
       def frag(c: Column) = when(c.isNull, lit(0))
         .otherwise((cnt(c) === length(c)).cast("int"))
-      GraftFunctions.registerAll(s)
       base.select(col("doc_id"),
           when(col("w4").isNull, lit(3)).otherwise(lit(4)).as("n_words"),
           (cnt(col("w1")) + cnt(col("w2")) + cnt(col("w3")) +
@@ -2232,8 +2219,9 @@ object SparkEntry {
       // contract — the oracle computes the rolling hash once in HUGEINT
       // arithmetic and asserts both columns
       docs(s, dir).select(col("doc_id"),
-        expr("graft_fingerprint64(coalesce(text, ''))").as("fp"),
-        expr("graft_fingerprint64(' ' || replace(coalesce(text, ''), ' ', '  '))").as("fp_ws"))),
+        kernel("graft_fingerprint64", coalesce(col("text"), lit(""))).as("fp"),
+        kernel("graft_fingerprint64",
+          concat(lit(" "), replace(coalesce(col("text"), lit("")), lit(" "), lit("  ")))).as("fp_ws"))),
 
     "q_minhash_dedup" -> ((s, dir) => {
       val base = md5Corpus(docs(s, dir))
@@ -2573,7 +2561,6 @@ object SparkEntry {
     // Production-ef recall over quantized vectors is floor-pinned in
     // ScaleGuardSpec.
     "q_ann_hnsw_i8" -> ((s, dir) => {
-      GraftFunctions.registerAll(s)
       val c = gradedVecs(s)
       val q = c.filter(col("vec_id") < 200)
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
@@ -2607,7 +2594,6 @@ object SparkEntry {
     // verdict is safely far from the boundary on both sides. Centroids
     // are the plan-literal unit axes, so cell = j by argmax-cosine.
     "q_semdedup" -> ((s, dir) => {
-      GraftFunctions.registerAll(s)
       import s.implicits._
       def vec(j: Int, sub: Int, i: Int): Array[Float] = {
         val v = new Array[Float](16)
@@ -2650,14 +2636,12 @@ object SparkEntry {
     // 0.96 / 0.980 to be recalled and pairs at 0.8 / 0.882 to be
     // candidate-generated yet verify-rejected
     "q_embed_graded" -> ((s, dir) => {
-      GraftFunctions.registerAll(s)
       Dedup.embeddingNearDup(gradedVecs(s), "vec_id", "embedding",
           planes = 8, threshold = 0.9, bands = 4)
         .select(col("id_a"), col("id_b"), round(col("cosine"), 6).as("cosine"))
     }),
 
     "q_ann_graded" -> ((s, dir) => {
-      GraftFunctions.registerAll(s)
       val c = gradedVecs(s)
       val q = c.filter(col("vec_id") < 200)
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
@@ -2674,7 +2658,6 @@ object SparkEntry {
     // the trained centroids EQUAL the cluster directions and assignment
     // is provably exact — the whole pipeline is SQL-replayable
     "q_ann_ivf" -> ((s, dir) => {
-      GraftFunctions.registerAll(s)
       import s.implicits._
       def vec(j: Int, scale: Float): Array[Float] = {
         val v = new Array[Float](8); v(j) = (j + 1) * scale; v
@@ -2696,7 +2679,6 @@ object SparkEntry {
     // 8-row cells, so the per-cell beam is exhaustive and the result
     // equals ivfTopK's exact ranking — the q_ann_ivf oracle verbatim.
     "q_ann_ivf_hnsw" -> ((s, dir) => {
-      GraftFunctions.registerAll(s)
       import s.implicits._
       def vec(j: Int, scale: Float): Array[Float] = {
         val v = new Array[Float](8); v(j) = (j + 1) * scale; v
@@ -2718,7 +2700,6 @@ object SparkEntry {
     // exactly SQL-replayable — the oracle re-quantizes and re-ranks
     // every pair itself.
     "q_ann_i8" -> ((s, dir) => {
-      GraftFunctions.registerAll(s)
       val c = gradedVecs(s).select(col("vec_id"),
         Similarity.quantizeI8(col("embedding")).as("embedding"))
       val q = c.filter(col("vec_id") < 200)
@@ -2741,7 +2722,6 @@ object SparkEntry {
     // LUT, code-join, or ADC arithmetic breaks the hash. Pruned-probe
     // recall is floor-pinned in ScaleGuardSpec instead.
     "q_ann_pq" -> ((s, dir) => {
-      GraftFunctions.registerAll(s)
       val d = docs(s, dir)
       val xs = Seq(1f, 0f, 3f, 4f)
       val ys = Seq(0f, 2f, 4f, 3f)
@@ -2776,7 +2756,6 @@ object SparkEntry {
     // exact below 2^53). nprobe=4 probes every cell, so the oracle is
     // plain exact-cosine top-5 over the same construction.
     "q_ann_pqr" -> ((s, dir) => {
-      GraftFunctions.registerAll(s)
       val d = docs(s, dir)
       val xs = Seq(1f, 0f, 3f, 4f)
       val ys = Seq(0f, 2f, 4f, 3f)
@@ -2819,7 +2798,6 @@ object SparkEntry {
     // the cosine of the UNPERMUTED vectors — which is what the oracle
     // scores, with no permutation anywhere in the SQL.
     "q_ann_opq" -> ((s, dir) => {
-      GraftFunctions.registerAll(s)
       val d = docs(s, dir)
       val xs = Seq(1f, 0f, 3f, 4f)
       val ys = Seq(0f, 2f, 4f, 3f)
@@ -2996,7 +2974,6 @@ object SparkEntry {
     // (domain, lang) first, then per domain) so the 100 TB path has no
     // count-distinct Expand; domains resolve via the static PSL kernel
     "q_domain_report" -> ((s, dir) => {
-      GraftFunctions.registerAll(s)
       val d = docs(s, dir)
       val host = when(pmod(col("doc_id"), lit(5)) === 0, "a.news.co.uk")
         .when(pmod(col("doc_id"), lit(5)) === 1, "b.news.co.uk")
@@ -3004,7 +2981,7 @@ object SparkEntry {
         .when(pmod(col("doc_id"), lit(5)) === 3, "www.example.com")
         .otherwise("blog.example.org")
       val base = d.select(
-        call_function("graft_registrable_domain", host).as("domain"),
+        kernel("graft_registrable_domain", host).as("domain"),
         coalesce(col("lang"), lit("")).as("lng"),
         TextOps.qualityScore(col("text")).as("q"))
       base.groupBy("domain", "lng")
@@ -3126,7 +3103,7 @@ object SparkEntry {
         .otherwise(gifHex)
       val hexStr = when(pmod(col("doc_id"), lit(11)) === 3,
         substring(fullHex, 1, 8)).otherwise(fullHex)
-      val hdr = GraftFunctions.graft_image_header(unhex(hexStr))
+      val hdr = kernel("graft_image_header", unhex(hexStr))
       d.select(col("doc_id"),
         hdr.getField("format").as("format"),
         hdr.getField("width").as("width"),
@@ -3155,7 +3132,7 @@ object SparkEntry {
           frame)).otherwise(frame)
       val hexStr = when(pmod(col("doc_id"), lit(11L)) === 3,
         substring(full, 1, 6)).otherwise(full)
-      val h = call_function("graft_mp3_header", unhex(hexStr))
+      val h = kernel("graft_mp3_header", unhex(hexStr))
       d.select(col("doc_id"), h.as("h"))
         .select(col("doc_id"), col("h.version").as("version"),
           col("h.bitrate_kbps").as("bitrate_kbps"),
@@ -3195,7 +3172,7 @@ object SparkEntry {
         .otherwise(vp8x)
       val hexStr = when(pmod(col("doc_id"), lit(11)) === 3,
         substring(fullHex, 1, 20)).otherwise(fullHex)
-      val hdr = GraftFunctions.graft_image_header(unhex(hexStr))
+      val hdr = kernel("graft_image_header", unhex(hexStr))
       d.select(col("doc_id"),
         hdr.getField("format").as("format"),
         hdr.getField("width").as("width"),
@@ -3258,7 +3235,7 @@ object SparkEntry {
         lit("457869660000"), tiffHex)).otherwise(tiffHex)
       val hexStr = when(pmod(col("doc_id"), lit(11)) === 3,
         substring(fullHex, 1, 16)).otherwise(fullHex)
-      val x = call_function("graft_exif", unhex(hexStr))
+      val x = kernel("graft_exif", unhex(hexStr))
       d.select(col("doc_id"),
         x.getField("byte_order").as("byte_order"),
         x.getField("width").as("width"),
@@ -3277,7 +3254,6 @@ object SparkEntry {
     // and the junk family pins the unknown verdict (-1, never a
     // throw). The oracle replays the family matrix.
     "q_image_pii" -> ((s, dir) => {
-      GraftFunctions.registerAll(s)
       val d = docs(s, dir)
       def hb(v: Column, k: Int) =
         lpad(hex(shiftright(v, 8 * k).bitwiseAND(lit(255))), 2, "0")
@@ -3293,7 +3269,7 @@ object SparkEntry {
           lit("49492A00" + "08000000" + "0100"), widthEntry,
           lit("00000000")))
         .otherwise(lit("524946467878"))
-      val x = call_function("graft_exif", unhex(hexStr))
+      val x = kernel("graft_exif", unhex(hexStr))
       d.select(col("doc_id"),
         x.getField("width").as("width"),
         x.getField("gps").as("gps"),
@@ -3309,7 +3285,6 @@ object SparkEntry {
     // truncated family pin the unknown verdict. The oracle replays the
     // construction arithmetic.
     "q_gps" -> ((s, dir) => {
-      GraftFunctions.registerAll(s)
       val d = docs(s, dir)
       def hb(v: Column, k: Int) =
         lpad(hex(shiftright(v, 8 * k).bitwiseAND(lit(255))), 2, "0")
@@ -3339,7 +3314,7 @@ object SparkEntry {
           substring(full, 1, 40))
         .when(fam === 3, noGps)
         .otherwise(full)
-      val g = call_function("graft_gps", unhex(hexStr))
+      val g = kernel("graft_gps", unhex(hexStr))
       d.select(col("doc_id"),
         g.getField("lat_udeg").as("lat_udeg"),
         g.getField("lon_udeg").as("lon_udeg"),
@@ -3374,16 +3349,16 @@ object SparkEntry {
         .when(pmod(col("doc_id"), lit(3)) === 0, base)
         .otherwise(spliced)
       val hashed = d.select(col("doc_id"),
-        GraftFunctions.graft_blockhash(unhex(payload)).as("bhash"),
-        GraftFunctions.graft_blockhash(unhex(base)).as("base_hash"))
+        kernel("graft_blockhash", unhex(payload)).as("bhash"),
+        kernel("graft_blockhash", unhex(base)).as("base_hash"))
       val w = Window.partitionBy("bhash")
       hashed
         .withColumn("group_n",
           when(col("bhash").isNull, lit(0L)).otherwise(count(lit(1)).over(w)))
         .select(col("doc_id"), col("bhash"),
-          GraftFunctions.graft_hamming_hex(col("bhash"), col("base_hash"))
+          kernel("graft_hamming_hex", col("bhash"), col("base_hash"))
             .as("ham_base"),
-          when(GraftFunctions.graft_hamming_hex(col("bhash"), col("base_hash"))
+          when(kernel("graft_hamming_hex", col("bhash"), col("base_hash"))
             .leq(2), 1).otherwise(0).cast("int").as("is_near"),
           col("group_n"))
     }),
@@ -3396,7 +3371,6 @@ object SparkEntry {
     // no hash), so the oracle replays the hash arithmetic and the
     // whole pair pipeline relationally.
     "q_image_dedup" -> ((s, dir) => {
-      GraftFunctions.registerAll(s)
       val d = docs(s, dir)
       val f = pmod(col("doc_id"), lit(50)).cast("int")
       def m5(off: Int) = md5(concat(lit("bh"), (f + off).cast("string")))
@@ -3411,7 +3385,7 @@ object SparkEntry {
         .when(pmod(col("doc_id"), lit(3)) === 0, base)
         .otherwise(spliced)
       val hashed = d.select(col("doc_id"),
-        GraftFunctions.graft_blockhash(unhex(payload)).as("bhash"))
+        kernel("graft_blockhash", unhex(payload)).as("bhash"))
       Dedup.blockhashNearDup(hashed, "doc_id", "bhash",
         bands = 4, maxHamming = 2)
     }),
@@ -3426,11 +3400,9 @@ object SparkEntry {
     // combines; diversity_pm is integer permille (floor div — the
     // oracle-alphabet rule).
     "q_diversity" -> ((s, dir) => {
-      GraftFunctions.registerAll(s)
       val d = docs(s, dir)
       val g = d.select(pmod(col("doc_id"), lit(8L)).as("shard"),
-          explode_outer(call_function("graft_ngrams",
-            coalesce(col("text"), lit("")), lit(2))).as("g"))
+          explode_outer(kernel("graft_ngrams", coalesce(col("text"), lit("")), lit(2))).as("g"))
         .filter(col("g").isNotNull)
       g.groupBy("shard", "g").agg(count(lit(1)).as("c"))
         .groupBy("shard")
@@ -3469,7 +3441,7 @@ object SparkEntry {
         le32(byteRate), le16(align), le16(bits), lit("6461746100000000"))
       val hexStr = when(pmod(col("doc_id"), lit(9)) === 4,
         substring(wavHex, 1, 8)).otherwise(wavHex)
-      val hdr = GraftFunctions.graft_audio_header(unhex(hexStr))
+      val hdr = kernel("graft_audio_header", unhex(hexStr))
       d.select(col("doc_id"),
         hdr.getField("format").as("a_format"),
         hdr.getField("channels").as("a_channels"),
@@ -3505,7 +3477,7 @@ object SparkEntry {
         lit("0000000866726565"), moovSize, lit("6D6F6F76"), mvhd)
       val hexStr = when(pmod(col("doc_id"), lit(11)) === 7,
         substring(mp4Hex, 1, 8)).otherwise(mp4Hex)
-      val hdr = GraftFunctions.graft_video_header(unhex(hexStr))
+      val hdr = kernel("graft_video_header", unhex(hexStr))
       d.select(col("doc_id"),
         hdr.getField("brand").as("brand"),
         hdr.getField("timescale").as("v_timescale"),
@@ -3605,13 +3577,13 @@ object SparkEntry {
         pageObjs, contentObjs,
         lit("trailer<</Root 1 0 R>>\n%%EOF"))
       val bytes = pdf.cast("binary")
-      val info = GraftFunctions.graft_pdf_info(bytes)
+      val info = kernel("graft_pdf_info", bytes)
       d.select(col("doc_id"),
         info.getField("version").as("pdf_version"),
         info.getField("pages").as("n_pages"),
         info.getField("objects").as("n_objects"),
         info.getField("ok").as("ok"),
-        GraftFunctions.graft_pdf_text(bytes).as("pdf_text"))
+        kernel("graft_pdf_text", bytes).as("pdf_text"))
     }),
 
     // ToUnicode CMap text recovery (round 6): subset-font (Type0/
@@ -3636,7 +3608,7 @@ object SparkEntry {
         lit(">\n<0002> <00660069>\nendbfchar\n1 beginbfrange\n<0010> <0013> <"),
         rbase, lit(">\nendbfrange\nendstream endobj\n%%EOF"))
       d.select(col("doc_id"),
-        GraftFunctions.graft_pdf_text(pdf.cast("binary")).as("pdf_text"))
+        kernel("graft_pdf_text", pdf.cast("binary")).as("pdf_text"))
     }),
 
     // WARC crawl-archive ingestion (round 5, beyond-verdict): the format
@@ -3664,8 +3636,8 @@ object SparkEntry {
       val uri = concat(lit("https://ex.com/"), coalesce(col("source"), lit("")))
       val date = lit("2026-01-01T00:00:00Z")
       val body = concat(lit("B"), coalesce(col("text"), lit("")))
-      val rec = call_function("graft_warc_compose", uri, date, body)
-      val parsed = call_function("graft_warc_records", encode(rec, "UTF-8"))
+      val rec = kernel("graft_warc_compose", uri, date, body)
+      val parsed = kernel("graft_warc_records", encode(rec, "UTF-8"))
       val r0 = element_at(parsed, 1)
       d.select(col("doc_id"), rec.as("record"),
         r0.getField("uri").as("rt_uri"),
@@ -3683,7 +3655,6 @@ object SparkEntry {
     // Same title/h1/p construction as q_warc_extract, so the extracted
     // text is the ws-aware span join the oracle can state exactly.
     "q_warc_wet" -> ((s, dir) => {
-      GraftFunctions.registerAll(s)
       val d = docs(s, dir)
       val html = concat(lit("<html><head><title>"),
         escTxt(coalesce(col("source"), lit(""))),
@@ -3692,14 +3663,13 @@ object SparkEntry {
         lit("</p></body></html>"))
       val uri = concat(lit("https://w.ex/"), col("doc_id").cast("string"))
       val date = lit("2026-02-02T00:00:00Z")
-      val rec = call_function("graft_warc_compose", uri, date, html)
+      val rec = kernel("graft_warc_compose", uri, date, html)
       val r0 = element_at(
-        call_function("graft_warc_records", encode(rec, "UTF-8")), 1)
-      val wtext = GraftFunctions.parse_html_text(r0.getField("body"))
-      val wet = call_function("graft_warc_compose_wet",
-        uri, date, r0.getField("record_id"), wtext)
+        kernel("graft_warc_records", encode(rec, "UTF-8")), 1)
+      val wtext = kernel("parse_html_text", r0.getField("body"))
+      val wet = kernel("graft_warc_compose_wet", uri, date, r0.getField("record_id"), wtext)
       val w0 = element_at(
-        call_function("graft_warc_records", encode(wet, "UTF-8")), 1)
+        kernel("graft_warc_records", encode(wet, "UTF-8")), 1)
       d.select(col("doc_id"), wet.as("wet_record"),
         w0.getField("warc_type").as("rt_type"),
         w0.getField("uri").as("rt_uri"),
@@ -3708,7 +3678,6 @@ object SparkEntry {
     }),
 
     "q_warc" -> ((s, dir) => {
-      GraftFunctions.registerAll(s)
       val d = docs(s, dir)
       val crlf = "\r\n"
       val h = md5(coalesce(col("text"), lit("")).cast("binary"))
@@ -3745,7 +3714,7 @@ object SparkEntry {
         .when(fam === 2, full.substr(lit(1), length(full) - 10))
         .otherwise(concat(full, rec2))
       d.select(col("doc_id"),
-          posexplode(GraftFunctions.graft_warc_records(blob.cast("binary")))
+          posexplode(kernel("graft_warc_records", blob.cast("binary")))
             .as(Seq("idx", "r")))
         .select(col("doc_id"), col("idx"),
           col("r.warc_type").as("w_type"), col("r.uri").as("uri"),
@@ -3762,7 +3731,6 @@ object SparkEntry {
     // split first — any byte slip in the WARC walk shifts every
     // extracted offset and breaks the hash.
     "q_warc_extract" -> ((s, dir) => {
-      GraftFunctions.registerAll(s)
       val d = docs(s, dir)
       val crlf = "\r\n"
       val h = md5(coalesce(col("text"), lit("")).cast("binary"))
@@ -3779,10 +3747,10 @@ object SparkEntry {
         lit(crlf + "Content-Length: "), octet_length(http).cast("string"),
         lit(crlf + crlf), http, lit(crlf + crlf))
       d.select(col("doc_id"),
-          explode(GraftFunctions.graft_warc_records(blob.cast("binary"))).as("r"))
+          explode(kernel("graft_warc_records", blob.cast("binary"))).as("r"))
         .filter(col("r.ok") && col("r.warc_type") === "response")
         .select(col("doc_id"), col("r.uri").as("uri"),
-          explode(GraftFunctions.parse_html_spans(col("r.body"))).as("s"))
+          explode(kernel("parse_html_spans", col("r.body"))).as("s"))
         .select(col("doc_id"), col("uri"), col("s.kind").as("kind"),
           col("s.text").as("span_text"), col("s.offset").as("offset"))
     }),
@@ -3798,7 +3766,6 @@ object SparkEntry {
     // oracle reconstructs every field from construction arithmetic
     // (octet lengths over the escaped embeds, sqlTokText title view).
     "q_wat_manifest" -> ((s, dir) => {
-      GraftFunctions.registerAll(s)
       val d = docs(s, dir)
       val crlf = "\r\n"
       val fam = pmod(col("doc_id"), lit(3L))
@@ -3818,14 +3785,14 @@ object SparkEntry {
         lit(crlf + "Content-Length: "), octet_length(http).cast("string"),
         lit(crlf + crlf), http, lit(crlf + crlf))
       d.select(col("doc_id"),
-          explode(GraftFunctions.graft_warc_records(blob.cast("binary"))).as("r"))
+          explode(kernel("graft_warc_records", blob.cast("binary"))).as("r"))
         .filter(col("r.ok") && col("r.warc_type") === "response")
         .select(col("doc_id"), col("r.uri").as("uri"),
           col("r.status").as("status"), col("r.mime").as("mime"),
           col("r.charset").as("charset"), col("r.length").as("rec_length"),
-          call_function("graft_page_meta", col("r.body"))
+          kernel("graft_page_meta", col("r.body"))
             .getField("title").as("title"),
-          size(filter(call_function("graft_link_table", col("r.body")),
+          size(filter(kernel("graft_link_table", col("r.body")),
             l => l.getField("href").isNotNull && l.getField("href") =!= ""))
             .as("n_links"))
     }),
@@ -3839,7 +3806,6 @@ object SparkEntry {
     // unhex), Content-Length counts OCTETS, and the oracle states the
     // expected decoded code points per family.
     "q_warc_charset" -> ((s, dir) => {
-      GraftFunctions.registerAll(s)
       val d = docs(s, dir)
       val crlf = "\r\n"
       val fam = pmod(col("doc_id"), lit(5))
@@ -3866,7 +3832,7 @@ object SparkEntry {
           lit(crlf + crlf)).cast("binary"),
         httpBin, lit(crlf + crlf).cast("binary"))
       d.select(col("doc_id"), fam.cast("int").as("fam"),
-          explode(GraftFunctions.graft_warc_records(blob)).as("r"))
+          explode(kernel("graft_warc_records", blob)).as("r"))
         .select(col("doc_id"), col("fam"),
           col("r.charset").as("charset"), col("r.body").as("body"),
           col("r.ok").as("ok"))
@@ -3880,7 +3846,6 @@ object SparkEntry {
     // family (%11==5 cuts the final 10 bytes) pins the ok=false
     // available-span/prefix-digest verdicts.
     "q_warc_index" -> ((s, dir) => {
-      GraftFunctions.registerAll(s)
       val d = docs(s, dir)
       val crlf = "\r\n"
       val h = md5(coalesce(col("text"), lit("")).cast("binary"))
@@ -3902,7 +3867,7 @@ object SparkEntry {
       val blob = when(pmod(col("doc_id"), lit(11)) === 5,
         substring(full, lit(1), length(full) - 10)).otherwise(full)
       d.select(col("doc_id"),
-          explode(GraftFunctions.graft_warc_index(blob.cast("binary"))).as("r"))
+          explode(kernel("graft_warc_index", blob.cast("binary"))).as("r"))
         .select(col("doc_id"), col("r.idx").as("idx"),
           col("r.rec_offset").as("rec_offset"), col("r.rec_len").as("rec_len"),
           col("r.warc_type").as("warc_type"),
@@ -3919,7 +3884,6 @@ object SparkEntry {
     // join — the kernel-explode multi-consumer discipline). The
     // oracle replays the family arithmetic.
     "q_warc_dedup" -> ((s, dir) => {
-      GraftFunctions.registerAll(s)
       val d = docs(s, dir)
       val crlf = "\r\n"
       val h = md5(concat(lit("wd"),
@@ -3940,7 +3904,7 @@ object SparkEntry {
         lit(crlf + crlf), pay2, lit(crlf + crlf))
       val blob = concat(rec1, rec2)
       val recs = graft.ops.Snapshot(d.select(col("doc_id"),
-          explode_outer(GraftFunctions.graft_warc_index(blob.cast("binary")))
+          explode_outer(kernel("graft_warc_index", blob.cast("binary")))
             .as("r"))
         .filter(col("r").isNotNull)
         .select(col("doc_id"), col("r.idx").as("idx"),
@@ -3962,7 +3926,6 @@ object SparkEntry {
     // streamed union must equal the batch construction replay row for
     // row regardless of arrival order — that invariance IS the oracle.
     "q_stream_warc" -> ((s, dir) => {
-      GraftFunctions.registerAll(s)
       val d = docs(s, dir)
       val crlf = "\r\n"
       val h = md5(coalesce(col("text"), lit("")).cast("binary"))
@@ -3998,7 +3961,6 @@ object SparkEntry {
     // oracle replays segmentation as a per-batch window cumsum and
     // gates the composed bytes via md5(record).
     "q_stream_warc_segments" -> ((s, dir) => {
-      GraftFunctions.registerAll(s)
       val d = docs(s, dir)
       val rows = d.select(col("doc_id"),
         concat(lit("https://ex.com/"),
@@ -4021,7 +3983,6 @@ object SparkEntry {
     // segment. id_check / content_check are COMMUTATIVE md5-prefix
     // sums (map-side combinable; never an order-dependent concat).
     "q_segment_manifest" -> ((s, dir) => {
-      GraftFunctions.registerAll(s)
       val d = docs(s, dir)
       val rows = d.select(col("doc_id"),
         concat(lit("https://ex.com/"),
@@ -4066,7 +4027,6 @@ object SparkEntry {
     // the oracle replays the mutation families (ad insertion / list
     // removal / heading demotion) against the base construction.
     "q_dom_diff" -> ((s, dir) => {
-      GraftFunctions.registerAll(s)
       val d = docs(s, dir)
       val base = "<div><h1>T</h1><p>a</p><p>b</p>" +
         "<ul><li>x</li><li>y</li></ul></div>"
@@ -4078,7 +4038,7 @@ object SparkEntry {
           "<ul><li>x</li><li>y</li></ul></div>"))
       def tagCounts(html: Column, as: String) =
         d.select(col("doc_id"),
-            explode_outer(call_function("graft_node_table", html)).as("n"))
+            explode_outer(kernel("graft_node_table", html)).as("n"))
           .filter(col("n").isNotNull)
           .filter(col("n.ntype") === "element")
           .groupBy(col("doc_id"), col("n.tag").as("tag"))
@@ -4159,7 +4119,7 @@ object SparkEntry {
       val d = docs(s, dir)
       val q = d.filter(col("doc_id") < 3)
         .select(col("doc_id").as("qid"),
-          element_at(call_function("graft_ngrams", col("text"), lit(1)), 1).as("term"))
+          element_at(kernel("graft_ngrams", col("text"), lit(1)), 1).as("term"))
         .filter(col("term").isNotNull)
       TextOps.bm25(d, "doc_id", "text", q, "qid", "term", k = 10)
     }),
@@ -4174,7 +4134,7 @@ object SparkEntry {
       val d = docs(s, dir)
       val q = d.filter(col("doc_id") < 3)
         .select(col("doc_id").as("qid"),
-          explode_outer(slice(call_function("graft_ngrams", col("text"), lit(1)), 1, 3)).as("term"))
+          explode_outer(slice(kernel("graft_ngrams", col("text"), lit(1)), 1, 3)).as("term"))
         .filter(col("term").isNotNull)
         .distinct()
       TextOps.bm25Multi(d, "doc_id", "text", q, "qid", "term", k = 10)
@@ -4207,7 +4167,6 @@ object SparkEntry {
     // email) so every stage demonstrably drops/changes rows. The DuckDB
     // oracle replays the full chain stage by stage.
     "q_clean_pipeline" -> ((s, dir) => {
-      GraftFunctions.registerAll(s)
       val d = docs(s, dir)
       val junk = "@#$% " * 200
       val tx = when(pmod(col("doc_id"), lit(10)) === 6,
@@ -4227,7 +4186,7 @@ object SparkEntry {
         // re-evaluates graft_repetition per field access once the
         // predicates collapse (measured 6.6 evals/row; PlanSpec pins
         // this shape at exactly 1/row via repetitionEvals)
-        .filter(expr("graft_repetition_ok(t, 10, 3, 5)"))
+        .filter(kernel("graft_repetition_ok", col("t"), lit(10), lit(3), lit(5)))
         .withColumn("redacted", graft.ops.Pii.redact(col("t")))
       // the dedup keep-list needs survivors TWICE (group aggregate +
       // rejoin); a checkpoint materializes the quality/repetition/
@@ -4349,7 +4308,7 @@ object SparkEntry {
         (-7L, "deep.x.y.ck"), (-8L, "s3.amazonaws.com"),
         (-9L, "b.s3.amazonaws.com")).toDF("doc_id", "host")
       fromDocs.union(planted).select(col("doc_id"), col("host"),
-        call_function("graft_registrable_domain", col("host")).as("registrable"))
+        kernel("graft_registrable_domain", col("host")).as("registrable"))
     }),
 
     // Crawl frontier builder (round 7 cont.): the END-TO-END loop the
@@ -4365,7 +4324,6 @@ object SparkEntry {
     // u2 = /{p|priv}/{id} (direct; priv when id%5==0 — robots-blocked)
     // both resolve to u2's form, so every kept target has n_sources=2.
     "q_crawl_frontier" -> ((s, dir) => {
-      GraftFunctions.registerAll(s)
       val d = docs(s, dir)
       val hub = pmod(col("doc_id"), lit(7L)).cast("string")
       val idStr = col("doc_id").cast("string")
@@ -4379,7 +4337,7 @@ object SparkEntry {
         lit("<a href=\""), u2, lit("\">b</a>"),
         lit("<a href=\"/rel\">r</a><a name=\"n\">skip</a>"))
       val frontier = d.select(
-          explode_outer(call_function("graft_link_table", html)).as("l"))
+          explode_outer(kernel("graft_link_table", html)).as("l"))
         .filter(col("l").isNotNull)
         .select(col("l.href").as("url"))
         .filter(UrlOps.scheme(col("url")) === "https")
@@ -4391,7 +4349,7 @@ object SparkEntry {
           "left")
         .select(coalesce(col("final"), col("url")).as("final_url"))
       val robots = "User-agent: *\nDisallow: /priv\n"
-      val allowed = fin.filter(GraftFunctions.graft_robots_allows(
+      val allowed = fin.filter(kernel("graft_robots_allows",
         lit(robots), lit("graftbot/1.0"), UrlOps.path(col("final_url"))))
       val targets = allowed
         .select(col("final_url"),
@@ -4417,26 +4375,25 @@ object SparkEntry {
     // each doc's robots carries one Sitemap directive + a /priv
     // disallow; its sitemap lists an allowed and a disallowed url.
     "q_discovery_chain" -> ((s, dir) => {
-      GraftFunctions.registerAll(s)
       val d = docs(s, dir)
       val hub = pmod(col("doc_id"), lit(7L)).cast("string")
       val idStr = col("doc_id").cast("string")
       val robots = concat(
         lit("User-agent: *\nDisallow: /priv\nSitemap: https://ex"), hub,
         lit(".com/sm-"), idStr, lit(".xml\n"))
-      val smUrl = call_function("graft_robots_meta", robots,
+      val smUrl = kernel("graft_robots_meta", robots,
         lit("graftbot/1.0")).getField("sitemaps").getItem(0)
       val xml = concat(
         lit("<urlset><url><loc>https://ex"), hub, lit(".com/p/"), idStr,
         lit("</loc></url><url><loc>https://ex"), hub, lit(".com/priv/"),
         idStr, lit("</loc></url></urlset>"))
       d.select(col("doc_id"), smUrl.as("sitemap_url"),
-          explode_outer(call_function("graft_sitemap", xml)).as("e"),
+          explode_outer(kernel("graft_sitemap", xml)).as("e"),
           robots.as("r"))
         .filter(col("e").isNotNull)
         .select(col("doc_id"), col("sitemap_url"),
           col("e.loc").as("loc"),
-          GraftFunctions.graft_robots_allows(col("r"), lit("graftbot/1.0"),
+          kernel("graft_robots_allows", col("r"), lit("graftbot/1.0"),
             UrlOps.path(col("e.loc"))).as("allowed"))
     }),
 
@@ -4451,7 +4408,6 @@ object SparkEntry {
     // keeps 'bad.co.uk' distinct from its subdomains' eTLD+1) against
     // the */Disallow/Allow robots families.
     "q_crawl_policy" -> ((s, dir) => {
-      GraftFunctions.registerAll(s)
       import graft.ops.UrlOps
       val d = docs(s, dir)
       val host = when(pmod(col("doc_id"), lit(4)) === 0, "WWW.Bad.Co.UK")
@@ -4465,7 +4421,7 @@ object SparkEntry {
       val robots = "User-agent: *\nDisallow: /private\nAllow: /private/pub\n"
       val dom = UrlOps.registrableDomain(UrlOps.host(url))
       val blocked = dom.isin("bad.co.uk")
-      val allowed = GraftFunctions.graft_robots_allows(
+      val allowed = kernel("graft_robots_allows",
         lit(robots), lit("graftbot/1.0"), path)
       d.select(col("doc_id"), UrlOps.normalize(url).as("url_norm"),
         dom.as("reg_domain"), blocked.as("blocked"), allowed.as("robots_ok"),
@@ -4478,7 +4434,6 @@ object SparkEntry {
     // null when absent). The %9==4 family pins the empty/absent path;
     // the agent split pins group selection on both delay values.
     "q_robots_meta" -> ((s, dir) => {
-      GraftFunctions.registerAll(s)
       val d = docs(s, dir)
       val hub = pmod(col("doc_id"), lit(7L)).cast("string")
       val sm = pmod(col("doc_id"), lit(10L)).cast("string")
@@ -4492,7 +4447,7 @@ object SparkEntry {
       val agent = when(pmod(col("doc_id"), lit(2L)) === 0, "graftbot/1.0")
         .otherwise("otherbot/2.0")
       d.select(col("doc_id"),
-          call_function("graft_robots_meta", robots, agent).as("m"))
+          kernel("graft_robots_meta", robots, agent).as("m"))
         .select(col("doc_id"),
           size(col("m.sitemaps")).as("n_sitemaps"),
           concat_ws("|", col("m.sitemaps")).as("sitemaps"),
@@ -4511,7 +4466,6 @@ object SparkEntry {
     // construction. followable = 0 when the page says nofollow, else
     // links minus rel-nofollow ones.
     "q_noindex" -> ((s, dir) => {
-      GraftFunctions.registerAll(s)
       val d = docs(s, dir)
       val junk = substring(md5(coalesce(col("text"), lit(""))), 1, 6)
       val fam = pmod(col("doc_id"), lit(5L))
@@ -4530,8 +4484,8 @@ object SparkEntry {
           "<a href=\"/l2\" rel=\"external NoFollow ugc\">b</a>" +
           "<a href=\"/l3\">c</a>"), extra)
       val stage = d.select(col("doc_id"),
-        call_function("graft_page_meta", html).getField("robots").as("robots"),
-        call_function("graft_link_table", html).as("ls"))
+        kernel("graft_page_meta", html).getField("robots").as("robots"),
+        kernel("graft_link_table", html).as("ls"))
       val toks = transform(split(col("robots"), ","),
         t => TextNorm.lowerCol(TextNorm.trimCol(t)))
       def dir0(t: String) = array_contains(toks, t)
@@ -4562,7 +4516,6 @@ object SparkEntry {
     // unparseable from byte 0 (the q_jsonl Jackson-PERMISSIVE lesson);
     // the no-ld family contributes zero rows.
     "q_jsonld" -> ((s, dir) => {
-      GraftFunctions.registerAll(s)
       val d = docs(s, dir)
       val nm = translate(substring(coalesce(col("text"), lit("")), 1, 24),
         "<", "")
@@ -4583,7 +4536,7 @@ object SparkEntry {
         .otherwise(lit("<script type=\"text/javascript\">var x=1;</script>"))
       val html = concat(lit("<head><title>t</title></head><body>"), body)
       d.select(col("doc_id"),
-          explode_outer(call_function("graft_jsonld", html)).as("j"))
+          explode_outer(kernel("graft_jsonld", html)).as("j"))
         .filter(col("j").isNotNull)
         .select(col("doc_id"), col("j.script_id").as("script_id"),
           from_json(col("j.raw"), org.apache.spark.sql.types.StructType
@@ -4596,7 +4549,6 @@ object SparkEntry {
     }),
 
     "q_robots" -> ((s, dir) => {
-      GraftFunctions.registerAll(s)
       val d = docs(s, dir)
       val robots = "# crawl policy\n" +
         "User-agent: graftbot\nDisallow: /gb-private\nAllow: /gb-private/ok\n\n" +
@@ -4614,7 +4566,7 @@ object SparkEntry {
         .when(pmod(col("doc_id"), lit(6)) === 4, "/data/x.bak")
         .otherwise("/data/x.bak.txt")
       d.select(col("doc_id"), agent.as("agent"), path.as("path"),
-        GraftFunctions.graft_robots_allows(lit(robots), agent, path)
+        kernel("graft_robots_allows", lit(robots), agent, path)
           .as("allowed"))
     }),
 
@@ -4782,7 +4734,7 @@ object SparkEntry {
     "q_sketch_hll" -> ((s, dir) => {
       val d = docs(s, dir)
       val toks = d.select(coalesce(col("source"), lit("")).as("src"),
-          explode_outer(call_function("graft_ngrams", col("text"), lit(1))).as("tok"))
+          explode_outer(kernel("graft_ngrams", col("text"), lit(1))).as("tok"))
         .filter(col("tok").isNotNull)
       val keyed = graft.ops.Snapshot(
         toks.groupBy("src", "tok").agg(count(lit(1)).as("c")))
@@ -4801,7 +4753,7 @@ object SparkEntry {
     // join; the counter table is broadcast at probe time.
     "q_sketch_cms" -> ((s, dir) => {
       val d = docs(s, dir)
-      def ngrams1(c: Column) = call_function("graft_ngrams", c, lit(1))
+      def ngrams1(c: Column) = kernel("graft_ngrams", c, lit(1))
       val cnt = graft.ops.Snapshot(
         d.select(explode_outer(ngrams1(col("text"))).as("tok"))
           .filter(col("tok").isNotNull)
@@ -4830,11 +4782,10 @@ object SparkEntry {
     // (ids + spans + hashes) before feeding both sides of the
     // shared-chunk count join — the Snapshot multi-consumer rule.
     "q_cdc_chunks" -> ((s, dir) => {
-      GraftFunctions.registerAll(s)
       val d = docs(s, dir)
       val src = substring(coalesce(col("text"), lit("")), 1, 120)
       val chunks = d.select(col("doc_id"), src.as("s"),
-          posexplode_outer(call_function("graft_cdc_chunks", src, lit(64)))
+          posexplode_outer(kernel("graft_cdc_chunks", src, lit(64)))
             .as(Seq("cid", "c")))
         .filter(col("c").isNotNull)
         .select(col("doc_id"), (col("cid") + 1).as("chunk_id"),
@@ -4924,7 +4875,6 @@ object SparkEntry {
     // (ASCII is normalization-inert; the suffix starts at a base char
     // so nothing composes across the boundary).
     "q_nfc" -> ((s, dir) => {
-      GraftFunctions.registerAll(s)
       val d = docs(s, dir)
       val slice = regexp_replace(
         substring(coalesce(col("text"), lit("")), 1, 16), "[^ -~]", "")
@@ -4935,7 +4885,7 @@ object SparkEntry {
         .when(fam === 3, lit("caf\u00E9"))
         .otherwise(lit("q\u0307"))
       val payload = concat(slice, lit("|"), suffix)
-      val norm = call_function("graft_nfc", payload)
+      val norm = kernel("graft_nfc", payload)
       d.select(col("doc_id"), norm.as("norm"),
         (payload =!= norm).cast("int").as("changed"))
     }),
@@ -4948,15 +4898,13 @@ object SparkEntry {
     // pair collapses to one group of 2. The oracle replays with
     // DuckDB's nfc_normalize in the same key position.
     "q_dedup_nfc" -> ((s, dir) => {
-      GraftFunctions.registerAll(s)
       val d = docs(s, dir)
       val famTxt = md5(concat(lit("nf"),
         expr("doc_id div 2").cast("string")))
       val t = when(pmod(col("doc_id"), lit(2L)) === 0,
           concat(lit("caf\u00E9 "), famTxt))
         .otherwise(concat(lit("cafe\u0301 "), famTxt))
-      val key = md5(call_function("graft_nfc",
-        TextNorm.lowerCol(TextNorm.trimCol(t))))
+      val key = md5(kernel("graft_nfc", TextNorm.lowerCol(TextNorm.trimCol(t))))
       d.select(col("doc_id"), key.as("k"))
         .groupBy("k")
         .agg(min(col("doc_id")).as("canon_id"),
@@ -4973,7 +4921,6 @@ object SparkEntry {
     // guard), and already-Unicode text is not a byte view. The ASCII
     // doc slice rides along on every family (inert on both sides).
     "q_demojibake" -> ((s, dir) => {
-      GraftFunctions.registerAll(s)
       val d = docs(s, dir)
       val slice = regexp_replace(
         substring(coalesce(col("text"), lit("")), 1, 16), "[^ -~]", "")
@@ -4984,7 +4931,7 @@ object SparkEntry {
         .when(fam === 2, lit("caf\u00E9"))
         .otherwise(lit("\u65E5"))
       val payload = concat(slice, lit("|"), suffix)
-      val fixed = call_function("graft_demojibake", payload)
+      val fixed = kernel("graft_demojibake", payload)
       d.select(col("doc_id"), fixed.as("fixed"),
         (payload =!= fixed).cast("int").as("was_fixed"))
     }),

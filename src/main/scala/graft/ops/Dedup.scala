@@ -4,6 +4,7 @@ import org.apache.spark.{HashPartitioner, Partitioner}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import graft.spark.KernelRegistry.kernel
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 import scala.collection.mutable
@@ -294,22 +295,20 @@ object Dedup {
   def minhashCandidates(df: DataFrame, idCol: String, textCol: String,
                         k: Int, bands: Int, jaccardThreshold: Double,
                         maxBucketSize: Int, shingleN: Int): DataFrame = {
-    val spark = df.sparkSession
-    TextOps.registerAll(spark)
     val rows = k / bands
     val sigExpr =
-      if (shingleN > 0) s"graft_minhash_shingle(text, $k, $shingleN)"
-      else s"graft_minhash(text, $k)"
+      if (shingleN > 0) kernel("graft_minhash_shingle", col("text"), lit(k), lit(shingleN))
+      else kernel("graft_minhash", col("text"), lit(k))
     val verifyExpr =
-      if (shingleN > 0) s"graft_jaccard_shingle(text_a, text_b, $shingleN)"
-      else "graft_jaccard(text_a, text_b)"
+      if (shingleN > 0) kernel("graft_jaccard_shingle", col("text_a"), col("text_b"), lit(shingleN))
+      else kernel("graft_jaccard", col("text_a"), col("text_b"))
     val texts = df.select(col(idCol).as("id"), col(textCol).as("text"))
       .filter(length(trim(col(textCol))) > 0)
     // candidate generation shuffles ONLY (id, band, bucket) — at corpus
     // scale the banding explode must not replicate document text ×bands
     // through the wire; text rejoins per VERIFIED candidate id below
     val banded = texts
-      .withColumn("sig", expr(sigExpr))
+      .withColumn("sig", sigExpr)
       .select(col("id"),
         posexplode(transform(sequence(lit(0), lit(bands - 1)),
           b => hash(slice(col("sig"), b * rows + 1, lit(rows)), b))).as(Seq("band", "bucket")))
@@ -317,7 +316,7 @@ object Dedup {
     pairs
       .join(texts.select(col("id").as("id_a"), col("text").as("text_a")), "id_a")
       .join(texts.select(col("id").as("id_b"), col("text").as("text_b")), "id_b")
-      .withColumn("jaccard", expr(verifyExpr))
+      .withColumn("jaccard", verifyExpr)
       .filter(col("jaccard") >= jaccardThreshold)
       .select("id_a", "id_b", "jaccard")
   }
@@ -336,8 +335,6 @@ object Dedup {
                         maxBucketSize: Int = 256): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= 15,
       s"maxHamming=$maxHamming: bands get too narrow past 15 (64/16 = 4 bits)")
-    val spark = df.sparkSession
-    TextOps.registerAll(spark)
     val nBands = maxHamming + 1
     // band b covers bits [lo_b, lo_{b+1}) with boundaries b*64/nBands —
     // widths differ by at most 1 bit; every bit is in exactly one band
@@ -350,13 +347,13 @@ object Dedup {
     }
     val sig = df.select(col(idCol).as("id"), col(textCol).as("text"))
       .filter(length(trim(col("text"))) > 0)
-      .withColumn("sim", expr("graft_simhash64(text)"))
+      .withColumn("sim", kernel("graft_simhash64", col("text")))
     // the 8-byte signature RIDES the banding shuffle (carry) — verify
     // needs no rejoin, and the simhash kernel runs exactly once per doc
     val banded = sig.select(col("id"), col("sim"),
       posexplode(array(bandCols: _*)).as(Seq("band", "bucket")))
     guardedBucketPairs(banded, maxBucketSize, carry = Seq("sim"))
-      .withColumn("hamming", expr("graft_hamming64(sim_a, sim_b)"))
+      .withColumn("hamming", kernel("graft_hamming64", col("sim_a"), col("sim_b")))
       .filter(col("hamming") <= maxHamming)
       .select("id_a", "id_b", "hamming")
   }
@@ -371,8 +368,6 @@ object Dedup {
                         threshold: Double = 0.5,
                         maxBlockSize: Int = 256,
                         oracleBlocking: Boolean = false): DataFrame = {
-    val spark = df.sparkSession
-    TextOps.registerAll(spark)
     // block key = min token-hash over the first 64 tokens. Two key
     // families, same blocking semantics:
     //  - production (default): xxhash64 — one 64-bit hash per token; at
@@ -427,7 +422,7 @@ object Dedup {
         coalesce(col("r.id"), col("r.hub")).as("id_b"))
       .join(texts.select(col("id").as("id_a"), col("text").as("text_a")), "id_a")
       .join(texts.select(col("id").as("id_b"), col("text").as("text_b")), "id_b")
-      .withColumn("jaccard", expr("graft_jaccard(text_a, text_b)"))
+      .withColumn("jaccard", kernel("graft_jaccard", col("text_a"), col("text_b")))
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
   }
@@ -545,7 +540,6 @@ object Dedup {
                     oracleHash: Boolean = false,
                     broadcastContam: Boolean = true): DataFrame = {
     require(n >= 1, s"n-gram size must be >= 1: $n")
-    TextOps.registerAll(corpus.sparkSession)
     def key(c: Column): Column = if (oracleHash) md5(c) else xxhash64(c)
     // one-pass native n-gram kernel — the built-in
     // transform/sequence/slice formulation is semantically identical
@@ -553,7 +547,7 @@ object Dedup {
     // subtree per lambda element under interpreted HOF eval, n× per row
     def ngramKeys(df: DataFrame, ngCols: Column*): DataFrame = {
       val src = df.select((ngCols :+ col("__text")): _*)
-        .withColumn("ngs", call_function("graft_ngrams", col("__text"), lit(n)))
+        .withColumn("ngs", kernel("graft_ngrams", col("__text"), lit(n)))
       // explode_OUTER + post-filter, not explode: InferFiltersFromGenerate
       // adds size(child)>0 AND isnotnull(child) under a non-outer
       // generate, and predicate pushdown substitutes the kernel into
@@ -893,7 +887,6 @@ object Dedup {
   def duplicatedNgramSpans(df: DataFrame, idCol: String, textCol: String,
                            n: Int = 13,
                            oracleHash: Boolean = false): DataFrame = {
-    TextOps.registerAll(df.sparkSession)
     def key(c: Column): Column = if (oracleHash) md5(c) else xxhash64(c)
     val ids = df.select(col(idCol).as("id"))
     // compact (id, pos, k) snapshot: the counts aggregate and the flag
@@ -904,7 +897,7 @@ object Dedup {
     // substituted in — 3 evals/row
     val keyed = Snapshot(df
       .select(col(idCol).as("id"),
-        call_function("graft_ngrams", col(textCol), lit(n)).as("ngs"))
+        kernel("graft_ngrams", col(textCol), lit(n)).as("ngs"))
       .select(col("id"), posexplode_outer(col("ngs")).as(Seq("pos", "ng")))
       .filter(col("ng").isNotNull)
       .select(col("id"), col("pos"), key(col("ng")).as("k")))
@@ -955,12 +948,11 @@ object Dedup {
   def removeDupSpans(df: DataFrame, idCol: String, textCol: String,
                      n: Int = 13,
                      oracleHash: Boolean = false): DataFrame = {
-    TextOps.registerAll(df.sparkSession)
     def key(c: Column): Column = if (oracleHash) md5(c) else xxhash64(c)
     val base = df.select(col(idCol).as("id"), col(textCol).as("text"))
     val keyed = Snapshot(base
       .select(col("id"),
-        call_function("graft_ngrams", col("text"), lit(n)).as("ngs"))
+        kernel("graft_ngrams", col("text"), lit(n)).as("ngs"))
       .select(col("id"), posexplode_outer(col("ngs")).as(Seq("pos", "ng")))
       .filter(col("ng").isNotNull)
       .select(col("id"), col("pos"), key(col("ng")).as("k")))
@@ -1095,8 +1087,7 @@ object Dedup {
         col("x.min1").as("na"), col("y.min1").as("nb"))
       .distinct()
     val judged = pairs.withColumn("ham",
-      org.apache.spark.sql.functions.call_function(
-        "graft_hamming_hex", col("ha"), col("hb")))
+      kernel("graft_hamming_hex", col("ha"), col("hb")))
     val dir0 = judged.select(col("ha").as("h"), col("mb").as("om"),
         col("nb").as("omin"), col("ham"))
       .unionAll(judged.select(col("hb").as("h"), col("ma").as("om"),

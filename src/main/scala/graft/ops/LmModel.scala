@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.spark.KernelRegistry.kernel
 
 /** Count-based language-model familiarity scorer — the CCNet-style LM
   * filter stage (Wenzek et al. 2020 use a KenLM trained on Wikipedia
@@ -139,8 +140,7 @@ object LmModel {
     * aggregate, broadcast literal thresholds; no join, no window. */
   def ccnetBuckets(docs: DataFrame, textCol: String,
                    idCol: String = "doc_id"): DataFrame = {
-    val r = call_function("graft_lm_score",
-      coalesce(col(textCol), lit("")))
+    val r = kernel("graft_lm_score", coalesce(col(textCol), lit("")))
     val scored = Snapshot(docs
       .select(col(idCol), r.as("r"))
       .select(col(idCol), col("r.lm_score").as("lm_score"),

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.spark.KernelRegistry.kernel
 
 /** Approximate-nearest-neighbor search over embedding columns
   * (Array[Float]). Dot products are pure built-in compositions
@@ -11,10 +12,9 @@ object Similarity {
 
   /** Cosine similarity of two float-array columns (double math) — the
     * native single-pass kernel (graft_cosine → VecUdfs.cosine); exact
-    * arithmetic twin of aggregate(zip_with(...)) / greatest(na*nb,1e-12).
-    * Requires GraftFunctions.registerAll on the session. */
+    * arithmetic twin of aggregate(zip_with(...)) / greatest(na*nb,1e-12). */
   def cosine(a: Column, b: Column): Column =
-    call_function("graft_cosine", a, b)
+    kernel("graft_cosine", a, b)
 
   def l2Norm(a: Column): Column =
     sqrt(aggregate(a, lit(0.0), (acc, v) => acc + v.cast("double") * v.cast("double")))
@@ -24,11 +24,11 @@ object Similarity {
     * The per-vector scale cancels in cosine, so the quantized corpus
     * needs NO scale column; `cosineI8` ranks directly. Distortion vs
     * f32 cosine is measured and floor-pinned in ScaleGuardSpec. */
-  def quantizeI8(v: Column): Column = call_function("graft_quantize_i8", v)
+  def quantizeI8(v: Column): Column = kernel("graft_quantize_i8", v)
 
   /** Cosine over int8-quantized vectors (graft_cosine_i8): exact long
     * integer dot/norms, one double division. */
-  def cosineI8(a: Column, b: Column): Column = call_function("graft_cosine_i8", a, b)
+  def cosineI8(a: Column, b: Column): Column = kernel("graft_cosine_i8", a, b)
 
   /** Brute-force top-k over an int8-quantized corpus: same broadcast +
     * bounded-top-k shape as `bruteForceTopK`, 4× less data through the
@@ -66,9 +66,7 @@ object Similarity {
     // weights as the pure-SQL composition pmod(hash(i,p,seed),2)*2-1 —
     // one static call inside whole-stage codegen instead of per-plane
     // transform+zip_with+aggregate array materializations per row.
-    // Resolved by name: GraftFunctions.registerAll (the library entry
-    // contract) must have run on the session.
-    call_function("graft_hyperplane_sig", vec, lit(planes), lit(seed))
+    kernel("graft_hyperplane_sig", vec, lit(planes), lit(seed))
 
   /** Deterministic distributed Lloyd's k-means in cosine geometry — the
     * IVF coarse quantizer trainer. Init = k DISTINCT vector values

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.spark.KernelRegistry.kernel
 
 /** Text-analysis operators for training-data pipelines. Everything that
   * can be a built-in-function composition IS one (codegen'd, no UDF);
@@ -427,13 +428,6 @@ object TextOps {
     Array(lines, kept, bullet, ellipsis, toks.length, alpha, stopHits, lorem, brace)
   }
 
-  /** The graft_* SQL names above are native Catalyst expressions since
-    * round 3 (graft.spark.TextExprs — one static call per row inside
-    * whole-stage codegen, replacing the Scala-UDF registrations that
-    * used to live here). Registration is one table: GraftSql.entries. */
-  def registerAll(spark: org.apache.spark.sql.SparkSession): Unit =
-    org.apache.spark.sql.graft.GraftSql.registerAll(spark)
-
   /** Corpus-aware distinctive terms — TF-IDF-style keyword extraction
     * with an INTEGER-EXACT ordering so the whole ranking is
     * hash-oracleable: per document, the top-k tokens ordered by
@@ -503,11 +497,10 @@ object TextOps {
   def distinctiveTerms(df: DataFrame, idCol: String, textCol: String,
                        k: Int = 3): DataFrame = {
     require(k >= 1, s"top-k must be >= 1: $k")
-    registerAll(df.sparkSession)
     // explode_OUTER + post-filter: non-outer generates get size/isnotnull
     // filters inferred with the kernel substituted in (2-3 evals/row)
     val toks = df.select(col(idCol).as("id"),
-        explode_outer(call_function("graft_ngrams", col(textCol), lit(1))).as("tok"))
+        explode_outer(kernel("graft_ngrams", col(textCol), lit(1))).as("tok"))
       .filter(col("tok").isNotNull)
     // compact (id, tok, tf) snapshot: df-aggregate and tf×df join prune
     // the shared subtree differently → no exchange reuse → the token
@@ -548,9 +541,8 @@ object TextOps {
     require(k >= 1, s"postings cap must be >= 1: $k")
     require(minDf >= 1 && maxDf >= minDf,
       s"need 1 <= minDf <= maxDf: minDf=$minDf maxDf=$maxDf")
-    registerAll(df.sparkSession)
     val toks = df.select(col(idCol).as("doc_id"),
-        explode_outer(array_distinct(call_function("graft_ngrams", col(textCol), lit(1)))).as("token"))
+        explode_outer(array_distinct(kernel("graft_ngrams", col(textCol), lit(1)))).as("token"))
       .filter(col("token").isNotNull)
     val topIds = udaf(new TopK.TopKAgg(k), Encoders.product[TopK.Scored])
     toks.groupBy("token")
@@ -601,9 +593,8 @@ object TextOps {
   private def bm25ScoredTerms(df0: DataFrame, idCol: String, textCol: String,
                               queries: DataFrame, qidCol: String,
                               termCol: String): DataFrame = {
-    registerAll(df0.sparkSession)
     val toks = df0.select(col(idCol).as("doc_id"),
-        explode_outer(call_function("graft_ngrams", col(textCol), lit(1))).as("tok"))
+        explode_outer(kernel("graft_ngrams", col(textCol), lit(1))).as("tok"))
       .filter(col("tok").isNotNull)
     val keyed = Snapshot(toks.groupBy("doc_id", "tok").agg(count(lit(1)).as("tf")))
     val dls = keyed.groupBy("doc_id").agg(sum("tf").as("dl"))

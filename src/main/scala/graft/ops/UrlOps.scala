@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.spark.KernelRegistry.kernel
 
 /** URL canonicalization for web-corpus pipelines — the operator family
   * in front of URL-keyed dedup (a crawl's worth of `HTTP://Host:80/a?b&a#f`
@@ -81,13 +82,11 @@ object UrlOps {
 
   /** PSL-backed registrable domain — precise suffix-rule resolution
     * over the checked-in public-suffix snapshot ([[Psl]]): a native
-    * per-row lookup, no join/shuffle. Requires
-    * GraftFunctions.registerAll (the native-expression contract). Use
-    * this where heuristic misses matter (per-site dedup keys,
+    * per-row lookup, no join/shuffle. Use this where heuristic misses
+    * matter (per-site dedup keys,
     * blocklists over hosted platforms like *.github.io). */
   def registrableDomainPsl(hostCol: Column): Column =
-    org.apache.spark.sql.functions.call_function(
-      "graft_registrable_domain", hostCol)
+    kernel("graft_registrable_domain", hostCol)
 
   /** Dedup key over the canonical form (md5 — replayable by the oracle;
     * switch to xxhash64 in production, same pattern as ngram blocking). */

@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.sql.{SparkSessionExtensions, Column}
+import org.apache.spark.sql.SparkSessionExtensions
 import scala.util.control.NonFatal
 
 /** JVM-static kernels invoked from both interpreted eval and generated
@@ -271,27 +271,15 @@ object HtmlUdfs {
     graft.html.ArenaParse.withDoc(html.toString) { doc =>
       val rows = new scala.collection.mutable.ArrayBuffer[Any](8)
       var nextId = 0
-      def descText(n: Node, sb: java.lang.StringBuilder): Unit = {
-        if (n.kind == NodeKind.Text) sb.append(n.text)
-        var c = n.firstChild
-        while (c != null) { descText(c, sb); c = c.next }
-      }
       def walk(n: Node): Unit = {
         val id = nextId
         nextId += 1
-        if (n.kind == NodeKind.Element && n.ns == Ns.HTML && n.name == "a" &&
-            n.attrs != null) {
-          var i = 0
-          var href: String = null
-          var rel: String = null
-          while (i < n.attrs.length) {
-            if (href == null && n.attrs(i).name == "href") href = n.attrs(i).value
-            if (rel == null && n.attrs(i).name == "rel") rel = n.attrs(i).value
-            i += 1
-          }
+        if (n.kind == NodeKind.Element && n.ns == Ns.HTML && n.name == "a") {
+          val href = firstAttrVal(n, "href")
           if (href != null) {
+            val rel = firstAttrVal(n, "rel")
             val sb = new java.lang.StringBuilder
-            descText(n, sb)
+            descTextOf(n, sb)
             rows += InternalRow(id, UTF8String.fromString(href),
               UTF8String.fromString(sb.toString),
               UTF8String.fromString(if (rel == null) "" else rel))
@@ -323,6 +311,40 @@ object HtmlUdfs {
     if (n.kind == NodeKind.Text) sb.append(n.text)
     var c = n.firstChild
     while (c != null) { descTextOf(c, sb); c = c.next }
+  }
+
+  /** Concatenated descendant text of `n`, or null when `n` is null. */
+  private def descTextOrNull(n: Node): UTF8String = {
+    if (n == null) return null
+    val sb = new java.lang.StringBuilder
+    descTextOf(n, sb)
+    UTF8String.fromString(sb.toString)
+  }
+
+  /** Does the whitespace-separated `rel` list hold `tok`, matched
+    * ASCII-case-insensitively (the TextNorm canon)? */
+  private def relHasToken(rel: String, tok: String): Boolean = {
+    val toks = graft.ops.TextNorm.tokens(graft.ops.TextNorm.asciiLower(rel))
+    var i = 0
+    while (i < toks.length) { if (toks(i) == tok) return true; i += 1 }
+    false
+  }
+
+  /** First HTML-ns element named `a` or `b` among the descendants of
+    * `entry`, in pre-order, or null. */
+  private def firstDescendant(entry: Node, a: String, b: String): Node = {
+    var res: Node = null
+    def go(first: Node): Unit = {
+      var x = first
+      while (x != null && res == null) {
+        if (x.kind == NodeKind.Element && x.ns == Ns.HTML &&
+            (x.name == a || x.name == b)) res = x
+        else go(x.firstChild)
+        x = x.next
+      }
+    }
+    go(entry.firstChild)
+    res
   }
 
   /** Page metadata: `graft_page_meta(html)` → struct(title, lang, base,
@@ -365,12 +387,6 @@ object HtmlUdfs {
       var descr: String = null; var robots: String = null
       var og: String = null; var ogImage: String = null
       var ogDescr: String = null; var metaCount = 0
-      def relHasToken(rel: String, tok: String): Boolean = {
-        val toks = graft.ops.TextNorm.tokens(graft.ops.TextNorm.asciiLower(rel))
-        var i = 0
-        while (i < toks.length) { if (toks(i) == tok) return true; i += 1 }
-        false
-      }
       def walk(n: Node): Unit = {
         if (n.kind == NodeKind.Element && n.ns == Ns.HTML) {
           n.name match {
@@ -506,6 +522,19 @@ object HtmlUdfs {
     }
   }
 
+  private def rowspanOf(cell: Node): Int = {
+    val v = firstAttrVal(cell, "rowspan")
+    if (v == null) return 1
+    var i = 0
+    while (i < v.length && (v.charAt(i) == ' ' || v.charAt(i) == '\t' ||
+      v.charAt(i) == '\n' || v.charAt(i) == '\f' || v.charAt(i) == '\r')) i += 1
+    var x = 0; var any = false
+    while (i < v.length && v.charAt(i) >= '0' && v.charAt(i) <= '9' && x <= 1000) {
+      x = x * 10 + (v.charAt(i) - '0'); any = true; i += 1
+    }
+    if (!any || x < 1) 1 else math.min(x, 1000)
+  }
+
   /** Grid-fill table extraction: `graft_table_grid(html)` — the
     * RENDERING-order variant of [[tableCells]]: rowspan occupancy IS
     * simulated, so each cell lands on the grid column a browser would
@@ -525,23 +554,7 @@ object HtmlUdfs {
     *    (ADVICE r7 adjudication; OpsSpec pins the past-cap row).
     * One parse per row; the q_table_grid oracle replays fixed span
     * layouts by construction. */
-  val tableGridEvals = new java.util.concurrent.atomic.AtomicLong
-
-  private def rowspanOf(cell: Node): Int = {
-    val v = firstAttrVal(cell, "rowspan")
-    if (v == null) return 1
-    var i = 0
-    while (i < v.length && (v.charAt(i) == ' ' || v.charAt(i) == '\t' ||
-      v.charAt(i) == '\n' || v.charAt(i) == '\f' || v.charAt(i) == '\r')) i += 1
-    var x = 0; var any = false
-    while (i < v.length && v.charAt(i) >= '0' && v.charAt(i) <= '9' && x <= 1000) {
-      x = x * 10 + (v.charAt(i) - '0'); any = true; i += 1
-    }
-    if (!any || x < 1) 1 else math.min(x, 1000)
-  }
-
   def tableGrid(html: UTF8String): ArrayData = {
-    tableGridEvals.incrementAndGet()
     graft.html.ArenaParse.withDoc(html.toString) { doc =>
       val rows = new scala.collection.mutable.ArrayBuffer[Any](8)
       var nextTableId = 0
@@ -638,23 +651,8 @@ object HtmlUdfs {
     graft.html.ArenaParse.withDoc(html.toString) { doc =>
       val rows = new scala.collection.mutable.ArrayBuffer[Any](8)
       var nextEntry = 0
-      def firstField(entry: Node, name: String): UTF8String = {
-        var res: String = null
-        def go(first: Node): Unit = {
-          var x = first
-          while (x != null && res == null) {
-            if (x.kind == NodeKind.Element && x.ns == Ns.HTML &&
-                x.name == name) {
-              val sb = new java.lang.StringBuilder
-              descTextOf(x, sb)
-              res = sb.toString
-            } else go(x.firstChild)
-            x = x.next
-          }
-        }
-        go(entry.firstChild)
-        if (res == null) null else UTF8String.fromString(res)
-      }
+      def firstField(entry: Node, name: String): UTF8String =
+        descTextOrNull(firstDescendant(entry, name, name))
       def walk(n: Node): Unit = {
         if (n.kind == NodeKind.Element && n.ns == Ns.HTML &&
             (n.name == "url" || n.name == "sitemap")) {
@@ -709,28 +707,8 @@ object HtmlUdfs {
     graft.html.ArenaParse.withDoc(html.toString) { doc =>
       val rows = new scala.collection.mutable.ArrayBuffer[Any](8)
       var nextEntry = 0
-      def firstNamed(entry: Node, a: String, b: String): Node = {
-        var res: Node = null
-        def go(first: Node): Unit = {
-          var x = first
-          while (x != null && res == null) {
-            if (x.kind == NodeKind.Element && x.ns == Ns.HTML &&
-                (x.name == a || x.name == b)) res = x
-            else go(x.firstChild)
-            x = x.next
-          }
-        }
-        go(entry.firstChild)
-        res
-      }
-      def textOf(n: Node): UTF8String = {
-        if (n == null) return null
-        val sb = new java.lang.StringBuilder
-        descTextOf(n, sb)
-        UTF8String.fromString(sb.toString)
-      }
       def linkOf(entry: Node): UTF8String = {
-        val l = firstNamed(entry, "link", "link")
+        val l = firstDescendant(entry, "link", "link")
         if (l == null) return null
         val href = firstAttrVal(l, "href")
         if (href != null) return UTF8String.fromString(href)
@@ -748,9 +726,9 @@ object HtmlUdfs {
           val id = nextEntry
           nextEntry += 1
           rows += InternalRow(id, UTF8String.fromString(n.name),
-            textOf(firstNamed(n, "title", "title")), linkOf(n),
-            textOf(firstNamed(n, "pubdate", "updated")),
-            textOf(firstNamed(n, "guid", "id")))
+            descTextOrNull(firstDescendant(n, "title", "title")), linkOf(n),
+            descTextOrNull(firstDescendant(n, "pubdate", "updated")),
+            descTextOrNull(firstDescendant(n, "guid", "id")))
         }
         var c = n.firstChild
         while (c != null) { walk(c); c = c.next }
@@ -780,26 +758,14 @@ object HtmlUdfs {
   val hreflangArrayType: ArrayType =
     ArrayType(hreflangStructType, containsNull = false)
 
-  val hreflangEvals = new java.util.concurrent.atomic.AtomicLong
-
   def hreflangTable(html: UTF8String): ArrayData = {
-    hreflangEvals.incrementAndGet()
     graft.html.ArenaParse.withDoc(html.toString) { doc =>
       val rows = new scala.collection.mutable.ArrayBuffer[Any](4)
       var nextId = 0
-      def relHasAlternate(rel: String): Boolean = {
-        val toks = graft.ops.TextNorm.tokens(graft.ops.TextNorm.asciiLower(rel))
-        var i = 0
-        while (i < toks.length) {
-          if (toks(i) == "alternate") return true
-          i += 1
-        }
-        false
-      }
       def walk(n: Node): Unit = {
         if (n.kind == NodeKind.Element && n.ns == Ns.HTML && n.name == "link") {
           val rel = firstAttrVal(n, "rel")
-          if (rel != null && relHasAlternate(rel)) {
+          if (rel != null && relHasToken(rel, "alternate")) {
             val lang = firstAttrVal(n, "hreflang")
             val href = firstAttrVal(n, "href")
             if (lang != null && href != null) {
@@ -836,10 +802,7 @@ object HtmlUdfs {
   val densityBlockArrayType: ArrayType =
     ArrayType(densityBlockStructType, containsNull = false)
 
-  val densityBlocksEvals = new java.util.concurrent.atomic.AtomicLong
-
   def densityBlocks(html: UTF8String): ArrayData = {
-    densityBlocksEvals.incrementAndGet()
     val rows = graft.html.Extractor.densityBlocks(html.toString)
     new GenericArrayData(rows.map { b =>
       InternalRow(b.blockId, UTF8String.fromString(b.tag), b.depth,
@@ -866,10 +829,7 @@ object HtmlUdfs {
   val jsonldArrayType: ArrayType =
     ArrayType(jsonldStructType, containsNull = false)
 
-  val jsonldEvals = new java.util.concurrent.atomic.AtomicLong
-
   def jsonldTable(html: UTF8String): ArrayData = {
-    jsonldEvals.incrementAndGet()
     graft.html.ArenaParse.withDoc(html.toString) { doc =>
       val rows = new scala.collection.mutable.ArrayBuffer[Any](2)
       var nextId = 0
@@ -916,8 +876,6 @@ object HtmlUdfs {
   val subtitleArrayType: ArrayType =
     ArrayType(subtitleStructType, containsNull = false)
 
-  val subtitleEvals = new java.util.concurrent.atomic.AtomicLong
-
   /** [HH:]MM:SS(.|,)mmm → ms, or -1 when malformed. */
   private def parseStamp(s: String): Long = {
     val t = s.trim
@@ -939,7 +897,6 @@ object HtmlUdfs {
   }
 
   def subtitleTable(text: UTF8String): ArrayData = {
-    subtitleEvals.incrementAndGet()
     val norm = text.toString.replace("\r\n", "\n").replace('\r', '\n')
     val rows = new scala.collection.mutable.ArrayBuffer[Any](8)
     var cueId = 0
@@ -987,10 +944,7 @@ object HtmlUdfs {
     StructField("time_attr", StringType, nullable = true)
   ))
 
-  val pubDateEvals = new java.util.concurrent.atomic.AtomicLong
-
   def pubDate(html: UTF8String): InternalRow = {
-    pubDateEvals.incrementAndGet()
     graft.html.ArenaParse.withDoc(html.toString) { doc =>
       var metaTime: String = null
       var timeAttr: String = null
@@ -2193,56 +2147,16 @@ case class GraftAttrMatchCounts(child: Expression, keys: Seq[String],
   override def prettyName: String = "graft_attr_match_counts"
 }
 
-/** Column-level API. Uses the public `call_function` resolver so the
-  * native expressions work from any session where GraftSql.registerAll
-  * (or the GraftExtensions conf) has run. */
+/** SQL-text entry point: registers every native kernel (the
+  * GraftSql.entries table) in a live session's function registry, so
+  * SQL strings can name them. Engine code never needs this: it builds
+  * kernel calls with [[KernelRegistry.kernel]]. On a cluster prefer
+  * `--conf spark.sql.extensions=graft.spark.GraftExtensions`. */
 object GraftFunctions {
-  import org.apache.spark.sql.functions.call_function
-
-  def parse_html_spans(c: Column): Column = call_function("parse_html_spans", c)
-  def parse_html_text(c: Column): Column = call_function("parse_html_text", c)
-  def serialize_html(c: Column): Column = call_function("serialize_html", c)
-  def prescan_charset(c: Column): Column = call_function("prescan_charset", c)
-  def html_quirks_mode(c: Column): Column = call_function("html_quirks_mode", c)
-  def tokenize_html(c: Column): Column = call_function("tokenize_html", c)
-  def parse_html_nodes(c: Column): Column = call_function("parse_html_nodes", c)
-  def graft_node_table(c: Column): Column = call_function("graft_node_table", c)
-  def graft_page_meta(c: Column): Column = call_function("graft_page_meta", c)
-  def graft_table_cells(c: Column): Column = call_function("graft_table_cells", c)
-  def extract_interleaved_spans(c: Column): Column =
-    call_function("extract_interleaved_spans", c)
-  def parse_fragment_text(html: Column, context: Column): Column =
-    call_function("parse_fragment_text", html, context)
-  def extract_main_text(c: Column): Column = call_function("extract_main_text", c)
-  def extract_dense_text(c: Column): Column = call_function("extract_dense_text", c)
-  def graft_image_header(c: Column): Column = call_function("graft_image_header", c)
-  def graft_audio_header(c: Column): Column = call_function("graft_audio_header", c)
-  def graft_video_header(c: Column): Column = call_function("graft_video_header", c)
-  def graft_exif(c: Column): Column = call_function("graft_exif", c)
-
-  def graft_blockhash(c: Column): Column = call_function("graft_blockhash", c)
-
-  def graft_hamming_hex(a: Column, b: Column): Column =
-    call_function("graft_hamming_hex", a, b)
-  def graft_pdf_info(c: Column): Column = call_function("graft_pdf_info", c)
-  def graft_pdf_text(c: Column): Column = call_function("graft_pdf_text", c)
-  def graft_warc_records(c: Column): Column = call_function("graft_warc_records", c)
-  def graft_warc_index(c: Column): Column = call_function("graft_warc_index", c)
-  def graft_robots_allows(robots: Column, agent: Column, path: Column): Column =
-    call_function("graft_robots_allows", robots, agent, path)
-
-  def graft_attr_match_counts(html: Column, keys: Seq[String],
-      values: Seq[String], modes: Seq[String]): Column = {
-    import org.apache.spark.sql.functions.{array, lit}
-    call_function("graft_attr_match_counts", html,
-      array(keys.map(lit): _*), array(values.map(lit): _*),
-      array(modes.map(lit): _*))
-  }
-
   /** Register the native expressions on a live session. All functions
-    * are native Catalyst expressions — zero `spark.udf.register` calls
-    * (the last ScalaUDF, html_attr_match_count, was retired in round 5
-    * for the one-parse graft_attr_match_counts). */
+    * are native Catalyst expressions — zero `spark.udf.register` calls.
+    * Each call re-registers the whole table, so call it once per
+    * session. */
   def registerAll(spark: SparkSession): Unit =
     org.apache.spark.sql.graft.GraftSql.registerAll(spark)
 }

@@ -2,10 +2,12 @@ package graft.spark
 
 import java.lang.invoke.{MethodHandle, MethodHandles}
 import java.lang.reflect.Modifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.graft.GraftSql
 import org.apache.spark.sql.types._
 
 /** One native kernel: the SQL function `name` is one call to the static
@@ -50,9 +52,11 @@ final case class Kernel(name: String, owner: String, method: String,
   }
 }
 
-/** Every native kernel, one row each. GraftSql.entries registers these
-  * (plus graft_attr_match_counts) for both registerAll and
-  * GraftExtensions. Adding a kernel means adding one row here. */
+/** Every native kernel, one row each. Engine code calls a kernel with
+  * [[KernelRegistry.kernel]], which builds its [[KernelExpr]] directly:
+  * no session registration is involved. For SQL text, GraftSql.entries
+  * registers these (plus graft_attr_match_counts) for both registerAll
+  * and GraftExtensions. Adding a kernel means adding one row here. */
 object KernelRegistry {
   private val Html = "graft.spark.HtmlUdfs"
   private val Media = "graft.spark.MediaUdfs"
@@ -190,6 +194,18 @@ object KernelRegistry {
   )
 
   val byName: Map[String, Kernel] = rows.map(k => k.name -> k).toMap
+
+  /** A call of kernel `name` as a Column: the [[KernelExpr]] the SQL
+    * name resolves to, with the same literal checks, built without the
+    * session's function registry. An unknown name or a bad literal
+    * throws IllegalArgumentException here, at column build. */
+  def kernel(name: String, args: Column*): Column = {
+    val k = byName.getOrElse(name, throw new IllegalArgumentException(s"unknown kernel: $name"))
+    GraftSql.column(k.build(args.indices.map { i =>
+      if (i < k.args.length && k.isLit(i)) GraftSql.convertedNow(args(i))
+      else GraftSql.expressionOf(args(i))
+    }))
+  }
 }
 
 /** A native kernel call as a Catalyst expression. Codegen emits the

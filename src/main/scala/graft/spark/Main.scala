@@ -25,7 +25,6 @@ object Main {
                  else builder.master(
                    s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]"))
       .getOrCreate()
-    GraftFunctions.registerAll(spark)
     args.toList match {
       case "extract" :: in :: out :: metrics :: rest =>
         val batches = rest.headOption.map(_.toInt).getOrElse(8)

@@ -157,10 +157,8 @@ object Pipeline {
     * per row than the typed path). Use when per-partition lineage rows
     * aren't needed (counters still available via SQL metrics). */
   def extractColumnar(df: DataFrame, cfg: Config): DataFrame = {
-    import org.apache.spark.sql.functions.{call_function, col}
-    GraftFunctions.registerAll(df.sparkSession)
     saltedRepartition(df, cfg)
-      .withColumn("spans", call_function("extract_interleaved_spans", col("spans")))
+      .withColumn("spans", KernelRegistry.kernel("extract_interleaved_spans", col("spans")))
   }
 
   /** One-shot extraction (no batching): salted repartition → kernel.

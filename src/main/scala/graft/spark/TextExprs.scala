@@ -213,7 +213,6 @@ object TextKernels {
   }
 
   val ngramsEvals = new java.util.concurrent.atomic.AtomicLong
-  val cdcEvals = new java.util.concurrent.atomic.AtomicLong
 
   /** array<struct<start:int, len:int>> of [[cdcChunks]]. */
   val cdcChunkArrayType: ArrayType = ArrayType(StructType(Seq(
@@ -235,7 +234,6 @@ object TextKernels {
     * Emits struct(start, len) in codepoint units, 1-based; empty
     * input → empty array; a trailing remainder always closes. */
   def cdcChunks(t: UTF8String, modulus: Int): ArrayData = {
-    cdcEvals.incrementAndGet()
     val s = t.toString
     val out = new scala.collection.mutable.ArrayBuffer[Any](8)
     var c0 = 0L; var c1 = 0L; var c2 = 0L; var c3 = 0L

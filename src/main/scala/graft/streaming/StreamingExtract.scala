@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.spark.{DocRow, Lineage, MetricsRow, Pipeline}
+import graft.spark.KernelRegistry.kernel
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
 
@@ -283,15 +284,13 @@ object StreamingExtract {
     * exactly-once resumability story for a continuously-crawling
     * archive directory. */
   def warcExtract(blobs: DataFrame, idCol: String, blobCol: String): DataFrame = {
-    val spark = blobs.sparkSession
-    graft.spark.GraftFunctions.registerAll(spark)
     import org.apache.spark.sql.functions._
     blobs.select(col(idCol).as("doc_id"),
-        explode(graft.spark.GraftFunctions.graft_warc_records(col(blobCol))).as("r"))
+        explode(kernel("graft_warc_records", col(blobCol))).as("r"))
       .filter(col("r.ok"))
       .select(col("doc_id"), col("r.warc_type").as("warc_type"),
         col("r.status").as("status"), col("r.uri").as("uri"),
-        graft.spark.GraftFunctions.parse_html_text(col("r.body")).as("body_text"))
+        kernel("parse_html_text", col("r.body")).as("body_text"))
   }
 
   /** Bounded micro-batch drain of `warcExtract` for the oracle gate.
@@ -326,10 +325,8 @@ object StreamingExtract {
                       dateCol: String, bodyCol: String,
                       budget: Long): DataFrame = {
     require(budget >= 1, s"segment budget must be >= 1 octet: $budget")
-    val spark = df.sparkSession
-    graft.spark.GraftFunctions.registerAll(spark)
     import org.apache.spark.sql.functions._
-    val rec = call_function("graft_warc_compose",
+    val rec = kernel("graft_warc_compose",
       col(uriCol), col(dateCol), col(bodyCol))
     val sized = df.select(col(idCol), rec.as("__rec"),
       octet_length(rec).cast("long").as("__bytes"))

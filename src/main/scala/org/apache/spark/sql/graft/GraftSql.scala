@@ -5,17 +5,17 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.spark._
 
-/** Bridge inside org.apache.spark.sql so we can reach the session
-  * FunctionRegistry directly (the usual pattern for native-expression
-  * libraries; on a cluster prefer
-  * `--conf spark.sql.extensions=graft.spark.GraftExtensions`). */
+/** Bridge inside org.apache.spark.sql: Column <-> Expression (how
+  * engine code builds native expressions without the session) and the
+  * session FunctionRegistry (how SQL text finds them; on a cluster
+  * prefer `--conf spark.sql.extensions=graft.spark.GraftExtensions`). */
 object GraftSql {
-  /** Single source of truth for the native-function table — consumed
-    * both here (live-session registration) and by
-    * `graft.spark.GraftExtensions` (spark.sql.extensions cluster entry
-    * point), so the two registration paths can never drift apart. Every
-    * kernel row of [[KernelRegistry]], plus graft_attr_match_counts,
-    * whose spec arrays are plan-time string literals. */
+  /** The SQL-name table, used only for SQL text — consumed both here
+    * (live-session registration) and by `graft.spark.GraftExtensions`
+    * (spark.sql.extensions cluster entry point), so the two
+    * registration paths can never drift apart. Every kernel row of
+    * [[KernelRegistry]], plus graft_attr_match_counts, whose spec
+    * arrays are plan-time string literals. */
   def entries: Seq[(String, String, Seq[Expression] => Expression)] =
     KernelRegistry.rows.map(k => (k.name, classOf[KernelExpr].getName, k.build _)) :+
       (("graft_attr_match_counts", classOf[GraftAttrMatchCounts].getName,
@@ -30,16 +30,27 @@ object GraftSql {
       .map(_.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].toString)
       .toSeq
 
-  /** Column from a raw Catalyst expression — for expressions whose
-    * constructor carries plan-time constants a SQL literal can't express
-    * cleanly (GraftNearestCentroids' k×dim matrix). */
+  /** Column from a raw Catalyst expression: every kernel call
+    * ([[KernelRegistry.kernel]]) and the expressions whose constructor
+    * carries plan-time constants (GraftNearestCentroids' k×dim matrix,
+    * GraftAttrMatchCounts' spec lists). */
   def column(e: Expression): org.apache.spark.sql.Column =
     org.apache.spark.sql.classic.ExpressionUtils.column(e)
 
-  /** Expression behind a Column (the inverse, for wrapping). */
+  /** Expression behind a Column (the inverse, for wrapping). Spark
+    * converts it only when a session uses the Column, so until then it
+    * may be an unevaluable placeholder. */
   def expressionOf(c: org.apache.spark.sql.Column): Expression =
     org.apache.spark.sql.classic.ExpressionUtils.expression(c)
 
+  /** Expression behind a Column, converted now: for the literal
+    * arguments a kernel checks and inlines when it is built. */
+  def convertedNow(c: org.apache.spark.sql.Column): Expression =
+    org.apache.spark.sql.classic.ColumnNodeToExpressionConverter(c.node)
+
+  /** Register [[entries]] in `spark`'s function registry, for SQL
+    * text. Re-registers (and logs a replacement warning per function)
+    * when called again on the same session. */
   def registerAll(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
     entries.foreach { case (name, clazz, builder) =>

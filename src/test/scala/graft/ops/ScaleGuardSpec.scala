@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.spark.KernelRegistry.kernel
 import graft.spark.SparkTestSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -397,7 +398,6 @@ class ScaleGuardSpec extends AnyFunSuite {
 
   test("ivfHnswTopK: all-cells exhaustive beam equals brute force; routed recall floor") {
     import spark.implicits._
-    graft.spark.GraftFunctions.registerAll(spark)
     val all = gradedEmbeddings
     val corpus = all.toDF("vec_id", "embedding")
     val queryRows = all.take(20)
@@ -1120,7 +1120,6 @@ class ScaleGuardSpec extends AnyFunSuite {
   test("blockhashNearDup: group collapse equals the naive member-level pair join") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    graft.spark.GraftFunctions.registerAll(spark)
     // corpus with heavy exact-dup groups (the 94x sf1 probe shape),
     // near groups one byte apart, singletons, and null hashes
     val rnd = new scala.util.Random(0xb10c)
@@ -1133,7 +1132,7 @@ class ScaleGuardSpec extends AnyFunSuite {
       (id, payload)
     }.toDF("id", "p")
     val hashed = rows.select(col("id"),
-      call_function("graft_blockhash",
+      kernel("graft_blockhash",
         when(col("p") === "", lit(Array.empty[Byte]))
           .otherwise(col("p").cast("binary"))).as("bh"))
     val fast = Dedup.blockhashNearDup(hashed, "id", "bh", bands = 4, maxHamming = 2)
@@ -1147,7 +1146,7 @@ class ScaleGuardSpec extends AnyFunSuite {
         col("x.b") === col("y.b") && col("x.bv") === col("y.bv") &&
           col("x.id") < col("y.id"))
       .select(col("x.id").as("a"), col("y.id").as("b2"),
-        call_function("graft_hamming_hex", col("x.bh"), col("y.bh")).as("ham"))
+        kernel("graft_hamming_hex", col("x.bh"), col("y.bh")).as("ham"))
       .distinct()
     val dir0 = pairs.select(col("a").as("id"), col("b2").as("other"), col("ham"))
       .unionAll(pairs.select(col("b2"), col("a"), col("ham")))

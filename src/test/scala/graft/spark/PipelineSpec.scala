@@ -4,6 +4,7 @@ import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.spark.KernelRegistry.kernel
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -236,7 +237,7 @@ class FunctionsSpec extends AnyFunSuite {
     // range-backed source so ConvertToLocalRelation can't fold the plan
     val df = spark.range(3)
       .select(concat(lit("<p>x"), col("id"), lit("</p>")).as("html"))
-      .select(GraftFunctions.parse_html_text(col("html")).as("t"))
+      .select(kernel("parse_html_text", col("html")).as("t"))
     val plan = df.queryExecution.executedPlan.toString
     assert(!plan.contains("BatchEvalPython") && !plan.contains("ScalaUDF"))
     // "*(n)" prefixes mark WholeStageCodegen stages in the compact form
@@ -250,9 +251,9 @@ class FunctionsSpec extends AnyFunSuite {
     val r = Seq(("<p>a & b</p>", "<!DOCTYPE html><p>x"))
       .toDF("h1", "h2")
       .select(
-        GraftFunctions.serialize_html(col("h1")).as("s"),
-        GraftFunctions.html_quirks_mode(col("h2")).as("q"),
-        GraftFunctions.prescan_charset(
+        kernel("serialize_html", col("h1")).as("s"),
+        kernel("html_quirks_mode", col("h2")).as("q"),
+        kernel("prescan_charset",
           lit("<meta charset='koi8-r'><p>").cast("binary")).as("c"))
       .collect().head
     assert(r.getString(0) == "<html><head></head><body><p>a &amp; b</p></body></html>")
@@ -344,7 +345,7 @@ class T2CorrectnessSpec extends org.scalatest.funsuite.AnyFunSuite {
       .select(explode(col("spans")).as("s"))
       .filter(col("s.kind") === "media")
       .select(col("s.media_ref").as("media_id")).distinct()
-    val hdr = GraftFunctions.graft_image_header(col("payload"))
+    val hdr = kernel("graft_image_header", col("payload"))
     val decoded = refs.join(media, "media_id")
       .select(col("media_id"), hdr.getField("format").as("format"),
         hdr.getField("width").as("width"), hdr.getField("height").as("height"))
