@@ -20,8 +20,13 @@ object Entities {
     * entities.json via Python stdlib html.entities.html5; the reference
     * embeds the same public data as charef_resource.h). Format:
     * name \t semi(0=legacy,1=requires ';') \t hex-codepoints. */
-  private val loaded: (Map[String, String], Set[String]) = {
-    val in = getClass.getResourceAsStream("/graft/entities.tsv")
+  private val loaded: (Map[String, String], Set[String]) = load(getClass.getClassLoader)
+
+  /** Reads the table through `loader`; a loader without it fails naming it. */
+  private[html] def load(loader: ClassLoader): (Map[String, String], Set[String]) = {
+    val in = loader.getResourceAsStream("graft/entities.tsv")
+    if (in == null) throw new IllegalStateException(
+      "graft/entities.tsv is not on the classpath (it ships in src/main/resources)")
     val src = scala.io.Source.fromInputStream(in, "UTF-8")
     val tbl = Map.newBuilder[String, String]
     val leg = Set.newBuilder[String]

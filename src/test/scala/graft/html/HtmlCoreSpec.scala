@@ -421,6 +421,13 @@ class TokenizerSpec extends AnyFunSuite {
       .head == CharsTok("A", 0))
   }
 
+  test("entity table: a class loader without it fails naming the resource") {
+    val bare = new ClassLoader(null) {} // bootstrap classes only
+    val e = intercept[IllegalStateException](Entities.load(bare))
+    assert(e.getMessage.contains("graft/entities.tsv"))
+    assert(Entities.load(getClass.getClassLoader)._1.size == Entities.table.size)
+  }
+
   test("CRLF normalization (mystring.c:24)") {
     assert(tokens("a\r\nb\rc").head == CharsTok("a\nb\nc", 0))
   }

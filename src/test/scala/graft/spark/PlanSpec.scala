@@ -59,7 +59,6 @@ class PlanSpec extends AnyFunSuite {
     // isnotnull(id) + pruned hub broke canonical subtree equality and
     // the signatures silently recomputed 3x per row).
     val spark2 = spark
-    graft.spark.GraftFunctions.registerAll(spark2)
     val docs = spark2.read.parquet(s"$sf/documents.parquet")
       .select(org.apache.spark.sql.functions.col("doc_id"),
         org.apache.spark.sql.functions.col("text"))

@@ -1,9 +1,14 @@
 import subprocess, sys, os
-CP = "/opt/spark/jars/scala-library-2.13.17.jar:/opt/spark/jars/scala-reflect-2.13.17.jar:/root/repo/target/scala-2.13/classes:/tmp/parity/out"
+# Delta-minimizes a document whose clear-text differs between the reference
+# (ref_clear_text.pl) and graft (the ParityCorpora dumper); needs
+# `sbt Test/compile` and the reference Perl module (README.md).
+CP = "/opt/spark/jars/scala-library-2.13.17.jar:/opt/spark/jars/scala-reflect-2.13.17.jar:/root/repo/target/scala-2.13/classes:/root/repo/target/scala-2.13/test-classes"
+D = '/tmp/parity/min/d'
+os.makedirs(D, exist_ok=True)
 def differs(s):
-    open('/tmp/parity/min/cur.html','wb').write(s.encode())
-    r = subprocess.run(['perl','ref_one.pl','/tmp/parity/min/cur.html'],capture_output=True).stdout
-    m = subprocess.run(['java','-cp',CP,'Mine1','/tmp/parity/min/cur.html'],capture_output=True).stdout
+    open(D + '/cur.html','wb').write(s.encode())
+    r = subprocess.run(['perl','ref_clear_text.pl',D],capture_output=True).stdout
+    m = subprocess.run(['java','-cp',CP,'graft.html.ParityCorpora','clear-text',D],capture_output=True).stdout
     return r != m
 src = open(sys.argv[1], encoding='utf-8').read()
 assert differs(src), "no divergence on full doc"
