@@ -2,7 +2,14 @@ import subprocess, sys, os
 # Delta-minimizes a document whose clear-text differs between the reference
 # (ref_clear_text.pl) and graft (the ParityCorpora dumper); needs
 # `sbt Test/compile` and the reference Perl module (README.md).
-CP = "/opt/spark/jars/scala-library-2.13.17.jar:/opt/spark/jars/scala-reflect-2.13.17.jar:/root/repo/target/scala-2.13/classes:/root/repo/target/scala-2.13/test-classes"
+# Classpath: the Scala runtime from $SPARK_HOME/jars plus this checkout's
+# compiled main and test classes.
+REPO = os.path.abspath(os.path.join(os.path.dirname(__file__), '..', '..'))
+JARS = os.path.join(os.environ['SPARK_HOME'], 'jars')
+CP = ':'.join([os.path.join(JARS, 'scala-library-2.13.17.jar'),
+               os.path.join(JARS, 'scala-reflect-2.13.17.jar'),
+               os.path.join(REPO, 'target/scala-2.13/classes'),
+               os.path.join(REPO, 'target/scala-2.13/test-classes')])
 D = '/tmp/parity/min/d'
 os.makedirs(D, exist_ok=True)
 def differs(s):
