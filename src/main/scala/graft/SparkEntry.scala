@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.spark.{CorpusGen, DocRow, GraftAttrMatchCounts, Pipeline}
 import graft.spark.KernelRegistry.kernel
 import org.apache.spark.sql.graft.GraftSql
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquet
 import graft.ops.{Dedup, Rank, Redirects, Similarity, Sketch, SnapshotDiff, TextNorm, TextOps, Multimodal, TopK, Pack, QualityModel, Sample, UrlOps}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -29,15 +30,30 @@ import graft.ops.{Dedup, Rank, Redirects, Similarity, Sketch, SnapshotDiff, Text
   */
 object SparkEntry {
 
-  private def docs(s: SparkSession, dir: String): DataFrame = {
-    s.read.parquet(s"$dir/documents.parquet")
+  private[graft] def docs(s: SparkSession, dir: String): DataFrame =
+    table(s, s"$dir/documents.parquet")
+
+  private[graft] def embs(s: SparkSession, dir: String): DataFrame =
+    table(s, s"$dir/embeddings.parquet")
+
+  private[graft] def events(s: SparkSession, dir: String): DataFrame =
+    table(s, s"$dir/events.parquet")
+
+  /** A single plain Parquet file is read with the schema of its footer
+    * ([[GraftParquet.footerSchema]]), so building the frame starts no job.
+    * Any other path (a directory of part files, a glob, a missing file)
+    * is read as Spark reads it. Nothing is cached: each call reads the
+    * footer again, so a rewritten file is seen on the next read. */
+  private[graft] def table(s: SparkSession, path: String): DataFrame = {
+    val file = scala.util.Try {
+      val p = new org.apache.hadoop.fs.Path(path)
+      p.getFileSystem(s.sparkContext.hadoopConfiguration).getFileStatus(p)
+    }.toOption.filter(_.isFile)
+    file.flatMap(GraftParquet.footerSchema(s, _)) match {
+      case Some(schema) => s.read.schema(schema).parquet(path)
+      case None => s.read.parquet(path)
+    }
   }
-
-  private def embs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/embeddings.parquet")
-
-  private def events(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/events.parquet")
 
   /** doc_id<100 base rows with synthetic 30-token md5 texts — token sets
     * are disjoint across docs (md5 of "id-j"), so distinct docs have

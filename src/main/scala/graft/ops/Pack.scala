@@ -1,7 +1,13 @@
 package graft.ops
 
+import org.apache.spark.RangePartitioner
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftSql
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 /** Concat-and-chunk sequence packing — the GPT-style training-example
   * assembly step: documents (in a deterministic id order) form one
@@ -17,10 +23,14 @@ import org.apache.spark.sql.functions._
   * on the id (the unavoidable cost of a deterministic global order),
   * then (a) per-partition token sums — `numPartitions` rows to the
   * driver, (b) prefix offsets broadcast back, (c) a narrow
-  * per-partition running sum. The sorted snapshot is checkpointed so
-  * both passes read one materialization of the shuffle
-  * ([[Snapshot]]). The DuckDB oracle replays the naive window
-  * formulation; ScaleGuardSpec pins partition-count invariance.
+  * per-partition running sum. The sorted shuffle output is marked for
+  * checkpointing ([[Snapshot.mark]]), so the pass-(a) collect
+  * materializes it in its own job and (c) reads that materialization
+  * inside the consumer's job: two jobs before the consumer (the range
+  * sketch, which also persists the input rows, and pass (a)), and the
+  * input plan runs once. The DuckDB oracle replays the
+  * naive window formulation; ScaleGuardSpec pins partition-count
+  * invariance.
   *
   * Contract: ids must be unique and non-null (the global order is
   * `ORDER BY id`; null-id rows are DROPPED — there is no deterministic
@@ -58,65 +68,87 @@ object Pack {
     })
   }
 
+  /** Output: (idCol BIGINT, n_tokens, start_offset, chunk_start,
+    * chunk_end), then every input column other than `idCol` and
+    * `tokensCol`, in input order. Those extra columns are persisted with
+    * the input rows and ride the range shuffle and its checkpoint, so
+    * project to compact columns (ids, lengths, hashes) before calling,
+    * never the text they came from. */
   def concatChunk(df: DataFrame, idCol: String, tokensCol: String,
                   budget: Long, partitions: Int = 0): DataFrame = {
     require(budget >= 1, s"chunk budget must be >= 1: $budget")
     val spark = df.sparkSession
-    import spark.implicits._
     val p =
       if (partitions > 0) partitions
       else spark.sessionState.conf.numShufflePartitions
     // the pass-1 collect is p rows and the pass-2 broadcast is a p-entry
-    // map — the design assumes p stays O(10^3..10^4) (VERDICT r6 scale
+    // array — the design assumes p stays O(10^3..10^4) (VERDICT r6 scale
     // note). A caller inheriting a million-partition session should size
     // `partitions` explicitly rather than silently shipping a giant map.
     require(p <= 100000,
       s"concatChunk collects one row per partition ($p); pass a smaller " +
         "`partitions` — the range shuffle does not need scan parallelism")
-    val sorted0 = df
-      .select(col(idCol).cast("long").as("id"),
-        coalesce(col(tokensCol).cast("long"), lit(0L)).as("n"))
-      .filter(col("id").isNotNull)
-      .repartitionByRange(p, col("id"))
-      .sortWithinPartitions("id")
-      .withColumn("pid", spark_partition_id())
-      .as[(Long, Long, Int)]
-    val sorted = Snapshot(sorted0)
-    // pass 1: per-partition sums — at most `p` rows reach the driver
-    val partSums: Map[Int, Long] = sorted
+    val rest = df.columns.filter(c => c != idCol && c != tokensCol)
+    val in = df
+      .select(col(idCol).cast("long").as(idCol) +:
+        coalesce(col(tokensCol).cast("long"), lit(0L)).as("n") +:
+        rest.map(c => col(s"`$c`")).toSeq: _*)
+      .filter(col(idCol).isNotNull)
+    val fields = in.schema.fields
+    val width = fields.length
+    // rows travel as their UnsafeRow bytes: (Long, Array[Byte]) records
+    // shuffle through Kryo without a per-row encoder. They are persisted
+    // by the range sketch's job, so pass 1 reads them instead of running
+    // the input plan (its kernels, its upstream shuffles) a second time.
+    val rows = in.queryExecution.toRdd
       .mapPartitions { it =>
-        var pid = -1
-        var sum = 0L
-        it.foreach { case (_, n, q) =>
-          pid = q
-          sum += math.max(n, 0L)
+        val unsafe = UnsafeProjection.create(fields.map(_.dataType))
+        it.map { r =>
+          val u = unsafe(r).copy()
+          (u.getLong(0), u.getBytes)
         }
-        if (pid < 0) Iterator.empty else Iterator.single((pid, sum))
       }
-      .collect().toMap
-    val prefix: Map[Int, Long] = {
-      var acc = 0L
-      (0 until p).map { q =>
-        val off = acc
-        acc += partSums.getOrElse(q, 0L)
-        q -> off
-      }.toMap
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val sorted = Snapshot.mark(
+      rows.repartitionAndSortWithinPartitions(new RangePartitioner(p, rows)))
+    def tokens(row: UnsafeRow, b: Array[Byte]): Long = {
+      row.pointTo(b, b.length)
+      math.max(row.getLong(1), 0L)
     }
-    val bc = spark.sparkContext.broadcast(prefix)
+    // pass 1: per-partition sums, one per partition of the partitioner
+    // (a sparse id range can leave it fewer than `p`)
+    val sums = sorted.mapPartitions { it =>
+      val row = new UnsafeRow(width)
+      Iterator.single(it.map(kv => tokens(row, kv._2)).sum)
+    }.collect()
+    rows.unpersist(blocking = false)
+    val bc = spark.sparkContext.broadcast(sums.scanLeft(0L)(_ + _))
     // pass 2: narrow running sum from the broadcast partition offset
-    sorted
-      .mapPartitions { it =>
-        var running = -1L
-        it.map { case (id, n0, q) =>
-          if (running < 0) running = bc.value(q)
-          val n = math.max(n0, 0L)
-          val start = running
-          running += n
-          val last = if (n > 0) start + n - 1 else start
-          (id, n, start, start / budget, last / budget)
+    val packed = sorted.mapPartitionsWithIndex { (q, it) =>
+      val row = new UnsafeRow(width)
+      var running = bc.value(q)
+      it.map { case (id, b) =>
+        val n = tokens(row, b)
+        val start = running
+        running += n
+        val last = if (n > 0) start + n - 1 else start
+        val out = new Array[Any](width + 3)
+        out(0) = id
+        out(1) = n
+        out(2) = start
+        out(3) = start / budget
+        out(4) = last / budget
+        var i = 2
+        while (i < width) {
+          out(i + 3) = row.get(i, fields(i).dataType)
+          i += 1
         }
+        new GenericInternalRow(out): InternalRow
       }
-      .toDF(idCol, "n_tokens", "start_offset", "chunk_start", "chunk_end")
+    }
+    val fixed = (idCol +: Seq("n_tokens", "start_offset", "chunk_start", "chunk_end"))
+      .map(StructField(_, LongType, nullable = false))
+    GraftSql.frame(spark, packed, StructType(fixed ++ fields.drop(2)))
   }
 
   /** The inverse view — the training-example WRITER step: for every

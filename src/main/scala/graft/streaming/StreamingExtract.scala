@@ -34,8 +34,10 @@ object StreamingExtract {
   /** The memory sink, in `outputMode`, stopped by `stop`. */
   private final case class Memory(outputMode: String, stop: Stop) extends Sink
   /** foreachBatch: each micro-batch's output, tagged with its
-    * `batch_id`, appended to parquet; ends on AvailableNow. */
-  private case object PerBatchParquet extends Sink
+    * `batch_id` and kept as a localCheckpoint (a re-run batch id
+    * replaces its frame); the result is their union. Ends on
+    * AvailableNow. */
+  private case object PerBatchFrames extends Sink
 
   /** ProcessingTimeTimeout makes shouldRunAnotherBatch always true, so a
     * TTL drain never terminates under AvailableNow (and
@@ -55,7 +57,8 @@ object StreamingExtract {
     *    within-batch arrival order) write one coalesce(1) job per frame;
     *    order-free drains write every frame in one union +
     *    partitionBy job, whose writer does not keep row order.
-    *  - Schema: the stream is read with `batches.head.schema`.
+    *  - Schema: the stream, and the polled stop's count of the written
+    *    files, read with `batches.head.schema` (no inference job).
     *  - Width: `spark.sql.shuffle.partitions` is 8 while the stream runs
     *    (after the files are written) and restored afterwards. The
     *    state-store instance count is pinned by the first run's width,
@@ -67,9 +70,12 @@ object StreamingExtract {
     *    expected sink rows (driver-side progress events, no Spark job
     *    per poll and no bound on how many triggers are counted), then
     *    one count job checks the table.
-    *  - Teardown: the result is localCheckpoint-ed; then the query and
-    *    listener stop, the width is restored, the memory table dropped
-    *    and the temp dir removed, on every path. */
+    *  - Result: the memory table is localCheckpoint-ed; per-batch frames
+    *    are already checkpointed, and their union is returned with no
+    *    write and no readback.
+    *  - Teardown: the query and listener stop, the width is restored,
+    *    the memory table dropped and the temp dir removed, on every
+    *    path. */
   private def boundedDrain(batches: Seq[DataFrame], ordered: Boolean, sink: Sink)
                           (transform: DataFrame => DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.lit
@@ -87,16 +93,16 @@ object StreamingExtract {
       val stream = spark.readStream.schema(batches.head.schema)
         .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
       sink match {
-        case PerBatchParquet =>
-          val outDir = new java.io.File(base, "out").toString
+        case PerBatchFrames =>
+          val out = scala.collection.mutable.TreeMap.empty[Long, DataFrame]
           q = stream.writeStream.option("checkpointLocation", ck)
             .trigger(Trigger.AvailableNow())
             .foreachBatch { (b: DataFrame, batchId: Long) =>
-              transform(b).withColumn("batch_id", lit(batchId.toInt))
-                .write.mode("append").parquet(outDir)
+              out(batchId) = transform(b)
+                .withColumn("batch_id", lit(batchId.toInt)).localCheckpoint()
             }.start()
           q.awaitTermination()
-          spark.read.parquet(outDir).localCheckpoint()
+          out.values.reduce(_ unionByName _)
         case Memory(outputMode, stop) =>
           val writer = transform(stream).writeStream.format("memory")
             .queryName(qname).outputMode(outputMode)
@@ -109,7 +115,8 @@ object StreamingExtract {
             // frames' own count would re-run their construction
             val expected = stop match {
               case Rows(n) => n
-              case _ => spark.read.parquet(inDir.toString).count()
+              case _ => spark.read.schema(batches.head.schema)
+                .parquet(inDir.toString).count()
             }
             val delivered = new java.util.concurrent.atomic.AtomicLong
             listener = new StreamingQueryListener {
@@ -315,12 +322,12 @@ object StreamingExtract {
     * replayable: it is [[graft.ops.Pack.concatChunk]]'s two-pass prefix
     * sum on octet lengths, not a sequential fold.
     *
-    * Scale shape: the pack's range shuffle carries (id, bytes) ONLY —
-    * the heavy record strings never ride it; offsets join back on the
-    * unique id afterwards. Output: (idCol, rec_bytes, stream_offset,
-    * segment, seg_offset, straddles, rec_md5) — all BIGINT/INT plus the
-    * md5 of the composed record text, so the oracle gates the composed
-    * BYTES, not just the arithmetic. */
+    * Scale shape: one projection composes each record and keeps only
+    * (id, octet length, md5); the pack's range shuffle carries those
+    * three and the heavy record strings never ride it. Output: (idCol,
+    * rec_bytes, stream_offset, segment, seg_offset, straddles, rec_md5)
+    * — all BIGINT/INT plus the md5 of the composed record text, so the
+    * oracle gates the composed BYTES, not just the arithmetic. */
   def composeSegments(df: DataFrame, idCol: String, uriCol: String,
                       dateCol: String, bodyCol: String,
                       budget: Long): DataFrame = {
@@ -328,18 +335,15 @@ object StreamingExtract {
     import org.apache.spark.sql.functions._
     val rec = kernel("graft_warc_compose",
       col(uriCol), col(dateCol), col(bodyCol))
-    val sized = df.select(col(idCol), rec.as("__rec"),
-      octet_length(rec).cast("long").as("__bytes"))
-    val packed = graft.ops.Pack.concatChunk(
-      sized.select(col(idCol), col("__bytes").as("n")), idCol, "n",
-      budget = budget)
-    packed.join(sized, idCol)
+    val sized = df.select(col(idCol), octet_length(rec).cast("long").as("n"),
+      md5(rec.cast("binary")).as("rec_md5"))
+    graft.ops.Pack.concatChunk(sized, idCol, "n", budget = budget)
       .select(col(idCol), col("n_tokens").as("rec_bytes"),
         col("start_offset").as("stream_offset"),
         col("chunk_start").as("segment"),
         (col("start_offset") - col("chunk_start") * budget).as("seg_offset"),
         (col("chunk_end") > col("chunk_start")).cast("int").as("straddles"),
-        md5(col("__rec").cast("binary")).as("rec_md5"))
+        col("rec_md5"))
   }
 
   /** Streaming WARC ARCHIVE composer — the continuous-crawl write path
@@ -357,7 +361,7 @@ object StreamingExtract {
   def composeSegmentsDrain(batches: Seq[DataFrame], budget: Long): DataFrame =
     // composeSegments keys its prefix sum by ascending id: row order is
     // irrelevant
-    boundedDrain(batches, ordered = false, PerBatchParquet) {
+    boundedDrain(batches, ordered = false, PerBatchFrames) {
       composeSegments(_, "doc_id", "uri", "date", "body", budget)
     }
 
@@ -373,7 +377,7 @@ object StreamingExtract {
   def cdcDrain(baseline: DataFrame, batches: Seq[DataFrame],
                idCol: String, contentCols: Seq[String]): DataFrame =
     // the per-batch diff is a set-semantics join: order-free
-    boundedDrain(batches, ordered = false, PerBatchParquet) {
+    boundedDrain(batches, ordered = false, PerBatchFrames) {
       graft.ops.SnapshotDiff.incremental(_, baseline, idCol, contentCols)
     }
 

@@ -1,7 +1,8 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.spark._
 
@@ -47,6 +48,14 @@ object GraftSql {
     * arguments a kernel checks and inlines when it is built. */
   def convertedNow(c: org.apache.spark.sql.Column): Expression =
     org.apache.spark.sql.classic.ColumnNodeToExpressionConverter(c.node)
+
+  /** DataFrame over an RDD of internal rows laid out as `schema`, with
+    * no per-row conversion (the RDD-built operators, e.g.
+    * `Pack.concatChunk`). */
+  def frame(spark: SparkSession, rows: org.apache.spark.rdd.RDD[InternalRow],
+            schema: StructType): DataFrame =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .internalCreateDataFrame(rows, schema)
 
   /** Register [[entries]] in `spark`'s function registry, for SQL
     * text. Re-registers (and logs a replacement warning per function)

@@ -22,27 +22,31 @@ object SparkTestSession {
     s
   }
 
-  /** Spark jobs started by `f` on this thread, counted by a listener; a
+  /** Spark jobs started by `f`, counted by a listener: the jobs of this
+    * thread and of the threads it starts (a streaming query's
+    * micro-batches), which inherit a per-call local property; a
     * sentinel job after `f` flushes the asynchronous listener bus. */
   def jobsDuring(f: => Unit): Int = {
     val sc = spark.sparkContext
+    val key = "graft.test.jobsDuring"
+    val token = java.util.UUID.randomUUID.toString
     val seen = new LinkedBlockingQueue[String]
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =
-        seen.put(Option(j.properties).map(_.getProperty("spark.job.description", "")).getOrElse(""))
+        seen.put(Option(j.properties).flatMap(p => Option(p.getProperty(key))).getOrElse(""))
     }
     sc.addSparkListener(listener)
     try {
-      sc.setJobDescription("jobs-under-test")
-      try f finally sc.setJobDescription("jobs-sentinel")
+      sc.setLocalProperty(key, token)
+      try f finally sc.setLocalProperty(key, "sentinel-" + token)
       sc.parallelize(Seq(1), 1).count()
-      sc.setJobDescription(null)
+      sc.setLocalProperty(key, null)
       var jobs = 0
       var d = ""
-      while (d != "jobs-sentinel") {
+      while (d != "sentinel-" + token) {
         d = seen.poll(60, TimeUnit.SECONDS)
         if (d == null) throw new AssertionError("the sentinel job never reached the listener")
-        if (d == "jobs-under-test") jobs += 1
+        if (d == token) jobs += 1
       }
       jobs
     } finally sc.removeSparkListener(listener)

@@ -110,6 +110,21 @@ class StreamingSpec extends AnyFunSuite {
     assert(got.toSeq == expected)
   }
 
+  test("composeSegmentsDrain job budget: one batch-file write, three jobs per micro-batch") {
+    import spark.implicits._
+    val rows = (0 until 40).map(i => (i.toLong, s"https://t/$i", "2026-01-01T00:00:00Z", "b" * (50 + i)))
+      .toDF("doc_id", "uri", "date", "body")
+    val batches = Seq(rows.filter($"doc_id" % 2 === 0), rows.filter($"doc_id" % 2 === 1))
+    var n = 0
+    val jobs = SparkTestSession.jobsDuring {
+      n = StreamingExtract.composeSegmentsDrain(batches, budget = 500L).collect().length
+    }
+    assert(n == 40)
+    // the batch-file write; per micro-batch the pack's range sketch, its
+    // pass 1 and the batch's localCheckpoint; then the collect
+    assert(jobs == 8, s"$jobs jobs")
+  }
+
   test("streaming CDC: drain equals the per-batch incremental; verdicts pinned") {
     import spark.implicits._
     import graft.ops.SnapshotDiff
