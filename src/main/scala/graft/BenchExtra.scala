@@ -1,28 +1,27 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.spark.JobCensus
 import scala.util.control.NonFatal
 
-/** Round-8 optimization-round measurement harness (guide §1.4): times
-  * individual declared queries in isolation with the noop sink (so the
-  * computation is timed, not the sink), min-of-N, and optionally dumps
-  * `.explain("formatted")` to plans/r08/. NOT part of the frozen driver
-  * contract — `graft.Bench` is the artifact of record; this main exists
-  * so per-query before/after deltas can be measured without paying the
-  * full 186-query suite per iteration.
+/** Ad-hoc per-query census over `SparkEntry.queries`: times declared
+  * queries in isolation with the noop sink (so the computation is timed,
+  * not the sink), min-of-N, or counts their Spark jobs, stages and
+  * tasks, without paying the full 186-query suite per iteration. The
+  * benchmark of record is `perfbench/run.py` (BENCHMARK.json).
   *
   * Usage:
   *   runMain graft.BenchExtra time <reps> <q1,q2,...>   # min-of-reps secs
   *   runMain graft.BenchExtra jobs <q1,q2,...>          # jobs/stages/tasks per query
-  *   runMain graft.BenchExtra explain <suffix> <q1,...> # plans/r08/<q>_<suffix>.txt
   *   runMain graft.BenchExtra mksf1 <srcDir> <dstDir>   # synthetic sf1 from sf0.1
   * Data dir from SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-  * cores from SPARK_GRAFT_CPUS (default 32) — the Bench session shape.
+  * cores from SPARK_GRAFT_CPUS (default: this machine's processors).
   */
 object BenchExtra {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName("graft-bench-extra")
@@ -40,6 +39,10 @@ object BenchExtra {
         .write.format("noop").mode("overwrite").save()
       (System.nanoTime() - t0) / 1e9
     }
+    /** `force`, with a failure reported and timed as NaN. */
+    def timed(name: String): Double =
+      try force(name) catch { case NonFatal(e) =>
+        System.err.println(s"[extra] $name: ${e.getMessage}"); Double.NaN }
 
     args.toList match {
       case "time" :: reps :: qs :: Nil =>
@@ -50,11 +53,7 @@ object BenchExtra {
         val r = reps.toInt
         val times = scala.collection.mutable.Map[String, List[Double]]()
           .withDefaultValue(Nil)
-        for (_ <- 0 until r; n <- names) {
-          val t = try force(n) catch { case NonFatal(e) =>
-            System.err.println(s"[extra] $n: ${e.getMessage}"); Double.NaN }
-          times(n) = t :: times(n)
-        }
+        for (_ <- 0 until r; n <- names) times(n) = timed(n) :: times(n)
         for (n <- names) {
           val ts = times(n).filterNot(_.isNaN)
           val best = if (ts.isEmpty) Double.NaN else ts.min
@@ -103,44 +102,15 @@ object BenchExtra {
         // per-query job/stage/task counts — finds driver-loop overhead
         // (checkpoints, collects, convergence probes) that explains
         // wall time the plan alone cannot
-        val jobs = new java.util.concurrent.atomic.AtomicInteger
-        val stages = new java.util.concurrent.atomic.AtomicInteger
-        val tasks = new java.util.concurrent.atomic.AtomicInteger
-        spark.sparkContext.addSparkListener(
-          new org.apache.spark.scheduler.SparkListener {
-            override def onJobStart(
-                j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-              jobs.incrementAndGet()
-              stages.addAndGet(j.stageInfos.size)
-              tasks.addAndGet(j.stageInfos.map(_.numTasks).sum)
-            }
-          })
         val names = qs.split(',').toSeq
         try force(names.head) catch { case NonFatal(_) => }
         for (n <- names) {
-          jobs.set(0); stages.set(0); tasks.set(0)
-          val t = try force(n) catch { case NonFatal(e) =>
-            System.err.println(s"[extra] $n: ${e.getMessage}"); Double.NaN }
-          // listener is async; give the queue a moment to drain
-          Thread.sleep(300)
-          println(f"$n%-28s sec=$t%.3f jobs=${jobs.get}%-4d stages=${stages.get}%-5d tasks=${tasks.get}")
-        }
-      case "explain" :: suffix :: qs :: Nil =>
-        val outDir = new java.io.File("plans/r08")
-        outDir.mkdirs()
-        for (n <- qs.split(',').toSeq) {
-          try {
-            val df = SparkEntry.queries(n)(spark, sfDir)
-            val txt = df.queryExecution.explainString(
-              org.apache.spark.sql.execution.FormattedMode)
-            val f = new java.io.PrintWriter(new java.io.File(outDir, s"${n}_$suffix.txt"))
-            try f.write(txt) finally f.close()
-            println(s"wrote plans/r08/${n}_$suffix.txt (${txt.length} chars)")
-          } catch { case NonFatal(e) =>
-            System.err.println(s"[extra] $n explain: ${e.getMessage}") }
+          var t = Double.NaN
+          val c = JobCensus.during(spark.sparkContext) { t = timed(n) }
+          println(f"$n%-28s sec=$t%.3f jobs=${c.jobs}%-4d stages=${c.stages}%-5d tasks=${c.tasks}")
         }
       case other =>
-        System.err.println(s"usage: time <reps> <q,..> | jobs <q,..> | explain <suffix> <q,..> | mksf1 <src> <dst>; got $other")
+        System.err.println(s"usage: time <reps> <q,..> | jobs <q,..> | mksf1 <src> <dst>; got $other")
         sys.exit(2)
     }
     spark.stop()

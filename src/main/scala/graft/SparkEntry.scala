@@ -2321,7 +2321,7 @@ object SparkEntry {
 
     "q_ngram_jaccard" -> ((s, dir) =>
       // oracleBlocking: the md5 block key is what DuckDB replays — the
-      // production default is xxhash64 (benched as q_ngram_jaccard_prod)
+      // production default is xxhash64 (pinned by ScaleGuardSpec)
       Dedup.ngramJaccardPairs(docs(s, dir), "doc_id", "text", threshold = 0.3,
         oracleBlocking = true)),
 

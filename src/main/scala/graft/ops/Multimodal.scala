@@ -1,7 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.Dataset
 import scala.util.control.NonFatal
 
 /** Multimodal column handling: media payloads are opaque binary columns
@@ -16,8 +15,8 @@ import scala.util.control.NonFatal
   * pixel/feature EMBEDDING remains a clearly-marked deterministic fake
   * (`decodeStub`): the actual image/audio codecs are not in this
   * container, and a production embedder drops in by replacing that one
-  * function — the schema, partitioning, batch shape, and null handling
-  * around it are real and tested.
+  * function — the schema, batch shape, and null handling around it are
+  * real and tested.
   */
 object Multimodal {
 
@@ -90,17 +89,5 @@ object Multimodal {
         }
       }
     }
-  }
-
-  /** Partitioning for media tables: payloads are large — repartition by
-    * size-aware bucket exactly like documents (reuses the pipeline's
-    * giant-doc strategy) so a 4 GB video never straggles a task of
-    * thumbnails. */
-  def sizeBucketed(df: DataFrame, partitions: Int, giantBuckets: Int,
-                   giantBytes: Long): DataFrame = {
-    val bucket = when(length(col("payload")) > giantBytes,
-        pmod(xxhash64(col("media_id")), lit(giantBuckets)) + partitions)
-      .otherwise(pmod(xxhash64(col("media_id")), lit(partitions)))
-    df.repartition(partitions + giantBuckets, bucket)
   }
 }

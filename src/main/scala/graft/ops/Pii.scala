@@ -49,11 +49,6 @@ object Pii {
   def phoneCount(text: Column): Column = regexp_count(text, lit(PhoneRe))
   def idNumCount(text: Column): Column = regexp_count(text, lit(IdNumRe))
 
-  /** Total PII hits — the drop/score signal a quality filter consumes. */
-  def piiCount(text: Column): Column =
-    emailCount(text) + ipv4Count(text) + ipv6Count(text) +
-      phoneCount(text) + idNumCount(text)
-
   /** Redacted text: every detected span replaced by a typed
     * placeholder. ORDER MATTERS and is part of the contract (the
     * oracle replays it verbatim): emails first (their digits must not

@@ -31,10 +31,6 @@ object TextOps {
   /** Quality-scoring signals (integer outputs — oracle-stable). */
   def alphaChars(c: Column): Column =
     length(regexp_replace(c, "[^A-Za-z]", "")).cast("long")
-  def digitChars(c: Column): Column =
-    length(regexp_replace(c, "[^0-9]", "")).cast("long")
-  def punctChars(c: Column): Column =
-    length(regexp_replace(c, "[^.,;:!?'\"()\\[\\]-]", "")).cast("long")
 
   /** Composite quality score in [0,100]: length + alpha-ratio +
     * mean-word-length sanity (a cheap C4/Gopher-style filter).

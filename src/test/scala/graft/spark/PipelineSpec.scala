@@ -1,7 +1,5 @@
 package graft.spark
 
-import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.spark.KernelRegistry.kernel
@@ -22,35 +20,8 @@ object SparkTestSession {
     s
   }
 
-  /** Spark jobs started by `f`, counted by a listener: the jobs of this
-    * thread and of the threads it starts (a streaming query's
-    * micro-batches), which inherit a per-call local property; a
-    * sentinel job after `f` flushes the asynchronous listener bus. */
-  def jobsDuring(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val key = "graft.test.jobsDuring"
-    val token = java.util.UUID.randomUUID.toString
-    val seen = new LinkedBlockingQueue[String]
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        seen.put(Option(j.properties).flatMap(p => Option(p.getProperty(key))).getOrElse(""))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(key, token)
-      try f finally sc.setLocalProperty(key, "sentinel-" + token)
-      sc.parallelize(Seq(1), 1).count()
-      sc.setLocalProperty(key, null)
-      var jobs = 0
-      var d = ""
-      while (d != "sentinel-" + token) {
-        d = seen.poll(60, TimeUnit.SECONDS)
-        if (d == null) throw new AssertionError("the sentinel job never reached the listener")
-        if (d == token) jobs += 1
-      }
-      jobs
-    } finally sc.removeSparkListener(listener)
-  }
+  /** Spark jobs started by `f` (see `JobCensus.during`). */
+  def jobsDuring(f: => Unit): Int = JobCensus.during(spark.sparkContext)(f).jobs
 }
 
 /** Pipeline E2E (FIXTURES.md §6 t1/t2): constructive expected spans vs
