@@ -29,16 +29,6 @@ object StreamingExtract {
     * which flush on a no-data micro-batch AvailableNow cannot wait on). */
   private final case class Rows(n: Long) extends Stop
 
-  /** Where a bounded drain's output goes. */
-  private sealed trait Sink
-  /** The memory sink, in `outputMode`, stopped by `stop`. */
-  private final case class Memory(outputMode: String, stop: Stop) extends Sink
-  /** foreachBatch: each micro-batch's output, tagged with its
-    * `batch_id` and kept as a localCheckpoint (a re-run batch id
-    * replaces its frame); the result is their union. Ends on
-    * AvailableNow. */
-  private case object PerBatchFrames extends Sink
-
   /** ProcessingTimeTimeout makes shouldRunAnotherBatch always true, so a
     * TTL drain never terminates under AvailableNow (and
     * processAllAvailable never returns): it polls to one verdict per
@@ -46,9 +36,12 @@ object StreamingExtract {
   private def ttlStop(stateTtlMs: Long): Stop =
     if (stateTtlMs > 0) OnePerInput else AvailableNow
 
-  /** The one bounded-drain harness behind every `*Drain` below: it runs
-    * `transform` over `batches` as a real micro-batch stream and hands
-    * the result back as a plain, materialized DataFrame.
+  /** The bounded-drain harness behind the STATEFUL drains (dedup,
+    * semdedup and fetch-schedule verdicts; window and session counts):
+    * it runs `transform` over `batches` as a real micro-batch stream, so
+    * keyed state and watermarks cross real micro-batch boundaries, and
+    * hands the result back as a plain, materialized DataFrame. The
+    * stateless drains need no stream: see [[perFrame]].
     *
     *  - Files: each frame becomes ONE parquet file whose mtime is
     *    sequenced by its index, read with `maxFilesPerTrigger = 1`, so
@@ -63,28 +56,26 @@ object StreamingExtract {
     *    (after the files are written) and restored afterwards. The
     *    state-store instance count is pinned by the first run's width,
     *    and a small drain at the session's full width is task overhead;
-    *    every transform here is width-invariant (set-semantics joins,
-    *    keyed state, Pack.concatChunk's pinned invariance).
+    *    every transform here is width-invariant (keyed state, grouped
+    *    windows).
+    *  - Sink: the memory sink in `outputMode`, under this query's name.
     *  - Stop: AvailableNow; or a ProcessingTime trigger polled until a
     *    StreamingQueryListener on this query's name has seen the
     *    expected sink rows (driver-side progress events, no Spark job
     *    per poll and no bound on how many triggers are counted), then
     *    one count job checks the table.
-    *  - Result: the memory table is localCheckpoint-ed; per-batch frames
-    *    are already checkpointed, and their union is returned with no
-    *    write and no readback.
+    *  - Result: the memory table, localCheckpoint-ed.
     *  - Teardown: the query and listener stop, the width is restored,
     *    the memory table dropped and the temp dir removed, on every
     *    path. */
-  private def boundedDrain(batches: Seq[DataFrame], ordered: Boolean, sink: Sink)
+  private def boundedDrain(batches: Seq[DataFrame], ordered: Boolean,
+                           outputMode: String, stop: Stop)
                           (transform: DataFrame => DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.lit
     val spark = batches.head.sparkSession
     val width = "spark.sql.shuffle.partitions"
     val prevWidth = spark.conf.get(width)
     val base = java.nio.file.Files.createTempDirectory("graft-drain").toFile
     val qname = "graft_drain_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val ck = new java.io.File(base, "ck").toString
     var q: StreamingQuery = null
     var listener: StreamingQueryListener = null
     try {
@@ -92,51 +83,38 @@ object StreamingExtract {
       spark.conf.set(width, "8")
       val stream = spark.readStream.schema(batches.head.schema)
         .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
-      sink match {
-        case PerBatchFrames =>
-          val out = scala.collection.mutable.TreeMap.empty[Long, DataFrame]
-          q = stream.writeStream.option("checkpointLocation", ck)
-            .trigger(Trigger.AvailableNow())
-            .foreachBatch { (b: DataFrame, batchId: Long) =>
-              out(batchId) = transform(b)
-                .withColumn("batch_id", lit(batchId.toInt)).localCheckpoint()
-            }.start()
-          q.awaitTermination()
-          out.values.reduce(_ unionByName _)
-        case Memory(outputMode, stop) =>
-          val writer = transform(stream).writeStream.format("memory")
-            .queryName(qname).outputMode(outputMode)
-            .option("checkpointLocation", ck)
-          if (stop == AvailableNow) {
-            q = writer.trigger(Trigger.AvailableNow()).start()
-            q.awaitTermination()
-          } else {
-            // the written files' footers give the input row count; the
-            // frames' own count would re-run their construction
-            val expected = stop match {
-              case Rows(n) => n
-              case _ => spark.read.schema(batches.head.schema)
-                .parquet(inDir.toString).count()
-            }
-            val delivered = new java.util.concurrent.atomic.AtomicLong
-            listener = new StreamingQueryListener {
-              def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-              def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-              def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
-                if (e.progress.name == qname)
-                  delivered.addAndGet(math.max(e.progress.sink.numOutputRows, 0L))
-            }
-            spark.streams.addListener(listener)
-            q = writer.trigger(Trigger.ProcessingTime("50 milliseconds")).start()
-            val deadline = System.nanoTime() + 120L * 1000000000L
-            while (delivered.get < expected && System.nanoTime() < deadline)
-              Thread.sleep(50)
-            q.stop()
-            val got = spark.table(qname).count()
-            require(got == expected, s"drain incomplete: $got of $expected rows")
-          }
-          spark.table(qname).localCheckpoint()
+      val writer = transform(stream).writeStream.format("memory")
+        .queryName(qname).outputMode(outputMode)
+        .option("checkpointLocation", new java.io.File(base, "ck").toString)
+      if (stop == AvailableNow) {
+        q = writer.trigger(Trigger.AvailableNow()).start()
+        q.awaitTermination()
+      } else {
+        // the written files' footers give the input row count; the
+        // frames' own count would re-run their construction
+        val expected = stop match {
+          case Rows(n) => n
+          case _ => spark.read.schema(batches.head.schema)
+            .parquet(inDir.toString).count()
+        }
+        val delivered = new java.util.concurrent.atomic.AtomicLong
+        listener = new StreamingQueryListener {
+          def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+          def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+          def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+            if (e.progress.name == qname)
+              delivered.addAndGet(math.max(e.progress.sink.numOutputRows, 0L))
+        }
+        spark.streams.addListener(listener)
+        q = writer.trigger(Trigger.ProcessingTime("50 milliseconds")).start()
+        val deadline = System.nanoTime() + 120L * 1000000000L
+        while (delivered.get < expected && System.nanoTime() < deadline)
+          Thread.sleep(50)
+        q.stop()
+        val got = spark.table(qname).count()
+        require(got == expected, s"drain incomplete: $got of $expected rows")
       }
+      spark.table(qname).localCheckpoint()
     } finally {
       if (q != null) q.stop()
       if (listener != null) spark.streams.removeListener(listener)
@@ -144,6 +122,22 @@ object StreamingExtract {
       scala.util.Try(spark.catalog.dropTempView(qname))
       org.apache.commons.io.FileUtils.deleteQuietly(base)
     }
+  }
+
+  /** The stateless drains' replay: frame i is transformed on its own,
+    * tagged `batch_id = i` (its micro-batch id under the file-source
+    * drain) and the frames are unioned in order. A stateless stage has
+    * nothing to carry between micro-batches, so this IS the stream's
+    * result, without the stream: no batch files, offset or commit log,
+    * or per-trigger planning (StreamingSpec pins it against a real
+    * `maxFilesPerTrigger = 1` stream). The union stays lazy and the
+    * session's width is left alone. */
+  private def perFrame(batches: Seq[DataFrame])
+                      (transform: DataFrame => DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.lit
+    batches.zipWithIndex.map { case (b, i) =>
+      transform(b).withColumn("batch_id", lit(i))
+    }.reduce(_ unionByName _)
   }
 
   /** Writes frame i to `base/in/b<i>.parquet` with mtime sequenced by i
@@ -223,7 +217,7 @@ object StreamingExtract {
     * plain window over the batch input. */
   def dedupVerdictsDrain(batches: Seq[DataFrame],
                          stateTtlMs: Long = 0L): DataFrame =
-    boundedDrain(batches, ordered = true, Memory("update", ttlStop(stateTtlMs))) { s =>
+    boundedDrain(batches, ordered = true, "update", ttlStop(stateTtlMs)) { s =>
       import s.sparkSession.implicits._
       dedupVerdicts(s.as[(String, String)], stateTtlMs).toDF()
     }
@@ -245,7 +239,7 @@ object StreamingExtract {
   def windowCountsDrain(batches: Seq[DataFrame], windowSec: Int,
                         watermarkSec: Int, expectedRows: Long): DataFrame = {
     import org.apache.spark.sql.functions._
-    boundedDrain(batches, ordered = false, Memory("append", Rows(expectedRows))) {
+    boundedDrain(batches, ordered = false, "append", Rows(expectedRows)) {
       _.withWatermark("ts", s"$watermarkSec seconds")
         .groupBy(window(col("ts"), s"$windowSec seconds"), col("lang"))
         .agg(count(lit(1)).as("n"))
@@ -270,7 +264,7 @@ object StreamingExtract {
     // NTZ sources convert timezone-free via
     // timestamp_micros(timestamp_diff(MICROSECOND, ntz_epoch, ts)) so
     // unix_micros here replays DuckDB's epoch_us(ntz) on any zone
-    boundedDrain(batches, ordered = false, Memory("append", Rows(expectedRows))) {
+    boundedDrain(batches, ordered = false, "append", Rows(expectedRows)) {
       _.withWatermark("ts", s"$watermarkSec seconds")
         .groupBy(session_window(col("ts"), s"$gapSec seconds"), col("lang"))
         .agg(count(lit(1)).as("n_events"))
@@ -287,9 +281,7 @@ object StreamingExtract {
     * is STATELESS (record framing and extraction are per-row), so the
     * streamed output equals the batch query on the union of batches
     * regardless of file arrival order — which is exactly what the
-    * q_stream_warc oracle replays. Checkpointed file source = the
-    * exactly-once resumability story for a continuously-crawling
-    * archive directory. */
+    * q_stream_warc oracle replays. */
   def warcExtract(blobs: DataFrame, idCol: String, blobCol: String): DataFrame = {
     import org.apache.spark.sql.functions._
     blobs.select(col(idCol).as("doc_id"),
@@ -300,13 +292,12 @@ object StreamingExtract {
         kernel("parse_html_text", col("r.body")).as("body_text"))
   }
 
-  /** Bounded micro-batch drain of `warcExtract` for the oracle gate.
-    * Append mode: the stage is stateless, every row emits exactly
+  /** Bounded drain of `warcExtract` for the oracle gate: a per-frame
+    * replay ([[perFrame]]'s union, with no `batch_id`: the output never
+    * had one). The stage is stateless, so every row emits exactly
     * once. */
   def warcExtractDrain(batches: Seq[DataFrame]): DataFrame =
-    boundedDrain(batches, ordered = false, Memory("append", AvailableNow)) {
-      warcExtract(_, "doc_id", "blob")
-    }
+    batches.map(warcExtract(_, "doc_id", "blob")).reduce(_ unionByName _)
 
   /** WARC ARCHIVE SEGMENTER (batch stage): compose one deterministic
     * WARC/1.0 response record per row ([[graft.spark.WarcUdfs.compose]]
@@ -354,16 +345,11 @@ object StreamingExtract {
     * ends — segment identity is (batch_id, segment)). The stage is
     * stateless across batches, so the streamed output equals the batch
     * segmenter applied to each arrival batch independently — which is
-    * exactly what the oracle replays (per-batch window cumsum). Uses
-    * foreachBatch + append (the file-rotation sink pattern); the
-    * checkpointed file source makes re-delivery exactly-once per input
-    * file. */
+    * exactly what the oracle replays (per-batch window cumsum). The
+    * drain is a per-frame replay ([[perFrame]]): frame i is segmented
+    * on its own and tagged `batch_id = i`. */
   def composeSegmentsDrain(batches: Seq[DataFrame], budget: Long): DataFrame =
-    // composeSegments keys its prefix sum by ascending id: row order is
-    // irrelevant
-    boundedDrain(batches, ordered = false, PerBatchFrames) {
-      composeSegments(_, "doc_id", "uri", "date", "body", budget)
-    }
+    perFrame(batches)(composeSegments(_, "doc_id", "uri", "date", "body", budget))
 
   /** Streaming incremental CDC: each arriving file-batch of
     * (re)crawled rows compares against a STATIC baseline snapshot —
@@ -371,15 +357,13 @@ object StreamingExtract {
     * [[graft.ops.SnapshotDiff.incremental]] (unchanged rows drop;
     * 'removed' is a full-snapshot question and deliberately absent).
     * Stateless per batch (the baseline is the only history), so
-    * batch == stream semantics hold exactly; batch_id = file mtime
-    * order under maxFilesPerTrigger=1 + AvailableNow (the segments
+    * batch == stream semantics hold exactly. The drain is a per-frame
+    * replay ([[perFrame]]): batch_id = the frame's index, its
+    * micro-batch id under a maxFilesPerTrigger=1 stream (the segments
     * identity convention). */
   def cdcDrain(baseline: DataFrame, batches: Seq[DataFrame],
                idCol: String, contentCols: Seq[String]): DataFrame =
-    // the per-batch diff is a set-semantics join: order-free
-    boundedDrain(batches, ordered = false, PerBatchFrames) {
-      graft.ops.SnapshotDiff.incremental(_, baseline, idCol, contentCols)
-    }
+    perFrame(batches)(graft.ops.SnapshotDiff.incremental(_, baseline, idCol, contentCols))
 
   /** Per-hash dedup state: how many copies seen, which doc won. */
   final case class DedupState(first_doc_id: String, copies: Long)
@@ -599,7 +583,7 @@ object StreamingExtract {
                     threshold: Double = 0.9,
                     capPerCell: Int = 256,
                     stateTtlMs: Long = 0L): DataFrame =
-    boundedDrain(batches, ordered = true, Memory("update", ttlStop(stateTtlMs))) { s =>
+    boundedDrain(batches, ordered = true, "update", ttlStop(stateTtlMs)) { s =>
       import s.sparkSession.implicits._
       semDedupVerdicts(s.as[(String, Seq[Float])], centroids, threshold,
         capPerCell, stateTtlMs).toDF()
@@ -667,7 +651,7 @@ object StreamingExtract {
     * protocol). */
   def fetchScheduleDrain(batches: Seq[DataFrame],
                          stateTtlMs: Long = 0L): DataFrame =
-    boundedDrain(batches, ordered = true, Memory("update", ttlStop(stateTtlMs))) { s =>
+    boundedDrain(batches, ordered = true, "update", ttlStop(stateTtlMs)) { s =>
       import s.sparkSession.implicits._
       fetchScheduleVerdicts(s.as[(String, String, Long)], stateTtlMs).toDF()
     }

@@ -222,7 +222,7 @@ class WarcSpec extends AnyFunSuite {
     // the round-trip trap: a control char in a header value re-parses
     // differently than an oracle replays it — the adversarial VT catch)
     val evil = WarcUdfs.compose(
-      u("https://e.com/\r\nWARC-Type: forged \t\u000b\f x"),
+      u("https://e.com/\r\nWARC-Type: forged\u0000\t\u000b\f x"),
       u("2026-01-01T00:00:00Z"), u("Bb")).toString
     assert(evil.contains("WARC-Target-URI: https://e.com/WARC-Type:forgedx\r\n"))
     val parsed = split(evil.getBytes(Utf8))

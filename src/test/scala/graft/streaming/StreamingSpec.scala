@@ -110,7 +110,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(got.toSeq == expected)
   }
 
-  test("composeSegmentsDrain job budget: one batch-file write, three jobs per micro-batch") {
+  test("composeSegmentsDrain job budget: two jobs per frame, then the collect") {
     import spark.implicits._
     val rows = (0 until 40).map(i => (i.toLong, s"https://t/$i", "2026-01-01T00:00:00Z", "b" * (50 + i)))
       .toDF("doc_id", "uri", "date", "body")
@@ -120,9 +120,113 @@ class StreamingSpec extends AnyFunSuite {
       n = StreamingExtract.composeSegmentsDrain(batches, budget = 500L).collect().length
     }
     assert(n == 40)
-    // the batch-file write; per micro-batch the pack's range sketch, its
-    // pass 1 and the batch's localCheckpoint; then the collect
-    assert(jobs == 8, s"$jobs jobs")
+    // per frame the pack's range sketch and its pass 1; then the collect,
+    // which runs both frames' pass 2
+    assert(jobs == 5, s"$jobs jobs")
+  }
+
+  test("the stateless drains start no stream, make no temp dir and keep the shuffle width") {
+    import spark.implicits._
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import scala.jdk.CollectionConverters._
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new StreamingQueryListener {
+      // called synchronously by DataStreamWriter.start()
+      def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+        started.incrementAndGet()
+      def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+      def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    }
+    val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    val watch = tmp.getFileSystem.newWatchService()
+    tmp.register(watch, java.nio.file.StandardWatchEventKinds.ENTRY_CREATE)
+    val width = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.streams.addListener(listener)
+    try {
+      val recs = (0 until 8).map(i => (i.toLong, s"https://t/$i", "2026-01-01T00:00:00Z",
+        "b" * (50 + i))).toDF("doc_id", "uri", "date", "body")
+      val frames = Seq(recs.filter($"doc_id" < 4), recs.filter($"doc_id" >= 4))
+      val http = "HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n<p>x</p>"
+      val blobs = Seq(("1", (s"WARC/1.0\r\nWARC-Type: response\r\nWARC-Target-URI: http://t/1\r\n" +
+        s"Content-Length: ${http.length}\r\n\r\n$http\r\n\r\n").getBytes("UTF-8"))).toDF("doc_id", "blob")
+      val baseline = recs.filter($"doc_id" % 2 === 0).select($"doc_id", $"body")
+      Seq(StreamingExtract.warcExtractDrain(Seq(blobs, blobs)),
+        StreamingExtract.composeSegmentsDrain(frames, budget = 200L),
+        StreamingExtract.cdcDrain(baseline, frames, "doc_id", Seq("body"))
+      ).foreach(d => assert(d.collect().nonEmpty))
+    } finally spark.streams.removeListener(listener)
+    // inotify events reach the watch service from a background thread
+    val created = Iterator.continually(watch.poll(200, java.util.concurrent.TimeUnit.MILLISECONDS))
+      .takeWhile(_ != null)
+      .flatMap { k => val es = k.pollEvents().asScala.map(_.context.toString); k.reset(); es }
+      .filter(_.startsWith("graft-")).toList
+    watch.close()
+    assert(started.get == 0, s"${started.get} streaming queries started")
+    assert(spark.streams.active.isEmpty)
+    assert(created.isEmpty, s"temp dirs created: $created")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == width)
+  }
+
+  test("the stateless drains equal a real file-source stream, batch_id included") {
+    import spark.implicits._
+    import graft.ops.SnapshotDiff
+    import org.apache.spark.sql.{DataFrame, Row}
+    import org.apache.spark.sql.functions.{concat, lit, when}
+    import org.apache.spark.sql.streaming.Trigger
+    val budget = 300L
+    val recs = (0 until 12).map { i =>
+      (i.toLong, s"https://t/$i", "2026-01-01T00:00:00Z", if (i == 5) "X" * 900 else "b" * (60 + i))
+    }.toDF("doc_id", "uri", "date", "body")
+    val frames = Seq(recs.filter($"doc_id" % 3 =!= 1), recs.filter($"doc_id" % 3 === 1))
+    // ids 10 and 11 are added; every fourth body changed since the baseline
+    val baseline = recs.filter($"doc_id" < 10).select($"doc_id",
+      when($"doc_id" % 4 === 0, concat($"body", lit("~"))).otherwise($"body").as("body"))
+    def segments(df: DataFrame) =
+      StreamingExtract.composeSegments(df, "doc_id", "uri", "date", "body", budget)
+    def cdc(df: DataFrame) = SnapshotDiff.incremental(df, baseline, "doc_id", Seq("body"))
+
+    // one parquet file per frame, its mtime sequenced by the frame index
+    val base = java.nio.file.Files.createTempDirectory("stream-replay").toFile
+    val streamed = scala.collection.mutable.Map.empty[String, Seq[Row]].withDefaultValue(Nil)
+    try {
+      val in = new java.io.File(base, "in")
+      in.mkdirs()
+      frames.zipWithIndex.foreach { case (f, i) =>
+        val part = new java.io.File(base, s"part$i")
+        f.coalesce(1).write.parquet(part.toString)
+        val file = part.listFiles().find(_.getName.endsWith(".parquet")).get
+        val dst = new java.io.File(in, s"b$i.parquet")
+        java.nio.file.Files.move(file.toPath, dst.toPath)
+        dst.setLastModified(1600000000000L + i * 600000L)
+      }
+      val q = spark.readStream.schema(frames.head.schema)
+        .option("maxFilesPerTrigger", "1").parquet(in.toString)
+        .writeStream.option("checkpointLocation", new java.io.File(base, "ck").toString)
+        .trigger(Trigger.AvailableNow())
+        .foreachBatch { (b: DataFrame, batchId: Long) =>
+          def tagged(df: DataFrame) = df.withColumn("batch_id", lit(batchId.toInt)).collect().toSeq
+          streamed("segments") ++= tagged(segments(b))
+          streamed("cdc") ++= tagged(cdc(b))
+        }.start()
+      try q.awaitTermination() finally q.stop()
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(base)
+
+    def byBatchAndId(rows: Seq[Row]) =
+      rows.sortBy(r => (r.getAs[Int]("batch_id"), r.getAs[Long]("doc_id")))
+    val drains = Map(
+      "segments" -> StreamingExtract.composeSegmentsDrain(frames, budget),
+      "cdc" -> StreamingExtract.cdcDrain(baseline, frames, "doc_id", Seq("body")))
+    drains.foreach { case (name, drain) =>
+      val got = byBatchAndId(drain.collect().toSeq)
+      val want = byBatchAndId(streamed(name))
+      assert(want.map(_.getAs[Int]("batch_id")).distinct == Seq(0, 1), name)
+      assert(got.map(_.schema.fieldNames.toSeq).distinct == want.map(_.schema.fieldNames.toSeq).distinct, name)
+      assert(got == want, s"$name: drain differs from the stream")
+    }
+    // the giant record straddles its segment; ids 10/11 add, 0/4/8 change
+    assert(streamed("segments").exists(r => r.getAs[Long]("doc_id") == 5L && r.getAs[Int]("straddles") == 1))
+    assert(streamed("cdc").map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("change")).toMap ==
+      Map(0L -> "changed", 4L -> "changed", 8L -> "changed", 10L -> "added", 11L -> "added"))
   }
 
   test("streaming CDC: drain equals the per-batch incremental; verdicts pinned") {
