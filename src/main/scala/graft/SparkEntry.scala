@@ -3012,10 +3012,9 @@ object SparkEntry {
     // merge): the same events corpus, TIME-split into two batches (no
     // event of batch 2 is late vs batch 1's watermark) so sessions
     // spanning the split must MERGE in state; a far-future sentinel
-    // closes every real session; expected row count for the drain poll
-    // comes from the batch sessionizer (the oracle still replays the
-    // values independently). Result must equal the batch
-    // gaps-and-islands rollup exactly — one session rule, two engines.
+    // closes every real session, which the drain's final no-data batch
+    // flushes. Result must equal the batch gaps-and-islands rollup
+    // exactly — one session rule, two engines.
     "q_stream_sessions" -> ((s, dir) => {
       // NTZ → instant, timezone-FREE: epoch micros by NTZ arithmetic,
       // re-materialized with timestamp_micros (no session-zone
@@ -3031,11 +3030,8 @@ object SparkEntry {
       val sentinel = s.range(1).select(lit("zz").as("lang"),
         timestamp_micros(lit(2019686400000000L)).as("ts")) // 2034-01-01
       val b2 = ev.filter(col("ts") >= split).unionByName(sentinel)
-      val expected = graft.ops.Sessions.sessionize(events(s, dir),
-        "user_id", "ts", "event_id", gapSec = 1800, matchCol = lit(false))
-        .count()
       graft.streaming.StreamingExtract.sessionCountsDrain(Seq(b1, b2),
-          gapSec = 1800, watermarkSec = 3600, expectedRows = expected)
+          gapSec = 1800, watermarkSec = 3600)
         .select(col("lang").as("user"), col("start_us"), col("end_us"),
           col("n_events"))
     }),
@@ -3064,10 +3060,8 @@ object SparkEntry {
       val b2 = d.filter(col("doc_id") >= 150).drop("doc_id")
         .unionByName(sentinel)
       val late = d.filter(col("doc_id") === 5).drop("doc_id")
-      val expected = d.select((col("doc_id") - (col("doc_id") % 30)).as("w"),
-        col("lang")).distinct().count()
       graft.streaming.StreamingExtract.windowCountsDrain(Seq(b1, b2, late),
-          windowSec = 30, watermarkSec = 60, expectedRows = expected)
+          windowSec = 30, watermarkSec = 60)
         .select(col("w_start"), col("lang"), col("n"))
     }),
 
@@ -3075,9 +3069,9 @@ object SparkEntry {
     // (round 7): identical corpus/batches, stateTtlMs = 10 min >> the
     // drain window, so every verdict must equal the no-TTL replay — the
     // in-window-equivalence contract behind a DuckDB hash, exercising
-    // ProcessingTimeTimeout + setTimeoutDuration + the bounded
-    // poll-and-stop drain protocol (AvailableNow never terminates under
-    // ProcessingTimeTimeout — shouldRunAnotherBatch is always true).
+    // the processing-time timeout + setTimeoutDuration under the same
+    // AvailableNow drain as q_stream_dedup (no-data batches off, so the
+    // drain ends once both frames are consumed).
     "q_stream_dedup_ttl" -> ((s, dir) => {
       val d = docs(s, dir).filter(col("doc_id") < 300)
         .select(lpad(col("doc_id").cast("string"), 6, "0").as("doc_id"),

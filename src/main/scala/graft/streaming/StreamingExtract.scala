@@ -3,7 +3,7 @@ package graft.streaming
 import graft.spark.{DocRow, Lineage, MetricsRow, Pipeline}
 import graft.spark.KernelRegistry.kernel
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Structured-Streaming front end for the extraction pipeline.
   *
@@ -19,23 +19,6 @@ object StreamingExtract {
 
   val docSchema = Encoders.product[DocRow].schema
 
-  /** How a bounded memory-sink drain knows it is done. */
-  private sealed trait Stop
-  /** The query ends by itself (`Trigger.AvailableNow`). */
-  private case object AvailableNow extends Stop
-  /** Polled: one output row per written input row (the TTL drains). */
-  private case object OnePerInput extends Stop
-  /** Polled: the caller's count of output rows (append-mode windows,
-    * which flush on a no-data micro-batch AvailableNow cannot wait on). */
-  private final case class Rows(n: Long) extends Stop
-
-  /** ProcessingTimeTimeout makes shouldRunAnotherBatch always true, so a
-    * TTL drain never terminates under AvailableNow (and
-    * processAllAvailable never returns): it polls to one verdict per
-    * input row instead — update mode emits exactly one per row. */
-  private def ttlStop(stateTtlMs: Long): Stop =
-    if (stateTtlMs > 0) OnePerInput else AvailableNow
-
   /** The bounded-drain harness behind the STATEFUL drains (dedup,
     * semdedup and fetch-schedule verdicts; window and session counts):
     * it runs `transform` over `batches` as a real micro-batch stream, so
@@ -50,75 +33,52 @@ object StreamingExtract {
     *    within-batch arrival order) write one coalesce(1) job per frame;
     *    order-free drains write every frame in one union +
     *    partitionBy job, whose writer does not keep row order.
-    *  - Schema: the stream, and the polled stop's count of the written
-    *    files, read with `batches.head.schema` (no inference job).
+    *  - Schema: `batches.head.schema` (no inference job).
     *  - Width: `spark.sql.shuffle.partitions` is 8 while the stream runs
-    *    (after the files are written) and restored afterwards. The
-    *    state-store instance count is pinned by the first run's width,
-    *    and a small drain at the session's full width is task overhead;
-    *    every transform here is width-invariant (keyed state, grouped
-    *    windows).
-    *  - Sink: the memory sink in `outputMode`, under this query's name.
-    *  - Stop: AvailableNow; or a ProcessingTime trigger polled until a
-    *    StreamingQueryListener on this query's name has seen the
-    *    expected sink rows (driver-side progress events, no Spark job
-    *    per poll and no bound on how many triggers are counted), then
-    *    one count job checks the table.
+    *    (after the files are written). The state-store instance count
+    *    is pinned by the first run's width, and a small drain at the
+    *    session's full width is task overhead; every transform here is
+    *    width-invariant (keyed state, grouped windows).
+    *  - No-data batches: on for "append" (the window and session
+    *    counts: the final no-data batch flushes what the watermark has
+    *    passed), off for "update" (the verdicts emit only on input, and
+    *    an operator with a processing-time TTL asks for a no-data batch
+    *    after every batch, so the query would never end). A TTL timeout
+    *    therefore fires at the next batch that has input.
+    *  - Sink: the memory sink in `outputMode`, under this query's name,
+    *    on `Trigger.AvailableNow`: the query ends once its input is
+    *    consumed, and one that has not ended in 120 s throws.
     *  - Result: the memory table, localCheckpoint-ed.
-    *  - Teardown: the query and listener stop, the width is restored,
-    *    the memory table dropped and the temp dir removed, on every
-    *    path. */
+    *  - Teardown: the query stops, the width and no-data setting are
+    *    restored, the memory table dropped and the temp dir removed, on
+    *    every path. */
   private def boundedDrain(batches: Seq[DataFrame], ordered: Boolean,
-                           outputMode: String, stop: Stop)
+                           outputMode: String)
                           (transform: DataFrame => DataFrame): DataFrame = {
     val spark = batches.head.sparkSession
     val width = "spark.sql.shuffle.partitions"
-    val prevWidth = spark.conf.get(width)
+    val noData = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val prev = Seq(width, noData).map(k => k -> spark.conf.get(k))
     val base = java.nio.file.Files.createTempDirectory("graft-drain").toFile
     val qname = "graft_drain_" + java.util.UUID.randomUUID.toString.replace("-", "")
     var q: StreamingQuery = null
-    var listener: StreamingQueryListener = null
     try {
       val inDir = writeBatchFiles(batches, base, ordered)
       spark.conf.set(width, "8")
+      spark.conf.set(noData, (outputMode == "append").toString)
       val stream = spark.readStream.schema(batches.head.schema)
         .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
-      val writer = transform(stream).writeStream.format("memory")
+      q = transform(stream).writeStream.format("memory")
         .queryName(qname).outputMode(outputMode)
         .option("checkpointLocation", new java.io.File(base, "ck").toString)
-      if (stop == AvailableNow) {
-        q = writer.trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      } else {
-        // the written files' footers give the input row count; the
-        // frames' own count would re-run their construction
-        val expected = stop match {
-          case Rows(n) => n
-          case _ => spark.read.schema(batches.head.schema)
-            .parquet(inDir.toString).count()
-        }
-        val delivered = new java.util.concurrent.atomic.AtomicLong
-        listener = new StreamingQueryListener {
-          def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-          def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-          def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
-            if (e.progress.name == qname)
-              delivered.addAndGet(math.max(e.progress.sink.numOutputRows, 0L))
-        }
-        spark.streams.addListener(listener)
-        q = writer.trigger(Trigger.ProcessingTime("50 milliseconds")).start()
-        val deadline = System.nanoTime() + 120L * 1000000000L
-        while (delivered.get < expected && System.nanoTime() < deadline)
-          Thread.sleep(50)
-        q.stop()
-        val got = spark.table(qname).count()
-        require(got == expected, s"drain incomplete: $got of $expected rows")
-      }
+        .trigger(Trigger.AvailableNow()).start()
+      if (!q.awaitTermination(120000L))
+        throw new java.util.concurrent.TimeoutException(
+          s"drain $qname did not end within 120 s")
       spark.table(qname).localCheckpoint()
     } finally {
       if (q != null) q.stop()
-      if (listener != null) spark.streams.removeListener(listener)
-      spark.conf.set(width, prevWidth)
+      prev.foreach { case (k, v) => spark.conf.set(k, v) }
       scala.util.Try(spark.catalog.dropTempView(qname))
       org.apache.commons.io.FileUtils.deleteQuietly(base)
     }
@@ -217,7 +177,7 @@ object StreamingExtract {
     * plain window over the batch input. */
   def dedupVerdictsDrain(batches: Seq[DataFrame],
                          stateTtlMs: Long = 0L): DataFrame =
-    boundedDrain(batches, ordered = true, "update", ttlStop(stateTtlMs)) { s =>
+    boundedDrain(batches, ordered = true, "update") { s =>
       import s.sparkSession.implicits._
       dedupVerdicts(s.as[(String, String)], stateTtlMs).toDF()
     }
@@ -233,13 +193,12 @@ object StreamingExtract {
     * row arriving while its window is still in state MERGES into the
     * final count — so callers sequence batches to make the verdict
     * deterministic (plant the late row one batch AFTER the
-    * watermark-advancing batch). The caller supplies `expectedRows`
-    * (the distinct (window, key) count it constructed) and the drain
-    * stops at that count. */
+    * watermark-advancing batch). The drain ends after the no-data batch
+    * that flushes the windows the final watermark has passed. */
   def windowCountsDrain(batches: Seq[DataFrame], windowSec: Int,
-                        watermarkSec: Int, expectedRows: Long): DataFrame = {
+                        watermarkSec: Int): DataFrame = {
     import org.apache.spark.sql.functions._
-    boundedDrain(batches, ordered = false, "append", Rows(expectedRows)) {
+    boundedDrain(batches, ordered = false, "append") {
       _.withWatermark("ts", s"$watermarkSec seconds")
         .groupBy(window(col("ts"), s"$windowSec seconds"), col("lang"))
         .agg(count(lit(1)).as("n"))
@@ -249,8 +208,8 @@ object StreamingExtract {
   }
 
   /** Streaming SESSIONIZATION: `session_window(ts, gap)` per key under
-    * a watermark, stopped at the caller's `expectedRows` like
-    * [[windowCountsDrain]]. Batches MUST be time-split (every event of
+    * a watermark, flushed and ended like [[windowCountsDrain]].
+    * Batches MUST be time-split (every event of
     * batch N+1 later than batch N's watermark) so no event is late —
     * sessions split across batches then MERGE in state and the result
     * equals the batch gaps-and-islands rollup
@@ -258,13 +217,13 @@ object StreamingExtract {
     * gap). Emitted end_us subtracts the gap session_window pads onto the
     * last event. */
   def sessionCountsDrain(batches: Seq[DataFrame], gapSec: Int,
-                         watermarkSec: Int, expectedRows: Long): DataFrame = {
+                         watermarkSec: Int): DataFrame = {
     import org.apache.spark.sql.functions._
     // event-time streaming requires TIMESTAMP (instants); callers with
     // NTZ sources convert timezone-free via
     // timestamp_micros(timestamp_diff(MICROSECOND, ntz_epoch, ts)) so
     // unix_micros here replays DuckDB's epoch_us(ntz) on any zone
-    boundedDrain(batches, ordered = false, "append", Rows(expectedRows)) {
+    boundedDrain(batches, ordered = false, "append") {
       _.withWatermark("ts", s"$watermarkSec seconds")
         .groupBy(session_window(col("ts"), s"$gapSec seconds"), col("lang"))
         .agg(count(lit(1)).as("n_events"))
@@ -393,16 +352,18 @@ object StreamingExtract {
     * fine for bounded drains and the oracle gate, unbounded over an
     * infinite stream (the reference frees its token/tree pools per parse,
     * mcobject_async.c:215; streaming state needs the same end of life).
-    * `stateTtlMs > 0` enables `ProcessingTimeTimeout`: a hash whose state
-    * has seen no copy for the TTL is dropped at the next trigger, so
-    * steady-state memory is one row per hash ACTIVE within the window,
-    * not per hash ever seen. Semantics under TTL are deliberately
+    * `stateTtlMs > 0` enables `GroupStateTimeout.ProcessingTimeTimeout`:
+    * a hash whose state has seen no copy for the TTL is dropped at the
+    * next micro-batch that runs (in a bounded drain, which runs no
+    * no-data batches: the next one with input), so steady-state memory
+    * is one row per hash ACTIVE within the window, not per hash ever
+    * seen. Semantics under TTL are deliberately
     * approximate at the boundary: a duplicate arriving AFTER its hash
     * expired reads as a fresh first (dedup windows behave this way in
     * every production CCNet-style pipeline); duplicates arriving while
     * the state row is alive get verdicts IDENTICAL to the no-TTL path
     * (StreamingSpec pins both properties). Timeout firing is lazy — a
-    * past-deadline group that receives data in the same trigger is still
+    * past-deadline group that receives data in the same batch is still
     * deduped against (TTL bounds memory, it is not a semantic clock). */
   def dedupVerdicts(docs: org.apache.spark.sql.Dataset[(String, String)],
                     stateTtlMs: Long = 0L)
@@ -583,7 +544,7 @@ object StreamingExtract {
                     threshold: Double = 0.9,
                     capPerCell: Int = 256,
                     stateTtlMs: Long = 0L): DataFrame =
-    boundedDrain(batches, ordered = true, "update", ttlStop(stateTtlMs)) { s =>
+    boundedDrain(batches, ordered = true, "update") { s =>
       import s.sparkSession.implicits._
       semDedupVerdicts(s.as[(String, Seq[Float])], centroids, threshold,
         capPerCell, stateTtlMs).toDF()
@@ -651,7 +612,7 @@ object StreamingExtract {
     * protocol). */
   def fetchScheduleDrain(batches: Seq[DataFrame],
                          stateTtlMs: Long = 0L): DataFrame =
-    boundedDrain(batches, ordered = true, "update", ttlStop(stateTtlMs)) { s =>
+    boundedDrain(batches, ordered = true, "update") { s =>
       import s.sparkSession.implicits._
       fetchScheduleVerdicts(s.as[(String, String, Long)], stateTtlMs).toDF()
     }

@@ -351,25 +351,16 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("dedup state TTL: in-window duplicates get identical verdicts; expired hashes read as fresh") {
-    import spark.implicits._
+    // With a processing-time timeout the operator asks for a no-data
+    // batch after every batch, so processAllAvailable would never return
+    // (a 14-minute hang in round 7). With no-data batches off, a batch
+    // runs only on input, and a timeout fires at the next batch that has
+    // input: the expiry below is driven by a batch of another key.
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    import s2.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-
-    // With ProcessingTimeTimeout, FlatMapGroupsWithStateExec.
-    // shouldRunAnotherBatch is always true, so the engine constructs
-    // batches continuously and processAllAvailable NEVER RETURNS (noNewData
-    // is never set — found the hard way in round 7, a 14-minute hang).
-    // TTL queries therefore use a real ProcessingTime trigger and the test
-    // POLLS the memory sink for the expected verdict count instead.
-    def awaitRows(table: String, n: Long, timeoutMs: Long = 30000): Unit = {
-      val deadline = System.nanoTime() + timeoutMs * 1000000L
-      while (spark.table(table).count() < n) {
-        if (System.nanoTime() > deadline)
-          fail(s"$table: expected $n rows, have ${spark.table(table).count()}")
-        Thread.sleep(50)
-      }
-    }
-    import org.apache.spark.sql.streaming.Trigger
+    implicit val sqlCtx = s2.sqlContext
 
     // (a) TTL large vs the window: verdicts must be IDENTICAL to the
     // NoTimeout path on the exact cross-batch scenario above (the TTL
@@ -377,13 +368,13 @@ class StreamingSpec extends AnyFunSuite {
     val inA = MemoryStream[(String, String)]
     val qA = StreamingExtract.dedupVerdicts(inA.toDS(), stateTtlMs = 10 * 60 * 1000L)
       .writeStream.format("memory").queryName("dedup_ttl_window")
-      .outputMode("update").trigger(Trigger.ProcessingTime("50 milliseconds")).start()
+      .outputMode("update").start()
     try {
       inA.addData(("d2", "same text"), ("d1", "same text"), ("d3", "other"))
-      awaitRows("dedup_ttl_window", 3)
+      qA.processAllAvailable()
       inA.addData(("d9", "  SAME TEXT "), ("d4", "other"))
-      awaitRows("dedup_ttl_window", 5)
-      val got = spark.table("dedup_ttl_window")
+      qA.processAllAvailable()
+      val got = s2.table("dedup_ttl_window")
         .collect().map(r => r.getString(0) -> (r.getBoolean(2), r.getLong(3))).toMap
       assert(got("d2") == (true, 1L) && got("d1") == (false, 2L) &&
         got("d3") == (true, 1L) && got("d9") == (false, 3L) &&
@@ -391,21 +382,24 @@ class StreamingSpec extends AnyFunSuite {
         s"in-window verdicts under TTL must equal the NoTimeout path: $got")
     } finally qA.stop()
 
-    // (b) expiry: a 1 ms TTL with real wall-clock between triggers — the
-    // hash's state row is dropped at the next timeout-firing batch, and a
-    // later copy starts a fresh first-arrival state (one row per ACTIVE
-    // hash, not per hash ever seen — the 100 TB memory bound)
+    // (b) expiry: a 1 ms TTL with real wall-clock between batches — the
+    // hash's state row is dropped by the next batch (one that carries
+    // only unrelated text), and a later copy starts a fresh first-arrival
+    // state (one row per ACTIVE hash, not per hash ever seen — the
+    // 100 TB memory bound)
     val inB = MemoryStream[(String, String)]
     val qB = StreamingExtract.dedupVerdicts(inB.toDS(), stateTtlMs = 1L)
       .writeStream.format("memory").queryName("dedup_ttl_expire")
-      .outputMode("update").trigger(Trigger.ProcessingTime("50 milliseconds")).start()
+      .outputMode("update").start()
     try {
       inB.addData(("a1", "dup text"))
-      awaitRows("dedup_ttl_expire", 1)
-      Thread.sleep(500) // deadline passes; background batches fire the timeout
+      qB.processAllAvailable()
+      Thread.sleep(500) // the deadline passes
+      inB.addData(("z1", "unrelated text"))
+      qB.processAllAvailable() // fires the timeout of "dup text"
       inB.addData(("a2", "dup text"))
-      awaitRows("dedup_ttl_expire", 2)
-      val got = spark.table("dedup_ttl_expire")
+      qB.processAllAvailable()
+      val got = s2.table("dedup_ttl_expire")
         .collect().map(r => r.getString(0) -> (r.getBoolean(2), r.getLong(3))).toMap
       assert(got("a1") == (true, 1L))
       assert(got("a2") == (true, 1L),
@@ -414,18 +408,13 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("semdedup state TTL: in-window dups unchanged; expired cells read fresh") {
-    import spark.implicits._
+    // driven like "dedup state TTL": no-data batches off, and a batch of
+    // another key (a dirty vector, cell -1) fires the expiry
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    import s2.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.Trigger
-    implicit val sqlCtx = spark.sqlContext
-    def awaitRows(table: String, n: Long, timeoutMs: Long = 30000): Unit = {
-      val deadline = System.nanoTime() + timeoutMs * 1000000L
-      while (spark.table(table).count() < n) {
-        if (System.nanoTime() > deadline)
-          fail(s"$table: expected $n rows, have ${spark.table(table).count()}")
-        Thread.sleep(50)
-      }
-    }
+    implicit val sqlCtx = s2.sqlContext
     val cents = Array(Array(1f, 0f, 0f, 0f))
     // (a) TTL large vs the window: the cross-batch dup verdict must be
     // identical to the NoTimeout path
@@ -433,13 +422,13 @@ class StreamingSpec extends AnyFunSuite {
     val qA = StreamingExtract.semDedupVerdicts(inA.toDS(), cents,
         stateTtlMs = 10 * 60 * 1000L)
       .writeStream.format("memory").queryName("semdedup_ttl_window")
-      .outputMode("update").trigger(Trigger.ProcessingTime("50 milliseconds")).start()
+      .outputMode("update").start()
     try {
       inA.addData(("a1", Seq(3f, 4f, 0f, 0f)))
-      awaitRows("semdedup_ttl_window", 1)
+      qA.processAllAvailable()
       inA.addData(("a2", Seq(6f, 8f, 0f, 0f)))
-      awaitRows("semdedup_ttl_window", 2)
-      val got = spark.table("semdedup_ttl_window").collect()
+      qA.processAllAvailable()
+      val got = s2.table("semdedup_ttl_window").collect()
         .map(r => r.getString(0) -> ((r.getBoolean(2), r.getString(3)))).toMap
       assert(got("a1") == ((false, null)) && got("a2") == ((true, "a1")),
         s"in-window verdicts under TTL must equal the NoTimeout path: $got")
@@ -451,14 +440,16 @@ class StreamingSpec extends AnyFunSuite {
     val qB = StreamingExtract.semDedupVerdicts(inB.toDS(), cents,
         stateTtlMs = 1L)
       .writeStream.format("memory").queryName("semdedup_ttl_expire")
-      .outputMode("update").trigger(Trigger.ProcessingTime("50 milliseconds")).start()
+      .outputMode("update").start()
     try {
       inB.addData(("b1", Seq(3f, 4f, 0f, 0f)))
-      awaitRows("semdedup_ttl_expire", 1)
-      Thread.sleep(500)
+      qB.processAllAvailable()
+      Thread.sleep(500) // the deadline passes
+      inB.addData(("x1", Seq(Float.NaN, 0f, 0f, 0f)))
+      qB.processAllAvailable() // fires the timeout of cell 0
       inB.addData(("b2", Seq(3f, 4f, 0f, 0f)))
-      awaitRows("semdedup_ttl_expire", 2)
-      val got = spark.table("semdedup_ttl_expire").collect()
+      qB.processAllAvailable()
+      val got = s2.table("semdedup_ttl_expire").collect()
         .map(r => r.getString(0) -> ((r.getBoolean(2), r.getLong(4)))).toMap
       assert(got("b1") == ((false, 1L)))
       assert(got("b2") == ((false, 1L)),
@@ -518,7 +509,7 @@ class StreamingSpec extends AnyFunSuite {
     // watermark first) → DROPPED: first window counts 3
     val a = StreamingExtract.windowCountsDrain(
       Seq(mk(Seq(0L, 1L, 2L, 140L)), mk(Seq(150L), Seq(100000L)), mk(Seq(5L))),
-      windowSec = 30, watermarkSec = 60, expectedRows = 3)
+      windowSec = 30, watermarkSec = 60)
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     assert(a(base) == 3L, s"late-after-eviction must drop: $a")
     // B: late row in the SAME batch as the watermark jump (window still
@@ -527,7 +518,7 @@ class StreamingSpec extends AnyFunSuite {
     // construction depends on — if this pin moves, move the query.
     val b = StreamingExtract.windowCountsDrain(
       Seq(mk(Seq(0L, 1L, 2L, 140L)), mk(Seq(150L, 5L), Seq(100000L))),
-      windowSec = 30, watermarkSec = 60, expectedRows = 3)
+      windowSec = 30, watermarkSec = 60)
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     assert(b(base) == 4L, s"late-before-eviction merges: $b")
   }
@@ -569,8 +560,7 @@ class StreamingSpec extends AnyFunSuite {
         .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
           r.getLong(3))).toSet
       val streamed = StreamingExtract.sessionCountsDrain(Seq(b1, b2),
-          gapSec = gap.toInt, watermarkSec = 3600,
-          expectedRows = batch.size.toLong)
+          gapSec = gap.toInt, watermarkSec = 3600)
         .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
           r.getLong(3))).toSet
       assert(streamed == batch,
@@ -596,6 +586,27 @@ class StreamingSpec extends AnyFunSuite {
     assert(sec < 60, f"drain took $sec%.1f s")
   }
 
+  test("a TTL drain runs the same rows and jobs as the no-TTL drain") {
+    // no-data batches are off for the verdict drains, so the TTL
+    // operator's request for one after every batch is never granted
+    import spark.implicits._
+    val batches = (0 until 3).map { b =>
+      (0 until 100).map(i => (f"${b * 100 + i}%06d", s"text ${i % 40}")).toDF("doc_id", "text")
+    }
+    def run(ttlMs: Long): (Int, Set[org.apache.spark.sql.Row]) = {
+      var rows = Set.empty[org.apache.spark.sql.Row]
+      val jobs = SparkTestSession.jobsDuring {
+        rows = StreamingExtract.dedupVerdictsDrain(batches, stateTtlMs = ttlMs).collect().toSet
+      }
+      (jobs, rows)
+    }
+    val (plainJobs, plain) = run(0L)
+    val (ttlJobs, ttl) = run(10 * 60 * 1000L)
+    assert(plain.size == 300)
+    assert(ttl == plain, "in-window verdicts under TTL must equal the no-TTL drain")
+    assert(ttlJobs == plainJobs, s"TTL drain $ttlJobs jobs, no-TTL drain $plainJobs")
+  }
+
   test("a failing drain restores the shuffle width and removes its temp dir") {
     import spark.implicits._
     val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
@@ -603,6 +614,7 @@ class StreamingSpec extends AnyFunSuite {
       tmp.listFiles().map(_.getName).filter(_.startsWith("graft-")).toSet
     val before = graftDirs()
     val width = spark.conf.get("spark.sql.shuffle.partitions")
+    val noData = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
     import org.apache.spark.sql.functions.{col, lit, raise_error}
     // an array column cannot be read as the drain's (String, String)
     // input; a row that throws fails the write of its batch file
@@ -612,6 +624,7 @@ class StreamingSpec extends AnyFunSuite {
     Seq(badColumns, badRows).foreach { bad =>
       intercept[Exception](StreamingExtract.dedupVerdictsDrain(Seq(bad)))
       assert(spark.conf.get("spark.sql.shuffle.partitions") == width)
+      assert(spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled") == noData)
       assert(graftDirs() -- before == Set.empty[String])
     }
   }
