@@ -4970,8 +4970,7 @@ object SparkEntry {
       import s.implicits._
       val n = 300
       val input = CorpusGen.inputDs(s, n, parallelism = 8).toDF()
-      val (out, _) = Pipeline.extract(s, input,
-        Pipeline.Config(partitions = 8, giantBuckets = 2))
+      val (out, _) = Pipeline.extract(s, input)
       val expected = CorpusGen.expectedDf(s, n, parallelism = 8).as[DocRow]
       val got = out.withColumnRenamed("spans", "got_spans")
       val cmp = got.join(expected.toDF(), "doc_id")

@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** spark-submit entry (SURVEY §7.1):
   *
   *   spark-submit --class graft.spark.Main app.jar \
-  *     extract <inputPath> <outDir> <metricsDir> [numBatches] [partitions]
+  *     extract <inputPath> <outDir> <metricsDir> [numBatches]
   *   spark-submit --class graft.spark.Main app.jar \
   *     gen <outPath> <numDocs> [parallelism]
   *
@@ -28,10 +28,8 @@ object Main {
     args.toList match {
       case "extract" :: in :: out :: metrics :: rest =>
         val batches = rest.headOption.map(_.toInt).getOrElse(8)
-        val partitions = rest.drop(1).headOption.map(_.toInt)
-          .getOrElse(spark.sparkContext.defaultParallelism * 2)
         Pipeline.runBatched(spark, spark.read.parquet(in), out, metrics,
-          Pipeline.Config(partitions = partitions, numBatches = batches))
+          Pipeline.Config(numBatches = batches))
       case "gen" :: out :: n :: rest =>
         val par = rest.headOption.map(_.toInt)
           .getOrElse(spark.sparkContext.defaultParallelism * 2)

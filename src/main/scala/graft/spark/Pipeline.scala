@@ -16,8 +16,10 @@ import scala.util.control.NonFatal
   * its worker threads (X1-X6 substrate).
   *
   * Scale design (north_rule):
-  *  - explicit salted repartitioning: giant docs get dedicated buckets so
-  *    a 100 MB document never straggles a partition of small docs;
+  *  - parse parallelism is the input's partitioning: the kernel runs in
+  *    the scan task that read each doc (Spark's byte-sized file splits
+  *    balance a kernel whose cost goes with bytes); a caller whose input
+  *    is not split by bytes rebalances it with [[saltedRepartition]];
   *  - per-doc size cap: oversized docs are failed into lineage, not OOM;
   *  - per-partition lineage rows + live counters via accumulators;
   *  - batch loop with atomic per-batch commits: the batch's data, then
@@ -30,11 +32,13 @@ import scala.util.control.NonFatal
   */
 object Pipeline {
 
+  /** `partitions`, `giantBuckets` and `giantThresholdBytes` shape only
+    * [[saltedRepartition]]; no extraction path reads them. */
   final case class Config(
       partitions: Int = 32,
       giantBuckets: Int = 4,
       giantThresholdBytes: Long = 1L << 20,   // 1 MiB of payload = "giant"
-      maxDocBytes: Long = 256L << 20,         // hard cap: fail, don't parse
+      maxDocBytes: Long = 256L << 20,         // hard cap of the typed path: fail, don't parse
       numBatches: Int = 8,
       extract: ExtractConfig = Extractor.Strict)
 
@@ -56,15 +60,16 @@ object Pipeline {
     out
   }
 
-  /** Length-aware salted repartition (SURVEY §4 custom-work table).
-    * Regular docs hash over `partitions` buckets; giant docs go to
-    * `giantBuckets` DEDICATED buckets so a partition never mixes giant
-    * and bulk docs, and at most ~(giants/giantBuckets) giants share a
-    * task. Runs BEFORE the parse so the expensive kernel is balanced,
-    * not the scan. Bucket ids are mapped through `murmurInverse` so the
-    * plain `repartition(n, col)` Tungsten shuffle places each bucket on
-    * its own partition deterministically (naive repartition would
-    * re-hash bucket ids and collide giant buckets into bulk ones). */
+  /** Length-aware salted repartition (SURVEY §4 custom-work table): the
+    * explicit rebalancer a caller applies to an input that is not split
+    * by bytes; no extraction path applies it. Regular docs hash over
+    * `partitions` buckets; giant docs go to `giantBuckets` DEDICATED
+    * buckets so a partition never mixes giant and bulk docs, and at most
+    * ~(giants/giantBuckets) giants share a task. Bucket ids are mapped
+    * through `murmurInverse` so the plain `repartition(n, col)` Tungsten
+    * shuffle places each bucket on its own partition deterministically
+    * (naive repartition would re-hash bucket ids and collide giant
+    * buckets into bulk ones). */
   def saltedRepartition(df: DataFrame, cfg: Config): DataFrame = {
     val n = cfg.partitions + cfg.giantBuckets
     val inv = murmurInverse(n)
@@ -77,11 +82,6 @@ object Pipeline {
     df.withColumn("__graft_pkey", pkey)
       .repartition(n, col("__graft_pkey"))
       .drop("__graft_pkey")
-  }
-
-  def saltedRepartitionTyped(ds: Dataset[DocRow], cfg: Config): Dataset[DocRow] = {
-    import ds.sparkSession.implicits._
-    saltedRepartition(ds.toDF(), cfg).as[DocRow]
   }
 
   /** The distributed kernel: Dataset[DocRow] → Dataset[DocRow] with
@@ -151,26 +151,24 @@ object Pipeline {
     }
   }
 
-  /** Columnar fast path: the whole kernel as one native expression —
-    * scan's UnsafeArrayData flows in, spans ArrayData flows out, no
-    * Dataset object-codec hop on either side (~25% less memory traffic
-    * per row than the typed path). Use when per-partition lineage rows
-    * aren't needed (counters still available via SQL metrics). */
-  def extractColumnar(df: DataFrame, cfg: Config): DataFrame = {
-    saltedRepartition(df, cfg)
-      .withColumn("spans", KernelRegistry.kernel("extract_interleaved_spans", col("spans")))
-  }
+  /** Columnar fast path: the whole kernel as one native expression in
+    * the scan's stage — scan's UnsafeArrayData flows in, spans ArrayData
+    * flows out, no Dataset object-codec hop on either side (~25% less
+    * memory traffic per row than the typed path). Use when per-partition
+    * lineage rows aren't needed (counters still available via SQL
+    * metrics). `cfg` is unused: the expression has no size cap. */
+  def extractColumnar(df: DataFrame, cfg: Config): DataFrame =
+    df.withColumn("spans", KernelRegistry.kernel("extract_interleaved_spans", col("spans")))
 
-  /** One-shot extraction (no batching): salted repartition → kernel.
-    * Returns the output DataFrame; metrics land in the returned
-    * accumulator after an action runs. */
+  /** One-shot extraction (no batching): the typed kernel over the
+    * input's own partitions. Returns the output Dataset; metrics land in
+    * the returned accumulator after an action runs. */
   def extract(spark: SparkSession, input: DataFrame, cfg: Config = Config())
       : (Dataset[DocRow], CollectionAccumulator[MetricsRow]) = {
     import spark.implicits._
     val acc = new CollectionAccumulator[MetricsRow]
     spark.sparkContext.register(acc, "graft.metrics")
-    val salted = saltedRepartition(input, cfg).as[DocRow]
-    (extractDataset(salted, cfg, batchId = 0, acc), acc)
+    (extractDataset(input.as[DocRow], cfg, batchId = 0, acc), acc)
   }
 
   /** Where committed batches live. A batch counts as committed once
@@ -217,7 +215,8 @@ object Pipeline {
     * the input would be bucket-partitioned by the same key so each batch
     * is partition-pruned at the scan (here, on raw parquet, each batch
     * re-scans and filters; documented trade-off of the sandbox sink).
-    * A committed batch is skipped on restart. */
+    * Each batch runs in its scan's stage, one lineage row per input
+    * partition. A committed batch is skipped on restart. */
   def runBatched(spark: SparkSession, input: DataFrame, outDir: String,
                  metricsDir: String, cfg: Config = Config()): Unit =
     runBatched(spark, input, new ParquetDirSink(outDir, metricsDir), cfg)
@@ -230,10 +229,9 @@ object Pipeline {
       pmod(xxhash64(col("doc_id")), lit(cfg.numBatches)).cast("int"))
     (0 until cfg.numBatches).foreach { b =>
       if (!sink.isBatchCommitted(b)) {
-        val batchDf = withBatch.filter(col("__graft_batch") === b).drop("__graft_batch")
-        val salted = saltedRepartitionTyped(batchDf.as[DocRow](
-          org.apache.spark.sql.Encoders.product[DocRow]), cfg)
-        sink.writeBatch(b, extractDataset(salted, cfg, b, acc))
+        val batchDs = withBatch.filter(col("__graft_batch") === b).drop("__graft_batch")
+          .as[DocRow](org.apache.spark.sql.Encoders.product[DocRow])
+        sink.writeBatch(b, extractDataset(batchDs, cfg, b, acc))
         sink.appendMetrics(spark, Lineage.rows(acc))
         acc.reset()
       }

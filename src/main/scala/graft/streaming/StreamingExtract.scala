@@ -143,13 +143,12 @@ object StreamingExtract {
     val writer = stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // same salted repartition + kernel as the batch pipeline; the
-        // micro-batch's lineage file lands next to the output (a replayed
-        // micro-batch replaces its own file)
+        // the batch pipeline's kernel, in the micro-batch scan's own
+        // partitions; the micro-batch's lineage file lands next to the
+        // output (a replayed micro-batch replaces its own file)
         val acc = new org.apache.spark.util.CollectionAccumulator[MetricsRow]
         batch.sparkSession.sparkContext.register(acc, s"graft.stream.$batchId")
-        val salted = Pipeline.saltedRepartition(batch, cfg).as[DocRow]
-        Pipeline.extractDataset(salted, cfg, batchId.toInt, acc)
+        Pipeline.extractDataset(batch.as[DocRow], cfg, batchId.toInt, acc)
           .write.mode("append").parquet(s"$outDir/data")
         Lineage.write(batch.sparkSession, s"$outDir/metrics", batchId, Lineage.rows(acc))
       }

@@ -53,12 +53,14 @@ class LineageSpec extends AnyFunSuite {
   }
 
   test("ParquetDirSink: the data write does not commit; appendMetrics commits with no Spark job") {
+    import spark.implicits._
     val base = emptyDir("sink")
     val sink = new Pipeline.ParquetDirSink(s"$base/out", s"$base/metrics")
     val cfg = Pipeline.Config(partitions = 2, giantBuckets = 1)
     val acc = new CollectionAccumulator[MetricsRow]
     spark.sparkContext.register(acc, "graft.metrics.test")
-    val salted = Pipeline.saltedRepartitionTyped(CorpusGen.inputDs(spark, 40, parallelism = 2), cfg)
+    val salted = Pipeline.saltedRepartition(CorpusGen.inputDs(spark, 40, parallelism = 2).toDF(), cfg)
+      .as[DocRow]
     sink.writeBatch(5, Pipeline.extractDataset(salted, cfg, 5, acc))
     assert(!sink.isBatchCommitted(5), "the data write alone must not commit the batch")
     val rows = Lineage.rows(acc)

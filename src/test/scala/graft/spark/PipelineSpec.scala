@@ -183,7 +183,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // exactly one lineage row set per batch: one row per (batch, partition)
     val m = spark.read.parquet(metricsDir).as[MetricsRow].collect()
     assert(m.groupBy(_.batch_id).map { case (b, rs) => b -> rs.map(_.partition_id).sorted.toSeq } ==
-      (0 until 4).map(_ -> (0 until 5)).toMap)
+      (0 until 4).map(_ -> (0 until input.rdd.getNumPartitions)).toMap)
     assert(m.map(_.docs_in).sum == 200)
   }
 }

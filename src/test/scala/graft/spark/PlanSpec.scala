@@ -371,6 +371,38 @@ class PlanSpec extends AnyFunSuite {
       s"extract_interleaved_spans must run once per doc: $evals evals for $n docs")
   }
 
+  test("every extraction path parses in the scan's stage: no exchange in its plan") {
+    import org.apache.spark.sql.{Dataset, SparkSession}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.Exchange
+    object Aqe extends AdaptiveSparkPlanHelper
+    // walks into the AQE plan, whose exchanges sit below AdaptiveSparkPlanExec
+    def exchanges(ds: Dataset[_]): Seq[String] =
+      Aqe.collect(ds.queryExecution.executedPlan) { case e: Exchange => e.nodeName }
+    val base = "/tmp/graft-test/plan-no-exchange"
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
+    val cfg = Pipeline.Config(partitions = 4, giantBuckets = 2, numBatches = 2)
+    val input = CorpusGen.inputDs(spark, 120, parallelism = 4).toDF()
+    assert(exchanges(Pipeline.saltedRepartition(input, cfg)).nonEmpty,
+      "the probe must see the salted exchange")
+    assert(exchanges(Pipeline.extractColumnar(input, cfg)).isEmpty)
+    assert(exchanges(Pipeline.extract(spark, input, cfg)._1).isEmpty)
+    // runBatched: the Dataset each batch hands its sink
+    val handed = scala.collection.mutable.ArrayBuffer.empty[Dataset[DocRow]]
+    val sink = new Pipeline.BatchSink {
+      private val inner = new Pipeline.ParquetDirSink(s"$base/out", s"$base/metrics")
+      def isBatchCommitted(b: Int): Boolean = inner.isBatchCommitted(b)
+      def writeBatch(b: Int, out: Dataset[DocRow]): Unit = {
+        handed += out
+        inner.writeBatch(b, out)
+      }
+      def appendMetrics(s: SparkSession, rows: Seq[MetricsRow]): Unit = inner.appendMetrics(s, rows)
+    }
+    Pipeline.runBatched(spark, input, sink, cfg)
+    assert(handed.length == 2)
+    handed.foreach(ds => assert(exchanges(ds).isEmpty))
+  }
+
   test("ANN top-k plan has no window rank — bounded aggregate only") {
     // the old row_number().over(Window) shuffled every (query, corpus)
     // score; the bounded aggregator keeps |Q|·k rows on the wire
