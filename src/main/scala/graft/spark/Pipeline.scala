@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.CollectionAccumulator
 import java.nio.file.{Files, Paths}
+import org.apache.commons.io.FileUtils
 import scala.util.control.NonFatal
 
 /** Extraction pipeline over the interleaved-document table.
@@ -22,13 +23,16 @@ import scala.util.control.NonFatal
   *    is not split by bytes rebalances it with [[saltedRepartition]];
   *  - per-doc size cap: oversized docs are failed into lineage, not OOM;
   *  - per-partition lineage rows + live counters via accumulators;
-  *  - batch loop with atomic per-batch commits: the batch's data, then
-  *    its lineage file, then its _SUCCESS marker (the parquet stand-in
-  *    for an Iceberg snapshot commit that carries the lineage in its
-  *    summary; on Iceberg swap the writer, the resume logic reads
-  *    committed batch ids the same way);
-  *  - resume: completed batches are skipped on restart; a batch without
-  *    a marker runs again and replaces its data and its lineage file.
+  *  - batch loop with atomic per-batch commits: the batch's part files,
+  *    each written in place by its task, then its lineage file, then its
+  *    _SUCCESS marker, the one commit (the parquet stand-in for an
+  *    Iceberg snapshot commit that carries the lineage in its summary:
+  *    data files written in place, made visible by a metadata commit; on
+  *    Iceberg swap the writer, the resume logic reads committed batch ids
+  *    the same way);
+  *  - resume: completed batches are skipped on restart, and readers see
+  *    only them; a batch without a marker runs again and replaces its
+  *    data and its lineage file.
   */
 object Pipeline {
 
@@ -172,42 +176,65 @@ object Pipeline {
   }
 
   /** Where committed batches live. A batch counts as committed once
-    * appendMetrics returns. The parquet implementation commits a batch
-    * via its _SUCCESS marker; an Iceberg implementation
-    * maps writeBatch → a snapshot-producing append tagged with the batch
-    * id in the snapshot summary, and isBatchCommitted → a summary lookup
-    * — the resume loop is identical (SURVEY §4 checkpoint/resume row). */
+    * appendMetrics returns. The parquet implementation writes a batch's
+    * data files in place and commits them with its _SUCCESS marker, as
+    * Iceberg writes data files and commits them with a snapshot; an
+    * Iceberg implementation maps writeBatch → writing the data files,
+    * appendMetrics → the snapshot-producing append tagged with the batch
+    * id in its summary, and isBatchCommitted → a summary lookup — the
+    * resume loop is identical (SURVEY §4 checkpoint/resume row). */
   trait BatchSink {
     def isBatchCommitted(batchId: Int): Boolean
     def writeBatch(batchId: Int, out: Dataset[DocRow]): Unit
     def appendMetrics(spark: SparkSession, rows: Seq[MetricsRow]): Unit
   }
 
-  /** Batch `b`'s data goes to `outDir/batch=b` with Spark's own _SUCCESS
-    * marker switched off. appendMetrics commits the batch writeBatch last
-    * wrote: it writes the batch's lineage file from the driver
-    * (Lineage.write, no Spark job), and only then the batch's _SUCCESS
-    * marker. A crash before the marker leaves the batch uncommitted, so a
-    * resume runs it again; its lineage file is replaced, not duplicated. */
+  /** Batch `b`'s data goes to `outDir/batch=b`, on the local file
+    * system (an `outDir` or `metricsDir` with another URI scheme is
+    * rejected here). Its `_SUCCESS` marker is the only commit:
+    *  - writeBatch clears the batch dir, then runs one Spark job in which
+    *    each task writes its partition as one parquet file
+    *    ([[LocalParquet.writeParts]]): under a hidden per-attempt name,
+    *    renamed into place as `part-<pid>.parquet`, so the last successful
+    *    attempt wins. No Hadoop committer, `_temporary` dir or marker;
+    *  - appendMetrics commits the batch writeBatch last wrote: it writes
+    *    the batch's lineage file from the driver (Lineage.write, no Spark
+    *    job), and only then the marker.
+    * A crash before the marker leaves the batch uncommitted: readOutput
+    * skips it, and a resume runs it again, replacing its part files and
+    * its lineage file. */
   final class ParquetDirSink(outDir: String, metricsDir: String) extends BatchSink {
+    private val outPath = localPath(outDir)
+    private val metricsPath = localPath(metricsDir)
     private var written = -1
-    private def marker(b: Int) = Paths.get(s"$outDir/batch=$b/_SUCCESS")
-    def isBatchCommitted(b: Int): Boolean = Files.exists(marker(b))
+    def isBatchCommitted(b: Int): Boolean = Files.exists(marker(outPath, b))
     def writeBatch(b: Int, out: Dataset[DocRow]): Unit = {
       written = -1
-      out.write.mode("overwrite")
-        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-        .parquet(s"$outDir/batch=$b")
+      val dir = Paths.get(s"$outPath/batch=$b")
+      Files.deleteIfExists(marker(outPath, b))
+      FileUtils.deleteDirectory(dir.toFile)
+      Files.createDirectories(dir)
+      LocalParquet.writeParts(out.toDF(), dir.toString)
       written = b
     }
     def appendMetrics(spark: SparkSession, rows: Seq[MetricsRow]): Unit = {
       val b = written
       require(b >= 0, "appendMetrics commits the batch writeBatch wrote; none is pending")
       require(rows.forall(_.batch_id == b), s"lineage rows of another batch than $b")
-      Lineage.write(spark, metricsDir, b, rows)
-      Files.write(marker(b), Array.emptyByteArray)
+      Lineage.write(spark, metricsPath, b, rows)
+      Files.write(marker(outPath, b), Array.emptyByteArray)
       written = -1
     }
+  }
+
+  private def marker(out: String, b: Int) = Paths.get(s"$out/batch=$b/_SUCCESS")
+
+  /** The local path of `dir`, a plain path or a `file:` URI. */
+  private def localPath(dir: String): String = {
+    val uri = new org.apache.hadoop.fs.Path(dir).toUri
+    require(uri.getScheme == null || uri.getScheme == "file",
+      s"ParquetDirSink writes the local file system only, not $dir")
+    uri.getPath
   }
 
   /** Batched, checkpoint-resumable run (north_rule). Batch membership is
@@ -238,7 +265,14 @@ object Pipeline {
     }
   }
 
-  /** Read back the committed output (all batches). */
-  def readOutput(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.parquet(s"$outDir/batch=*")
+  /** Read back the committed output: exactly the batch dirs of `outDir`
+    * that hold a `_SUCCESS` marker, in batch order. */
+  def readOutput(spark: SparkSession, outDir: String): DataFrame = {
+    val out = localPath(outDir)
+    val committed = Option(new java.io.File(out).list()).toSeq.flatten
+      .collect { case s"batch=$b" if b.toIntOption.isDefined => b.toInt }
+      .filter(b => Files.exists(marker(out, b))).sorted
+    require(committed.nonEmpty, s"no committed batch in $outDir")
+    spark.read.parquet(committed.map(b => s"$out/batch=$b"): _*)
+  }
 }

@@ -57,6 +57,21 @@ object GraftSql {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rows, schema)
 
+  /** Runs `f`, whose jobs run a plan's RDD outside a SQL execution, with
+    * `spark`'s SQL conf visible in their tasks, as in Spark's own actions. */
+  def withConfPropagated[T](spark: SparkSession)(f: => T): T =
+    org.apache.spark.sql.execution.SQLExecution.withSQLConfPropagated(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession])(f)
+
+  /** Adds one file's rows and bytes to the running task's output metrics
+    * (their setters are private to Spark), where Spark's file writer puts
+    * its own. */
+  def recordOutput(rows: Long, bytes: Long): Unit = {
+    val m = org.apache.spark.TaskContext.get().taskMetrics().outputMetrics
+    m.setRecordsWritten(m.recordsWritten + rows)
+    m.setBytesWritten(m.bytesWritten + bytes)
+  }
+
   /** Register [[entries]] in `spark`'s function registry, for SQL
     * text. Re-registers (and logs a replacement warning per function)
     * when called again on the same session. */

@@ -70,6 +70,44 @@ class LineageSpec extends AnyFunSuite {
     assert(rows.map(_.docs_in).sum == 40)
   }
 
+  test("ParquetDirSink: a batch write is one Spark job; write and commit start no OS process") {
+    import spark.implicits._
+    val base = emptyDir("no-fork")
+    val sink = new Pipeline.ParquetDirSink(s"$base/out", s"$base/metrics")
+    val acc = new CollectionAccumulator[MetricsRow]
+    spark.sparkContext.register(acc, "graft.metrics.test")
+    val input = CorpusGen.inputDs(spark, 40, parallelism = 4)
+    val cfg = Pipeline.Config()
+    assert(SparkTestSession.jobsDuring(sink.writeBatch(0, Pipeline.extractDataset(input, cfg, 0, acc))) == 1)
+    acc.reset()
+    val forks = SparkTestSession.processStartsDuring {
+      sink.writeBatch(1, Pipeline.extractDataset(input, cfg, 1, acc))
+      sink.appendMetrics(spark, Lineage.rows(acc))
+    }
+    assert(forks == 0)
+    assert(sink.isBatchCommitted(1))
+    val files = new java.io.File(s"$base/out/batch=1").list().toSeq.sorted
+    assert(files == "_SUCCESS" +: (0 until 4).map(LocalParquet.partName))
+    assert(spark.read.parquet(s"$base/out/batch=1").as[DocRow].count() == 40)
+  }
+
+  test("a part file written by attempt 0 and again by attempt 1 leaves one visible file, the last") {
+    val dir = java.nio.file.Files.createDirectories(java.nio.file.Paths.get(emptyDir("attempts")))
+    val enc = org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[MetricsRow]()
+    val settings = LocalParquet.settings(spark, enc.schema)
+    val rows = Seq(row(0, 0, 1), row(0, 1, 2)).map(enc.createSerializer()(_).copy())
+    LocalParquet.write(settings, dir, LocalParquet.partName(3), 0, rows.iterator.take(1))
+    LocalParquet.write(settings, dir, LocalParquet.partName(3), 1, rows.iterator.drop(1))
+    assert(dir.toFile.list().toSeq == Seq(LocalParquet.partName(3)))
+    assert(read(dir.toString) == Seq(row(0, 1, 2)))
+  }
+
+  test("ParquetDirSink rejects an outDir or metricsDir on another file system") {
+    intercept[IllegalArgumentException](new Pipeline.ParquetDirSink("hdfs://nn:8020/out", "/tmp/m"))
+    intercept[IllegalArgumentException](new Pipeline.ParquetDirSink("/tmp/o", "s3a://bucket/metrics"))
+    new Pipeline.ParquetDirSink("file:///tmp/o", "/tmp/m")
+  }
+
   test("per-doc guard: a RuntimeException fails the doc into docs_failed, an OutOfMemoryError propagates") {
     val docs = (0 until 3).map(i => DocRow(s"d$i", Seq(SpanRow("text", s"t$i", "", 0))))
     val lineage = ArrayBuffer.empty[MetricsRow]

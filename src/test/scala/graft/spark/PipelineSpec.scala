@@ -22,6 +22,24 @@ object SparkTestSession {
 
   /** Spark jobs started by `f` (see `JobCensus.during`). */
   def jobsDuring(f: => Unit): Int = JobCensus.during(spark.sparkContext)(f).jobs
+
+  /** OS processes this JVM started while `f` ran, counted as JFR
+    * `jdk.ProcessStart` events. */
+  def processStartsDuring(f: => Unit): Int = {
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    try f finally rec.stop()
+    val file = java.nio.file.Files.createTempFile("graft-process-starts", ".jfr")
+    try {
+      rec.dump(file)
+      scala.jdk.CollectionConverters.ListHasAsScala(jdk.jfr.consumer.RecordingFile.readAllEvents(file))
+        .asScala.count(_.getEventType.getName == "jdk.ProcessStart")
+    } finally {
+      rec.close()
+      java.nio.file.Files.delete(file)
+    }
+  }
 }
 
 /** Pipeline E2E (FIXTURES.md §6 t1/t2): constructive expected spans vs
@@ -37,7 +55,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val input = CorpusGen.inputDs(spark, n, parallelism = 4)
     val expected = CorpusGen.expectedDf(spark, n, parallelism = 4).as[DocRow]
     val (out, _) = Pipeline.extract(spark, input.toDF(),
-      Pipeline.Config(partitions = 4, giantBuckets = 2, numBatches = 2))
+      Pipeline.Config(numBatches = 2))
     val got = out.collect().map(d => d.doc_id -> d.spans).toMap
     val exp = expected.collect().map(d => d.doc_id -> d.spans).toMap
     assert(got.keySet == exp.keySet)
@@ -77,8 +95,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     val n = 300
     val input = CorpusGen.inputDs(spark, n, parallelism = 4)
-    val (out, acc) = Pipeline.extract(spark, input.toDF(),
-      Pipeline.Config(partitions = 4, giantBuckets = 2))
+    val (out, acc) = Pipeline.extract(spark, input.toDF())
     out.write.mode("overwrite").parquet("/tmp/graft-test/metrics-out")
     val rows = scala.jdk.CollectionConverters.ListHasAsScala(acc.value).asScala
     assert(rows.map(_.docs_in).sum == n)
@@ -113,7 +130,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val outDir = s"$base/out"
     val metricsDir = s"$base/metrics"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
-    val cfg = Pipeline.Config(partitions = 4, giantBuckets = 1, numBatches = 4)
+    val cfg = Pipeline.Config(numBatches = 4)
     val input = CorpusGen.inputDs(spark, 200, parallelism = 4).toDF()
     Pipeline.runBatched(spark, input, outDir, metricsDir, cfg)
     val full = Pipeline.readOutput(spark, outDir).as[DocRow].collect()
@@ -136,7 +153,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     val base = "/tmp/graft-test/empty-batch"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
-    val cfg = Pipeline.Config(partitions = 2, giantBuckets = 1, numBatches = 8)
+    val cfg = Pipeline.Config(numBatches = 8)
     val input = CorpusGen.inputDs(spark, 3, parallelism = 1).toDF()
     Pipeline.runBatched(spark, input, s"$base/out", s"$base/metrics", cfg)
     val sink = new Pipeline.ParquetDirSink(s"$base/out", s"$base/metrics")
@@ -150,7 +167,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val outDir = s"$base/out"
     val metricsDir = s"$base/metrics"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
-    val cfg = Pipeline.Config(partitions = 4, giantBuckets = 1, numBatches = 4)
+    val cfg = Pipeline.Config(numBatches = 4)
     val input = CorpusGen.inputDs(spark, 200, parallelism = 4).toDF()
     val written = scala.collection.mutable.ArrayBuffer.empty[Int]
     var crashes = 1
@@ -185,6 +202,56 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(m.groupBy(_.batch_id).map { case (b, rs) => b -> rs.map(_.partition_id).sorted.toSeq } ==
       (0 until 4).map(_ -> (0 until input.rdd.getNumPartitions)).toMap)
     assert(m.map(_.docs_in).sum == 200)
+  }
+  test("readOutput reads only committed batches: a crash after a batch's data write hides it until a resume") {
+    import spark.implicits._
+    val base = "/tmp/graft-test/uncommitted"
+    val outDir = s"$base/out"
+    val metricsDir = s"$base/metrics"
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
+    val cfg = Pipeline.Config(numBatches = 4)
+    val input = CorpusGen.inputDs(spark, 200, parallelism = 4).toDF()
+    var crashes = 1
+    // ParquetDirSink, except that batch 2's first commit dies after its
+    // part files are written, before its lineage file and marker
+    val sink = new Pipeline.BatchSink {
+      private val inner = new Pipeline.ParquetDirSink(outDir, metricsDir)
+      private var batch = -1
+      def isBatchCommitted(b: Int): Boolean = inner.isBatchCommitted(b)
+      def writeBatch(b: Int, out: Dataset[DocRow]): Unit = { batch = b; inner.writeBatch(b, out) }
+      def appendMetrics(s: SparkSession, rows: Seq[MetricsRow]): Unit =
+        if (batch == 2 && crashes > 0) {
+          crashes -= 1
+          throw new IllegalStateException("planted crash after the data write")
+        } else inner.appendMetrics(s, rows)
+    }
+    intercept[IllegalStateException](Pipeline.runBatched(spark, input, sink, cfg))
+    val uncommitted = spark.read.parquet(s"$outDir/batch=2").as[DocRow].collect().map(_.doc_id).toSet
+    assert(uncommitted.nonEmpty, "batch 2's part files are complete on disk")
+    val visible = Pipeline.readOutput(spark, outDir)
+    assert(visible.schema == spark.read.parquet(s"$outDir/batch=0").schema)
+    val ids = visible.as[DocRow].collect().map(_.doc_id)
+    assert(ids.nonEmpty && ids.toSet.intersect(uncommitted).isEmpty)
+    Pipeline.runBatched(spark, input, sink, cfg)
+    val all = Pipeline.readOutput(spark, outDir).as[DocRow].collect().map(_.doc_id)
+    assert(all.length == 200 && all.distinct.length == 200 && uncommitted.subsetOf(all.toSet))
+  }
+
+  test("batched run: an empty batch reads back with the batch schema") {
+    val base = "/tmp/graft-test/empty-schema"
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
+    val input = CorpusGen.inputDs(spark, 3, parallelism = 1).toDF()
+    Pipeline.runBatched(spark, input, s"$base/out", s"$base/metrics", Pipeline.Config(numBatches = 8))
+    val batches = (0 until 8).map(b => spark.read.parquet(s"$base/out/batch=$b"))
+    assert(batches.map(_.count()).sum == 3)
+    assert(batches.exists(_.count() == 0), "3 docs in 8 batches leave one empty")
+    assert(batches.map(_.schema).distinct.size == 1)
+    assert(Pipeline.readOutput(spark, s"$base/out").count() == 3)
+    // an input with no partition at all still leaves one part file per batch
+    val none = spark.emptyDataset[DocRow](org.apache.spark.sql.Encoders.product[DocRow]).toDF()
+    Pipeline.runBatched(spark, none, s"$base/none", s"$base/none-metrics", Pipeline.Config(numBatches = 2))
+    val empty = Pipeline.readOutput(spark, s"$base/none")
+    assert(empty.count() == 0 && empty.schema == batches.head.schema)
   }
 }
 
@@ -261,8 +328,7 @@ class GiantDocSpec extends org.scalatest.funsuite.AnyFunSuite {
 
   test("docs over maxDocBytes are failed into lineage, not parsed") {
     import spark.implicits._
-    val cfg = Pipeline.Config(partitions = 2, giantBuckets = 1,
-      maxDocBytes = 10000) // generator giants (~20 KB) exceed this
+    val cfg = Pipeline.Config(maxDocBytes = 10000) // generator giants (~20 KB) exceed this
     val input = CorpusGen.inputDs(spark, 300, giantEvery = 50, parallelism = 2).toDF()
     val (out, acc) = Pipeline.extract(spark, input, cfg)
     val rows = out.collect()
@@ -286,7 +352,7 @@ class ColumnarKernelSpec extends org.scalatest.funsuite.AnyFunSuite {
 
   test("extractColumnar == typed extract, span for span") {
     import spark.implicits._
-    val cfg = Pipeline.Config(partitions = 4, giantBuckets = 1)
+    val cfg = Pipeline.Config()
     val input = CorpusGen.inputDs(spark, 250, parallelism = 4).toDF()
     val (typed, _) = Pipeline.extract(spark, input, cfg)
     val columnar = Pipeline.extractColumnar(input, cfg).as[DocRow]
@@ -314,8 +380,7 @@ class T2CorrectnessSpec extends org.scalatest.funsuite.AnyFunSuite {
     val media = CorpusGen.mediaTable(input)
     val nRefs = media.count()
     assert(nRefs > 50, s"corpus must plant a rich media set, got $nRefs")
-    val (out, _) = Pipeline.extract(spark, input.toDF(),
-      Pipeline.Config(partitions = 4, giantBuckets = 2))
+    val (out, _) = Pipeline.extract(spark, input.toDF())
     val refs = out.toDF()
       .select(explode(col("spans")).as("s"))
       .filter(col("s.kind") === "media")
@@ -339,8 +404,7 @@ class T2CorrectnessSpec extends org.scalatest.funsuite.AnyFunSuite {
     val n = 5000
     val input = CorpusGen.inputDs(spark, n, parallelism = 8).toDF()
     val expected = CorpusGen.expectedDf(spark, n, parallelism = 8).as[DocRow]
-    val out = Pipeline.extractColumnar(input,
-      Pipeline.Config(partitions = 8, giantBuckets = 2)).as[DocRow]
+    val out = Pipeline.extractColumnar(input, Pipeline.Config()).as[DocRow]
     val joined = out.withColumnRenamed("spans", "got").join(expected.toDF(), "doc_id")
     val bad = joined.filter(!col("doc_id").startsWith("garbage-") &&
       !(col("got") === col("spans")))

@@ -43,8 +43,7 @@ class SessionFreeKernelSpec extends AnyFunSuite {
           .select(col("host"), UrlOps.registrableDomainPsl(col("host")).as("d"))
       },
       job("Pipeline.extractColumnar") { s =>
-        Pipeline.extractColumnar(CorpusGen.inputDs(s, 60, parallelism = 2).toDF(),
-          Pipeline.Config(partitions = 2, giantBuckets = 1))
+        Pipeline.extractColumnar(CorpusGen.inputDs(s, 60, parallelism = 2).toDF(), Pipeline.Config())
       },
       job("Dedup.simhashCandidates") { s =>
         import s.implicits._

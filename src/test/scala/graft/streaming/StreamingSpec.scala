@@ -11,7 +11,7 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     val base = "/tmp/graft-test/streaming"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
-    val cfg = Pipeline.Config(partitions = 4, giantBuckets = 1)
+    val cfg = Pipeline.Config()
 
     // first landing of files
     CorpusGen.inputDs(spark, 120, parallelism = 4)
